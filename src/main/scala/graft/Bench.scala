@@ -58,17 +58,6 @@ object Bench {
       "the 8c/32c scaling ratio reflects engine parallelism (every other " +
       "entry is fixed-overhead-bound at this SF). Recomputed from parquet " +
       "every pass like all entries; never in matched22"),
-    "r10_new_queries" -> ("t15_top_supplier, p37_semantic_dedup, and " +
-      "p38_tfidf_topterms are benched from r10 on -- headline totals are " +
-      "not comparable across rounds; matched22_sec is the drift metric"),
-    "r11_new_queries" -> ("f31_spatial_join (bin-bucketed point-in-polygon " +
-      "join, 1.5M points x 25 polygons at sf0.1) and e08_stream_stream_join " +
-      "(click-attribution event-time range self-join) benched from r11 on"),
-    "r12_host_variance" -> ("six same-code full passes during r12 measured " +
-      "matched22_vs_r1 oscillating 0.84-0.99 (no monotonic trend, idle " +
-      "host, /tmp cleaned) -- single-run matched-22 readings carry ~15% " +
-      "host-duty-cycle noise on this box; compare rounds by the BAND, " +
-      "not the point value"),
     "r17_queries_norm" -> ("queries_norm is an ARRAY in the same order " +
       "as the queries object's keys: each query's seconds restated at " +
       "pinned idle-host speed, sec * calib_nominal / calib_interp, " +
@@ -83,32 +72,6 @@ object Bench {
       "speed -- compare rounds (r16 on) by matched22_norm_vs_r1, which " +
       "self-corrects the host-duty-cycle drift that needed by-hand " +
       "re-measurement in r13/r14/r15"),
-    "r15_writepath_validity" -> ("the r13->r14 upticks on " +
-      "p37_semantic_dedup (1.402->1.653), snapshot_versioned_roundtrip " +
-      "(2.218->2.632) and dml_pruned_roundtrip (2.006->2.298) are host " +
-      "drift, not regressions: bisected in r15 by benching the SAME three " +
-      "queries on the r13 CODE (commit 57d6409) on today's host -- r13 " +
-      "code measured 2.025 / 2.908 / 2.701 vs HEAD's 1.824 / 2.736 / " +
-      "2.424 (min of three 3-pass sessions each), i.e. HEAD is ~7-10% " +
-      "FASTER than r13 code under identical conditions; the elevation " +
-      "vs the recorded r13 minima lives entirely in the environment"),
-    "r14_q01_validity" -> ("r13's q01_tpch_q1 uptick (1.191 -> 1.466) " +
-      "was host jitter, not a regression: re-measured 3x in r14 on " +
-      "unchanged q01 code/plan, minima 1.231 / 1.312 / 1.414 -- the best " +
-      "run is back within 3.4% of the r12 level, inside this host's " +
-      "documented ~15% duty-cycle band"),
-    "r12_bench_validity" -> ("the r11 upticks on q22_count_distinct " +
-      "(0.836->1.102) and e03_session_window (1.082->1.407) were host " +
-      "jitter, not regressions: re-measured 3x in r12, minimums 0.811 and " +
-      "0.984 are at/below the r10 level while the within-session spread " +
-      "(q22 0.81-1.51) matches this host's documented phantom swings; no " +
-      "code changed on either path"),
-    "r8_bench_validity" -> ("r8 numbers for e01/e03/e04/e07, q28, and " +
-      "t07/t13/t21 are invalid: a testdata regeneration between r7 and r8 " +
-      "changed events.ts from TIMESTAMP(NANOS) to TIMESTAMP_NTZ, those " +
-      "queries failed instantly in the r8 bench (fixed in r9 by " +
-      "type-adaptive ts normalization), so r8's headline total is " +
-      "artificially low -- compare r9 to r7, not r8"),
     "p11_ann_lsh" -> ("multi-probe LSH since r3 (probeFlips=1, 13 probe " +
       "buckets/query for ~6x recall) -- r2 and earlier benched single-probe"),
     "p37_semantic_dedup" -> ("r10 on includes the cluster-size degeneracy " +
@@ -180,7 +143,7 @@ object Bench {
     * inputs on every invocation like everything else; NOT in matched22 (new
     * entries never are), so cross-round totals stay comparable.
     */
-  private def scaleProbeAggX8(spark: SparkSession, sfDir: String): Double = {
+  private def scaleProbeAggX64(spark: SparkSession, sfDir: String): Double = {
     import org.apache.spark.sql.functions._
     import graft.queries.Exact._
     // The ×N multiply rides its input's partitioning (crossJoin preserves
@@ -523,7 +486,7 @@ object Bench {
 
     // scaling-leg warmup (compiles its plan; same contract as the others)
     if (doScale)
-      try scaleProbeAggX8(spark, sfDir)
+      try scaleProbeAggX64(spark, sfDir)
       catch { case e: Throwable =>
         System.err.println(s"[bench] scale probe warmup FAILED: ${e.getMessage}") }
 
@@ -595,7 +558,7 @@ object Bench {
         cleanStorage(gc = false)
         name -> sec
       } ++ (if (!doScale) Seq.empty else Seq("scale_probe_agg_x64" -> {
-        try { cleanStorage(gc = false); scaleProbeAggX8(spark, sfDir) }
+        try { cleanStorage(gc = false); scaleProbeAggX64(spark, sfDir) }
         catch { case e: Throwable =>
           System.err.println(s"[bench] scale_probe_agg_x64 FAILED: ${e.getMessage}"); -1.0 }
       })) ++ (if (!doDml) Seq.empty else Seq("dml_pruned_roundtrip" -> {

@@ -116,7 +116,7 @@ object Engine {
       spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     graft.functions.HiveFunctions.registerAll(spark)
     graft.functions.GeoFunctions.registerAll(spark)
-    graft.plans.MaterializedViews.install(spark)
+    graft.plans.FrontDoor.optimizerRules.foreach(_._2(spark))
     graft.plans.SnapshotSql.register(spark)
     graft.plans.NamedTables.bootstrap(spark)
     graft.plans.Authz.bootstrap(spark)
@@ -142,7 +142,7 @@ object Engine {
   // Memoized UNEXECUTED table frames per (session, path): `spark.read
   // .parquet` re-lists the files and re-reads parquet footers for schema
   // inference on EVERY call — measured ~90–115 ms of driver-side work per
-  // call at bench scale (r18 ProfileQuery/SplitProbe: q04 built its frame in
+  // call at bench scale (r18 split-probe measurement: q04 built its frame in
   // 478 ms, six table reads), the per-query fixed overhead the r17 verdict
   // flagged on 33/37 bench entries. The temp-view path (Engine.register)
   // already amortizes exactly this metadata; this gives the DataFrame path
@@ -218,156 +218,69 @@ object Engine {
   }
 
   /** The SQL front door (SURVEY §7): `spark.sql` after the engine's
-    * registrations — functions, MV rewrite, and the data-dir tables are all
-    * in place, so HiveQL-shaped statements run unchanged — plus the two
-    * statement families plain Spark can't execute:
+    * registrations, run as a fold over the one stage registry,
+    * [[graft.plans.FrontDoor]] (the `spark.sql.extensions` entry reads the
+    * same registry). Stages, in order:
     *
-    *   - DML statements (UPDATE / DELETE / MERGE / INSERT) against
-    *     engine-managed tables dispatch to the COW / snapshot planners
-    *     ([[graft.plans.SqlDml]]);
-    *   - names registered in [[graft.plans.NamedTables]] resolve to fresh
-    *     snapshot reads pre-analysis (extensions-bootstrapped sessions get
-    *     the same via an injected analyzer rule);
-    *   - table-maintenance verbs (RESTORE TABLE / OPTIMIZE / VACUUM) that
-    *     are parse errors to Spark dispatch to the snapshot lifecycle API
-    *     ([[graft.plans.SqlMaintenance]]);
-    *   - Hive's NULL-as-largest default sort placement is made explicit
-    *     in the statement text pre-parse ([[graft.plans.DefaultNullOrder]]);
-    *   - quantified comparisons (`ANY`/`SOME`/`ALL` subqueries) and
-    *     DISTINCT window aggregates — Hive surface Spark lacks — lower
-    *     to exact compositions ([[graft.plans.QuantifiedSubqueries]],
-    *     [[graft.plans.DistinctWindows]]).
+    *   - `preParse` — Authz.guardSetStatement (the security context is
+    *     not settable by non-admins), HiveConfs (`SET hive.<key>` flips
+    *     its Spark twin), Authz.setRole, PartitionDdl (filter-form DROP
+    *     PARTITION);
+    *   - `textRewrites` — DefaultNullOrder (Hive's NULL-as-largest sort),
+    *     VarcharCasts (truncating VARCHAR casts), EmptyGroupBy, StoredAs,
+    *     TempTables: spellings the parse would lose;
+    *   - `onParseFailure` — verbs Spark cannot parse: SqlMaintenance
+    *     (RESTORE/OPTIMIZE/VACUUM), Authz verbs, Workload, Macros,
+    *     ScheduledQueries, Hplsql scripts, and the re-entering rewrites
+    *     CastFormat, QuantifiedSubqueries, UniqueJoin, BucketSample,
+    *     CommaLimit, TypeSpellings (plus SchemaEvolution verbs);
+    *   - `preAnalysis` — CteForwardRefs, TypeLimits, the Authz guard and
+    *     privilege check, SchemaEvolution and SqlDml (engine-managed DML
+    *     executes here), Authz.applyPolicies (row filters, column masks),
+    *     NamedTables, CtePartialAliases, ViewColumnNames,
+    *     LenientInsertCasts, GroupingSetsDedup, EmptyGroupingSets,
+    *     ProjectedInSubqueries, HiveRegex, DistinctWindows,
+    *     OrderlessWindows, VirtualColumns, CharStrippedFunctions;
+    *   - `negotiation` + `semantics` — CommonCategories, then the
+    *     expression semantics (decimal and timestamp casts, timestamp
+    *     comparisons, cast rendering, boolean comparisons, ROLLUP over
+    *     empty input, non-boolean WHERE) in ONE analyzer pass
+    *     ([[graft.plans.HiveSemantics]]);
+    *   - `execution` — CteMaterialize, LAST: it executes CTE definitions;
+    *   - `resultsCache` — opt-in `spark.graft.resultsCache.dir`.
     *
-    * Front-door cost (re-measured r17 after fusing the post-analysis
-    * semantic rewrites into ONE analyzer pass —
-    * [[graft.plans.HiveSemantics]]; FrontDoorCostSpec is the
-    * measurement harness): ~1.0 ms driver-side per statement over
-    * Spark's own ~5.7 ms analyze cost (r16: ~5 ms — the fusion plus
-    * the gates pay off). The remaining overhead is the text scans,
-    * the gated plan walks, and the deliberate double parse when
-    * nothing rewrites. Statements with real plans are
-    * noise-dominated; new post-analysis semantics must join
-    * HiveSemantics rather than adding analyzer passes.
+    * FrontDoorCostSpec measures the per-statement overhead over Spark's
+    * own analyze cost; statements whose stages change nothing re-run the
+    * original text through `spark.sql`.
     */
   def sql(spark: SparkSession, sfDir: String, query: String): DataFrame = {
+    import graft.plans.FrontDoor
     register(spark, sfDir)
-    // the security context itself is not settable through the SQL front
-    // door by non-admins (the reference's restricted-conf list)
-    graft.plans.Authz.guardSetStatement(spark, query)
-    // `SET hive.<key>=<v>` spellings with a live Spark equivalent flip
-    // the matching Spark conf too (e.g. quoted.identifiers=none →
-    // quotedRegexColumnNames); the SET statement itself still runs
-    graft.plans.HiveConfs.maybeMap(spark, query)
-    // SET ROLE is the one verb that must intercept pre-parse (Spark 4's
-    // parser rejects `SET ROLE x` outright). It intercepts whenever ANY
-    // authz state exists — not only under enforcement — so a bootstrap
-    // script's `SET ROLE NONE/ALL` issued before flipping enforcement on
-    // updates the active-role selection instead of silently no-opping; a
-    // session that never touched authz still gets Spark's canonical error.
-    if (graft.plans.Authz.enabled(spark) || graft.plans.Authz.hasState) {
-      graft.plans.Authz.maybeSetRole(spark, query) match {
-        case Some(df) => return df
-        case None => ()
+    val reenter: FrontDoor.Reenter = (s, q) => sql(s, sfDir, q)
+    def first(stages: Seq[FrontDoor.TextStage], q: String) =
+      stages.iterator.flatMap(_.run(spark, q, reenter)).nextOption()
+    FrontDoor.inFrontDoor {
+      first(FrontDoor.preParse, query).getOrElse {
+        val query0 =
+          FrontDoor.textRewrites.foldLeft(query)((q, st) => st.run(spark, q))
+        val parsed =
+          try Some(spark.sessionState.sqlParser.parsePlan(query0))
+          catch { case scala.util.control.NonFatal(_) => None }
+        parsed match {
+          case None => first(FrontDoor.onParseFailure, query)
+            .getOrElse(spark.sql(query)) // surface the canonical parse error
+          case Some(plan) =>
+            FrontDoor.fold(FrontDoor.preAnalysis, spark, query0, plan)
+              .flatMap(p => FrontDoor.fold(FrontDoor.execution, spark, query0,
+                graft.plans.HiveSemantics(spark, p)))
+              .fold(identity, { done =>
+                val df =
+                  if (done eq plan) spark.sql(query0)
+                  else org.apache.spark.sql.GraftShims.ofRows(spark, done)
+                FrontDoor.resultsCache.run(spark, df)
+              })
+        }
       }
-    }
-    // filter-form / partial-spec DROP PARTITION intercepts pre-parse:
-    // the comparator spelling is a parse error to Spark and the partial
-    // equality spelling hits v1's full-spec requirement; full-equality
-    // statements fall through untouched (PartitionDdl gates authz itself)
-    graft.plans.PartitionDdl.maybeSql(spark, query) match {
-      case Some(df) => return df
-      case None => ()
-    }
-    // Hive sorts NULL as the LARGEST value by default (ASC → NULLS LAST,
-    // DESC → NULLS FIRST); Spark's parser defaults the opposite and the
-    // spelling is lost after the parse — make it explicit in the text.
-    // Likewise CAST(x AS VARCHAR(n)) truncates in Hive; Spark's parser
-    // discards the length, so that too is a text rewrite.
-    val query0 = graft.plans.TempTables(spark,
-      graft.plans.StoredAs(spark,
-        graft.plans.EmptyGroupBy(spark,
-          graft.plans.VarcharCasts(spark,
-            graft.plans.DefaultNullOrder(spark, query)))))
-    val parsed =
-      try Some(spark.sessionState.sqlParser.parsePlan(query0))
-      catch { case scala.util.control.NonFatal(_) => None }
-    parsed match {
-      case None =>
-        // maintenance + authz verbs (RESTORE/OPTIMIZE/VACUUM, GRANT/REVOKE/
-        // policies) are parse errors to Spark — they can only ever arrive
-        // here, so nothing is shadowed
-        graft.plans.SqlMaintenance.maybeRun(spark, query)
-          .orElse(graft.plans.Authz.maybeSql(spark, query))
-          .orElse(graft.plans.Workload.maybeSql(spark, query))
-          .orElse(graft.plans.Macros.maybeSql(spark, query))
-          .orElse(graft.plans.ScheduledQueries.maybeSql(spark, query,
-            (s, q) => sql(s, sfDir, q)))
-          .orElse(maybeRunHplsql(spark, sfDir, query))
-          .orElse(maybeCastFormat(spark, sfDir, query))
-          .orElse(maybeQuantified(spark, sfDir, query))
-          .orElse(maybeUniqueJoin(spark, sfDir, query))
-          .orElse(graft.plans.SchemaEvolution.maybeSql(spark, query))
-          .orElse(maybeBucketSample(spark, sfDir, query))
-          .orElse(maybeCommaLimit(spark, sfDir, query))
-          .orElse(maybeTypeSpellings(spark, sfDir, query))
-          .getOrElse(spark.sql(query)) // surface the canonical parse error
-      case Some(plan) =>
-        // privilege check first (deny-by-default when authz is enabled),
-        // then row-filter/column-mask substitution on the read path —
-        // including the source subtrees of DML statements, which SqlDml
-        // compiles itself. The parsed-command guard catches SET/RESET
-        // forms comments hid from the pre-parse regex.
-        // Hive resolves CTE names non-positionally — reorder forward
-        // references FIRST so authz's positional CTE scope, the DML
-        // compiler, and Spark's substitution all see dependency order
-        val plan0 = graft.plans.CteForwardRefs(plan)
-        graft.plans.TypeLimits.check(plan0)
-        graft.plans.Authz.guardSetPlan(spark, plan0)
-        graft.plans.Authz.checkStatement(spark, plan0)
-        // Hive v1 schema evolution (REPLACE COLUMNS / CHANGE COLUMN
-        // re-typing) — shapes Spark's catalog refuses; after authz
-        graft.plans.SchemaEvolution.maybePlan(spark, plan0) match {
-          case Some(df) => return df
-          case None => ()
-        }
-        // (SHOW TABLES reshapes to Hive's one-column tab_name listing
-        // inside SqlDml.runShowTables, which also merges the engine's
-        // registered snapshot names)
-        val gated = graft.plans.Authz.applyPoliciesToDmlSources(spark, plan0)
-        graft.plans.SqlDml.maybeRun(spark, gated).getOrElse {
-          val secured = graft.plans.Authz.applyPolicies(spark, plan0)
-          val substituted = graft.plans.VirtualColumns.maybeSubstitute(
-            graft.plans.OrderlessWindows(graft.plans.DistinctWindows(spark,
-              graft.plans.HiveRegex(
-              graft.plans.ProjectedInSubqueries(
-              graft.plans.EmptyGroupingSets(
-              graft.plans.GroupingSetsDedup(
-              graft.plans.LenientInsertCasts(spark,
-                graft.plans.ViewColumnNames(spark,
-                  graft.plans.CtePartialAliases(spark,
-                    graft.plans.NamedTables.substitute(spark, secured)))))))))),
-            query0)
-          // char columns reaching functions see the STRIPPED value
-          // (Hive's HiveChar contract) — post-analysis, so it knows
-          // which attributes carry char metadata
-          val charFixed =
-            graft.plans.CharStrippedFunctions(spark, substituted)
-          // the FUSED post-analysis Hive-semantics pass (one analyzer
-          // run): decimal→integral overflow-NULL casts, timestamp
-          // sum/avg coercion, non-boolean WHERE coercion
-          val boolFixed = graft.plans.HiveSemantics(spark, charFixed)
-          // (map-typed GROUP BY keys need no rewrite on Spark 4:
-          // InsertMapSortInGroupingExpressions normalizes them
-          // natively, nested values included — verified by
-          // EmptyGroupingSetsAdviceSpec/QtestGroupbyWave16zSpec)
-          // LAST: materialization EXECUTES CTE definitions, which must
-          // only happen after authz adjudicated and policies substituted
-          val materialized = graft.plans.CteMaterialize(spark, boolFixed)
-          val df =
-            if (materialized eq plan) spark.sql(query0)
-            else org.apache.spark.sql.GraftShims.ofRows(spark, materialized)
-          maybeCacheResult(spark, df)
-        }
     }
   }
 
@@ -398,210 +311,4 @@ object Engine {
     graft.plans.ScheduledQueries.runDue(session, now,
       (s, q) => sql(s, sfDir, q))
   }
-
-  /** Procedural scripts through the same front door (the reference's
-    * `hplsql -e` entry, folded into the SQL surface): an input Spark can't
-    * parse that LEADS with a procedural construct runs as an HPL/SQL script
-    * (see [[graft.hplsql.Hplsql]]); its raw statements re-enter this method.
-    * Result: the script's last row-producing statement, else its PRINT
-    * output as a one-column frame. Plain SQL typos don't start with these
-    * keywords, so the canonical parse error still surfaces for them.
-    */
-  private val HplsqlHead =
-    "(?is)^\\s*(DECLARE|PRINT|WHILE|LOOP|BEGIN|EXIT|CALL|RETURN|" +
-      "FOR\\s+\\w+\\s+IN|IF\\b|EXECUTE\\s+IMMEDIATE|" +
-      "CREATE\\s+(OR\\s+REPLACE\\s+)?(PROCEDURE|FUNCTION|PROC)\\b).*"
-  private def maybeRunHplsql(spark: SparkSession, sfDir: String,
-      query: String): Option[DataFrame] = {
-    if (!query.matches(HplsqlHead)) return None
-    val result = graft.hplsql.Hplsql.run(spark, query)(q => sql(spark, sfDir, q))
-    result.lastResult.orElse {
-      import spark.implicits._
-      if (result.printed.nonEmpty) Some(result.printed.toDF("printed"))
-      else Some(Seq.empty[String].toDF("printed"))
-    }
-  }
-
-  /** Hive's MySQL-style `LIMIT <offset>,<count>` tail (ref ql/parse/
-    * HiveParser.g limitClause — `offset_limit.q` is its qtest), a parse
-    * error to Spark: rewritten to `LIMIT count OFFSET offset` and re-run
-    * through this front door. Statement-TAIL only — nothing can follow a
-    * top-level LIMIT, so the match can't fire inside a string literal or
-    * subquery; inner comma-limits keep Spark's canonical error.
-    */
-  private def maybeCommaLimit(spark: SparkSession, sfDir: String,
-      query: String): Option[DataFrame] = {
-    val CommaLimit =
-      """(?is)^(.*\blimit)\s+(\d+)\s*,\s*(\d+)\s*;?\s*$""".r
-    // a trailing line comment could hold a comma-limit-looking tail of an
-    // otherwise-invalid statement; never rewrite comment text
-    val bare = query.replaceAll("""(?s)\s*--[^\n]*\s*$""", "")
-    bare match {
-      case CommaLimit(head, off, cnt) =>
-        val rewritten = s"$head $cnt OFFSET $off"
-        // only commit to the rewrite if it parses — otherwise the user
-        // must see the canonical error against THEIR text, not ours
-        val parses =
-          try { spark.sessionState.sqlParser.parsePlan(rewritten); true }
-          catch { case scala.util.control.NonFatal(_) => false }
-        if (parses) Some(sql(spark, sfDir, rewritten)) else None
-      case _ => None
-    }
-  }
-
-  /** Hive type spellings Spark's parser rejects — `TIMESTAMP WITH LOCAL
-    * TIME ZONE` and its `TIMESTAMPLOCALTZ` shorthand (ref serde
-    * serdeConstants.TIMESTAMPLOCALTZ_TYPE_NAME; timestamptz*.q) — map to
-    * Spark's `TIMESTAMP_LTZ`, which IS the same type: an instant
-    * rendered in the session zone (Spark's default timestamp). Only
-    * fires when the original text failed to parse AND the rewrite
-    * parses, so no user identifier containing these words can be
-    * touched (the regex requires type-spelling word boundaries).
-    */
-  private def maybeTypeSpellings(spark: SparkSession, sfDir: String,
-      query: String): Option[DataFrame] = {
-    val Re = """(?i)\btimestamp\s+with\s+local\s+time\s+zone\b|\btimestamplocaltz\b""".r
-    if (Re.findFirstIn(query).isEmpty) return None
-    val rewritten = Re.replaceAllIn(query, "timestamp_ltz")
-    val parses =
-      try { spark.sessionState.sqlParser.parsePlan(rewritten); true }
-      catch { case scala.util.control.NonFatal(_) => false }
-    if (parses) Some(sql(spark, sfDir, rewritten)) else None
-  }
-
-  /** Quantified comparison subqueries — `x <op> ANY|SOME|ALL (SELECT
-    * ...)` — are Hive surface Spark's parser rejects; they lower to the
-    * aggregate CASE form of [[graft.plans.QuantifiedSubqueries]] and
-    * re-run through this front door. Fires only when the original text
-    * failed to parse AND the rewrite parses.
-    */
-  private def maybeQuantified(spark: SparkSession, sfDir: String,
-      query: String): Option[DataFrame] = {
-    graft.plans.QuantifiedSubqueries.rewrite(query).flatMap { rewritten =>
-      val parses =
-        try { spark.sessionState.sqlParser.parsePlan(rewritten); true }
-        catch { case scala.util.control.NonFatal(_) => false }
-      if (parses) Some(sql(spark, sfDir, rewritten)) else None
-    }
-  }
-
-  /** Hive's deterministic `TABLESAMPLE (BUCKET n OUT OF m ON expr)` (a
-    * Spark parse error) — lowers via [[graft.plans.BucketSample]] to the
-    * HiveHash bucket filter and re-runs through this front door.
-    */
-  private def maybeBucketSample(spark: SparkSession, sfDir: String,
-      query: String): Option[DataFrame] = {
-    graft.plans.BucketSample.rewrite(query).flatMap { rewritten =>
-      val parses =
-        try { spark.sessionState.sqlParser.parsePlan(rewritten); true }
-        catch { case scala.util.control.NonFatal(_) => false }
-      if (parses) Some(sql(spark, sfDir, rewritten)) else None
-    }
-  }
-
-  /** Hive's `FROM UNIQUEJOIN [PRESERVE] ... SELECT` multi-way co-group
-    * verb (a Spark parse error) — lowers via
-    * [[graft.plans.UniqueJoin]] and re-runs through this front door.
-    */
-  private def maybeUniqueJoin(spark: SparkSession, sfDir: String,
-      query: String): Option[DataFrame] = {
-    graft.plans.UniqueJoin.rewrite(query).flatMap { rewritten =>
-      val parses =
-        try { spark.sessionState.sqlParser.parsePlan(rewritten); true }
-        catch { case scala.util.control.NonFatal(_) => false }
-      if (parses) Some(sql(spark, sfDir, rewritten)) else None
-    }
-  }
-
-  /** SQL:2016 `CAST(x AS type FORMAT 'pattern')` (ref ql/udf/generic/
-    * GenericUDFCastFormat.java — Hive's parser lowers it to cast_format),
-    * a parse error to Spark: each occurrence rewrites to
-    * `cast_format(x, 'type', 'pattern')` via a balanced-paren scan
-    * (regexes can't hold nested parens in the operand) and the statement
-    * re-runs through this front door. Only fires when the original text
-    * failed to parse AND the rewrite parses — otherwise the canonical
-    * error against the user's text stands.
-    */
-  private def maybeCastFormat(spark: SparkSession, sfDir: String,
-      query: String): Option[DataFrame] = {
-    rewriteCastFormat(query).flatMap { rewritten =>
-      val parses =
-        try { spark.sessionState.sqlParser.parsePlan(rewritten); true }
-        catch { case scala.util.control.NonFatal(_) => false }
-      if (parses) Some(sql(spark, sfDir, rewritten)) else None
-    }
-  }
-
-  /** One pass of CAST...FORMAT rewriting; None when nothing matched. */
-  private[graft] def rewriteCastFormat(q: String): Option[String] = {
-    val CastRe = """(?i)\bCAST\s*\(""".r
-    val Tail =
-      """(?is)^\s*(\w+(?:\s*\(\s*\d+\s*\))?)\s+FORMAT\s+('(?:[^']|'')*')\s*$""".r
-    var changed = false
-    var out = q
-    var search = 0
-    var guard = 0
-    while (guard < 64) {
-      guard += 1
-      CastRe.findFirstMatchIn(out.substring(search)) match {
-        case None => return if (changed) Some(out) else None
-        case Some(m) =>
-          val open = search + m.end - 1 // index of '('
-          // balanced scan respecting '…' literals
-          var i = open + 1; var depth = 1
-          var lastTopAs = -1
-          while (i < out.length && depth > 0) {
-            out.charAt(i) match {
-              case '\'' => // skip the string literal ('' = escaped quote)
-                i += 1
-                while (i < out.length &&
-                    (out.charAt(i) != '\'' ||
-                      (i + 1 < out.length && out.charAt(i + 1) == '\''))) {
-                  i += (if (out.charAt(i) == '\'') 2 else 1)
-                }
-              case '(' => depth += 1
-              case ')' => depth -= 1
-              case 'a' | 'A' if depth == 1 &&
-                  out.regionMatches(true, i, "as", 0, 2) &&
-                  !Character.isLetterOrDigit(out.charAt(i - 1)) &&
-                  out.charAt(i - 1) != '_' &&
-                  i + 2 < out.length &&
-                  !Character.isLetterOrDigit(out.charAt(i + 2)) &&
-                  out.charAt(i + 2) != '_' =>
-                lastTopAs = i
-              case _ => ()
-            }
-            i += 1
-          }
-          if (depth != 0) return if (changed) Some(out) else None
-          val close = i - 1
-          if (lastTopAs < 0) { search = open + 1 }
-          else out.substring(lastTopAs + 2, close) match {
-            case Tail(tpe, fmtLit) =>
-              val expr = out.substring(open + 1, lastTopAs).trim
-              val castStart = search + m.start
-              out = out.substring(0, castStart) +
-                s"cast_format($expr, '${tpe.replaceAll("\\s+", "")}', " +
-                s"$fmtLit)" + out.substring(close + 1)
-              changed = true
-              search = 0 // rescan from the top (indexes shifted)
-            case _ => search = open + 1
-          }
-      }
-    }
-    if (changed) Some(out) else None
-  }
-
-  /** Query-results caching (Hive's QueryResultsCache analog, see
-    * [[graft.plans.ResultsCache]]): opt-in per session via
-    * `spark.graft.resultsCache.dir`. Commands pass through — only
-    * row-producing deterministic queries are cacheable.
-    */
-  private def maybeCacheResult(spark: SparkSession, df: DataFrame): DataFrame =
-    spark.conf.getOption("spark.graft.resultsCache.dir") match {
-      case Some(dir) if !df.queryExecution.analyzed
-          .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Command] =>
-        graft.plans.ResultsCache.cachedOrRun(spark, df, dir)._1
-      case _ => df
-    }
 }

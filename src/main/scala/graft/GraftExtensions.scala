@@ -2,91 +2,49 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 
+import graft.plans.FrontDoor
+
 /** Deployment entry point for cluster use:
   *
   * {{{
   * spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * }}}
   *
-  * Injects the engine's session configuration hook so every session (incl.
-  * thrift/connect-served ones) gets the Hive-gap function registry without
-  * calling Engine.configure explicitly. Local embedding uses
+  * Every session (incl. thrift/connect-served ones) gets the Hive-gap
+  * function registry and the front door's stages without calling
+  * Engine.configure. The injections derive from the one stage registry,
+  * [[graft.plans.FrontDoor]]: each stage runs in the injected parser, as
+  * an analyzer rule, through its own session rule, or not at all when it
+  * is front-door only (raw-text stages and stages that
+  * execute the statement). Authorization runs in the parser, so plain
+  * `spark.sql` enforces privileges, row filters and column masks exactly
+  * as [[Engine.sql]] does. Session confs are the deployment's: set the
+  * ones [[Engine.configure]] sets (`spark.sql.ansi.enabled=false` above
+  * all — Hive's coercions need non-ANSI mode). Local embedding uses
   * `Engine.session()` / `Engine.configure(spark)` directly.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // Functions are registered per-session on first use of the engine's
-    // entry points; the checkRule hook runs early with a session handle and
-    // is idempotent, making the registry available to plain spark.sql users.
+    // the checkRule hook runs early with a session handle and is
+    // idempotent: registries and durable state (spark.graft.catalog) load
+    // before any query can reference them
     ext.injectCheckRule { session =>
       graft.functions.HiveFunctions.registerAll(session)
       graft.functions.GeoFunctions.registerAll(session)
       graft.plans.SnapshotSql.register(session)
-      // durable name registry (spark.graft.catalog) loads before any query
-      // can reference a registered name
       graft.plans.NamedTables.bootstrap(session)
       graft.plans.Authz.bootstrap(session)
+      FrontDoor.optimizerRules.foreach(_._2(session))
       _ => ()
     }
-    ext.injectOptimizerRule(session =>
-      new graft.plans.MaterializedViews.MvRewriteRule(session))
-    // opt-in count(DISTINCT x) -> ds_hll estimate rewrite
-    // (spark.graft.rewrite.countDistinctToSketch=true)
-    ext.injectOptimizerRule(session =>
-      new graft.plans.SketchRewrite.CountDistinctToSketch(session))
-    // catalog-name snapshot tables: SELECT ... FROM <registered-name>
-    ext.injectResolutionRule(session =>
-      new graft.plans.NamedTables.ResolveNamedTables(session))
-    // Hive virtual columns (INPUT__FILE__NAME, GROUPING__ID)
-    ext.injectResolutionRule(session =>
-      new graft.plans.VirtualColumns.ResolveVirtualColumns(session))
-    // Hive semantics: identical grouping sets dedup (GROUPING SETS
-    // ((a), (a)) answers once)
-    ext.injectResolutionRule(_ =>
-      new graft.plans.GroupingSetsDedup.DedupRule)
-    // Hive semantics: RLIKE/REGEXP with an empty pattern answers FALSE
-    ext.injectResolutionRule(_ =>
-      new graft.plans.HiveRegex.EmptyPatternRule)
-    // Hive semantics: non-boolean WHERE conditions coerce (getBoolean)
-    ext.injectResolutionRule(_ =>
-      new graft.plans.HiveBooleanFilters.HiveBooleanFiltersRule)
-    // Hive semantics: integral→timestamp casts read MILLISECONDS
-    ext.injectResolutionRule(_ =>
-      new graft.plans.IntegralTimestampCasts.IntegralTimestampCastsRule)
-    // Hive semantics: timestamp-vs-numeric comparisons in epoch seconds
-    ext.injectResolutionRule(_ =>
-      new graft.plans.TimestampComparisons.TimestampComparisonsRule)
-    // Hive semantics: sum/avg over timestamps aggregate epoch seconds
-    ext.injectResolutionRule(_ =>
-      new graft.plans.TimestampAggregates.TimestampAggregatesRule)
-    // Hive semantics: decimal→integral casts NULL on overflow
-    ext.injectResolutionRule(_ =>
-      new graft.plans.DecimalIntegralCasts.DecimalIntegralCastsRule)
-    // Hive semantics: boolean/interval/complex casts to string render
-    // in Hive's TextConverter/buildJSONString forms
-    ext.injectResolutionRule(_ =>
-      new graft.plans.HiveCastRendering.HiveCastRenderingRule)
-    // Hive semantics: mixed string/boolean constructor args negotiate
-    // the common STRING category
-    ext.injectResolutionRule(_ =>
-      new graft.plans.CommonCategories.CommonCategoriesRule)
-    // Hive semantics: BOOLEAN compared against any other primitive
-    // converts both sides to DOUBLE (true=1.0)
-    ext.injectResolutionRule(_ =>
-      new graft.plans.BooleanComparisons.BooleanComparisonsRule)
-    // Hive semantics: ROLLUP/CUBE answer their implicit total row
-    // over EMPTY input (post-analysis split of the () Expand set)
-    ext.injectOptimizerRule(_ =>
-      new graft.plans.RollupEmptyInput.RollupEmptyInputRule)
-    // Hive semantics: the explicit empty grouping set answers its
-    // global row even over empty input
-    ext.injectResolutionRule(_ =>
-      new graft.plans.EmptyGroupingSets.EmptyGroupingSetsRule)
-    // Hive semantics: ORDERLESS ranking/sequencing windows
-    // (row_number() OVER (), rank() OVER (PARTITION BY x)) — every row a
-    // peer, via a constant ORDER BY. Parser-level: the analyzer's window
-    // checks throw before injected resolution rules could run
-    ext.injectParser((_, delegate) =>
-      new graft.plans.OrderlessWindows.HiveWindowParser(delegate))
+    FrontDoor.planStages.foreach(st => st.ext match {
+      case FrontDoor.AsResolution =>
+        ext.injectResolutionRule(new FrontDoor.StageRule(st, _))
+      case FrontDoor.AsPostHoc =>
+        ext.injectPostHocResolutionRule(new FrontDoor.StageRule(st, _))
+      case FrontDoor.Own(inject) => inject(ext)
+      case _: FrontDoor.AtParse | _: FrontDoor.FrontDoorOnly => ()
+    })
+    ext.injectParser(new FrontDoor.Parser(_, _))
   }
 }

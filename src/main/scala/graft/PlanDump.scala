@@ -3,9 +3,10 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 
-/** Optimization-round tooling: dump `.explain("formatted")` for named
-  * catalog queries to files (plans/rNN/<query>_<tag>.txt) so plan-shape
-  * claims in OPTIMIZATION_rNN.md are checkable without running Spark.
+/** On-demand plan capture: dump `.explain("formatted")` for named catalog
+  * queries to `<outDir>/<query>_<tag>.txt` — any scratch directory; the
+  * transcripts are not kept in the repo (PlanGoldenSpec pins the headline
+  * plans, git history holds past rounds).
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <tag> [q1,q2,...]
   * (default: the Bench.headline set). Same session settings as Bench so

@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{BooleanType, DoubleType, NullType}
 
 /** Hive compares BOOLEAN against any other primitive by converting
@@ -38,10 +37,4 @@ object BooleanComparisons {
       case c: BinaryComparison if mixed(c.left, c.right) =>
         c.withNewChildren(Seq(toD(c.left), toD(c.right)))
     }
-
-  /** Extensions-injected spelling for plain `spark.sql` deployments. */
-  class BooleanComparisonsRule extends Rule[LogicalPlan] {
-    override def apply(plan: LogicalPlan): LogicalPlan =
-      rewriteResolved(plan)
-  }
 }

@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.{Cast, CreateArray, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types._
 
 /** Hive negotiates a COMMON CATEGORY for mixed-type constructor
@@ -46,9 +45,4 @@ object CommonCategories {
           needsNegotiation(ca.children.map(_.dataType)) =>
         CreateArray(ca.children.map(toStr), ca.useStringTypeWhenEmpty)
     }
-
-  /** Extensions-injected spelling for plain `spark.sql` deployments. */
-  class CommonCategoriesRule extends Rule[LogicalPlan] {
-    override def apply(plan: LogicalPlan): LogicalPlan = rewriteResolved(plan)
-  }
 }

@@ -1,11 +1,7 @@
 package graft.plans
 
-import scala.util.control.NonFatal
-
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.types._
 
@@ -75,29 +71,4 @@ object DecimalIntegralCasts {
         val (lo, hi) = bounds(c.dataType).get
         guard(c, c.child.dataType.asInstanceOf[DecimalType], lo, hi)
     }
-
-  /** Cheap pre-analysis gate: any CAST whose TARGET is integral. */
-  private def mightApply(plan: LogicalPlan): Boolean =
-    plan.exists(_.expressions.exists(_.exists {
-      case c: Cast => bounds(c.dataType).isDefined
-      case _ => false
-    }))
-
-  def apply(spark: SparkSession, plan: LogicalPlan): LogicalPlan = {
-    if (!mightApply(plan)) return plan
-    val resolved =
-      if (plan.resolved) plan
-      else try spark.sessionState.analyzer.execute(plan)
-      catch { case NonFatal(_) => return plan }
-    val out = rewriteResolved(resolved)
-    if (out.fastEquals(resolved)) plan else out
-  }
-
-  /** Extensions-injected spelling for plain `spark.sql` deployments —
-    * fires on resolved Cast nodes during analysis; the tag marker keeps
-    * the fixpoint stable.
-    */
-  class DecimalIntegralCastsRule extends Rule[LogicalPlan] {
-    override def apply(plan: LogicalPlan): LogicalPlan = rewriteResolved(plan)
-  }
 }

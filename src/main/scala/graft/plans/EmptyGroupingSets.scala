@@ -10,7 +10,6 @@ import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFu
 import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Grouping, GroupingID, GroupingSets, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Sort, Union}
-import org.apache.spark.sql.catalyst.rules.Rule
 
 /** Hive (and DuckDB, and PostgreSQL) answer the EXPLICIT empty
   * grouping set's global row even when the input is EMPTY —
@@ -41,8 +40,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * grouping expression.
   *
   * Both resolved and unresolved spellings are matched: the front door
-  * runs pre-analysis (UnresolvedFunction nodes), while the
-  * extensions-injected [[EmptyGroupingSetsRule]] shares the analyzer's
+  * runs pre-analysis (UnresolvedFunction nodes), while the extensions
+  * entry's resolution rule ([[FrontDoor]]) shares the analyzer's
   * fixpoint with ResolveGroupingAnalytics/ResolveFunctions and can see
   * grouping()/grouping_id() already resolved to Grouping/GroupingID.
   *
@@ -197,10 +196,4 @@ object EmptyGroupingSets {
             globalLeg))
       }
     }
-
-  /** Extensions-injected spelling for plain `spark.sql` deployments. */
-  class EmptyGroupingSetsRule extends Rule[LogicalPlan] {
-    override def apply(plan: LogicalPlan): LogicalPlan =
-      EmptyGroupingSets(plan)
-  }
 }

@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, GroupingSets}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
 
 /** Hive dedups IDENTICAL grouping sets: `GROUP BY a GROUPING SETS ((a),
   * (a))` answers each group ONCE (ref qtest groupby_grouping_sets1.q
@@ -31,12 +30,4 @@ object GroupingSetsDedup {
         gs.groupingSets.foreach(s => seen.getOrElseUpdate(render(s), s))
         GroupingSets(seen.values.toSeq, gs.userGivenGroupByExprs)
     }
-
-  /** Extensions-injected spelling of the same rewrite, for plain
-    * `spark.sql` deployments (see [[graft.GraftExtensions]]).
-    */
-  class DedupRule extends Rule[LogicalPlan] {
-    override def apply(plan: LogicalPlan): LogicalPlan =
-      GroupingSetsDedup(plan)
-  }
 }

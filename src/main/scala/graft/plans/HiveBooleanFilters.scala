@@ -1,11 +1,7 @@
 package graft.plans
 
-import scala.util.control.NonFatal
-
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types._
 
 /** Hive accepts a NON-BOOLEAN expression as a WHERE/HAVING condition
@@ -76,18 +72,4 @@ object HiveBooleanFilters {
         val fixed = coerceTree(cond)
         if (fixed.fastEquals(cond)) f else Filter(fixed, child)
     }
-
-  def apply(spark: SparkSession, plan: LogicalPlan): LogicalPlan = {
-    val analyzed =
-      if (plan.resolved) plan
-      else try spark.sessionState.analyzer.execute(plan)
-      catch { case NonFatal(_) => return plan }
-    val out = rewriteResolved(analyzed)
-    if (out.fastEquals(analyzed)) plan else out
-  }
-
-  /** Extensions-injected spelling for plain `spark.sql` deployments. */
-  class HiveBooleanFiltersRule extends Rule[LogicalPlan] {
-    override def apply(plan: LogicalPlan): LogicalPlan = rewriteResolved(plan)
-  }
 }

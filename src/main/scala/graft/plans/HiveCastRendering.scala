@@ -1,11 +1,7 @@
 package graft.plans
 
-import scala.util.control.NonFatal
-
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
@@ -58,23 +54,4 @@ object HiveCastRendering {
           eligible(c.child.dataType) =>
         replace(c)
     }
-
-  /** Cheap pre-analysis gate used by the fused pass: any CAST spelled
-    * toward STRING, or any construct that could coerce one in (unions
-    * and function calls over mixed args do) — kept permissive; the
-    * real match is type-directed post-analysis.
-    */
-  def apply(spark: SparkSession, plan: LogicalPlan): LogicalPlan = {
-    val resolved =
-      if (plan.resolved) plan
-      else try spark.sessionState.analyzer.execute(plan)
-      catch { case NonFatal(_) => return plan }
-    val out = rewriteResolved(resolved)
-    if (out.fastEquals(resolved)) plan else out
-  }
-
-  /** Extensions-injected spelling for plain `spark.sql` deployments. */
-  class HiveCastRenderingRule extends Rule[LogicalPlan] {
-    override def apply(plan: LogicalPlan): LogicalPlan = rewriteResolved(plan)
-  }
 }

@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression, If, IsNotNull, IsNull, Length, Literal, RLike}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{BooleanType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -46,11 +45,4 @@ object HiveRegex {
         case RLike(l, pat) => guarded(l, pat)
       }
     }
-
-  /** Extensions-injected spelling for plain `spark.sql` deployments
-    * (see [[graft.GraftExtensions]]).
-    */
-  class EmptyPatternRule extends Rule[LogicalPlan] {
-    override def apply(plan: LogicalPlan): LogicalPlan = HiveRegex(plan)
-  }
 }

@@ -5,46 +5,32 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** The FUSED post-analysis Hive-semantics pass: one analyzer run and
-  * one tree walk applying every expression-level semantic fix —
-  * [[DecimalIntegralCasts]] (overflow → NULL), [[TimestampAggregates]]
-  * (sum/avg over timestamps), and [[HiveBooleanFilters]] (non-boolean
-  * WHERE coercion). Each rewrite keeps its own object for
-  * documentation and its extensions-injected rule; the front door
-  * calls only this composition so the per-statement cost stays ONE
-  * analyzer pass (the expensive part) plus a constant number of cheap
-  * expression walks no matter how many semantics accumulate (the r16
-  * verdict's front-door-fusing ask applied to the r17 additions).
+/** The FUSED post-analysis Hive-semantics pass: one analyzer run, then
+  * the registry's [[FrontDoor.negotiation]] and [[FrontDoor.semantics]]
+  * stages in order on the resolved plan. The per-statement cost stays
+  * ONE analyzer pass (the expensive part) plus a constant number of
+  * cheap expression walks no matter how many semantics accumulate; new
+  * post-analysis semantics join [[FrontDoor.semantics]] rather than
+  * adding analyzer passes.
   */
 object HiveSemantics {
-
-  private def rewrite(plan: LogicalPlan): LogicalPlan = {
-    val p1 = DecimalIntegralCasts.rewriteResolved(plan)
-    val p2 = TimestampAggregates.rewriteResolved(p1)
-    val p3 = TimestampComparisons.rewriteResolved(p2)
-    val p4 = IntegralTimestampCasts.rewriteResolved(p3)
-    val p5 = HiveCastRendering.rewriteResolved(p4)
-    val p6 = BooleanComparisons.rewriteResolved(p5)
-    val p7 = RollupEmptyInput.rewriteResolved(p6)
-    HiveBooleanFilters.rewriteResolved(p7)
-  }
 
   def apply(spark: SparkSession, plan: LogicalPlan): LogicalPlan = {
     val analyzed =
       if (plan.resolved) plan
       else try spark.sessionState.analyzer.execute(plan)
       catch { case NonFatal(_) => return plan }
-    // Hive common-category negotiation first: it can turn an
-    // analysis-REJECTED shape (string-vs-boolean array) into a legal
-    // one, so anything it changes re-analyzes before the
+    // negotiation first: anything it changes re-analyzes before the
     // expression-level fixes run (surrounding extractions resolve
-    // against the negotiated type).
-    val negotiated = CommonCategories.rewriteResolved(analyzed)
+    // against the negotiated type)
+    val negotiated = FrontDoor.fold(Seq(FrontDoor.negotiation), spark, "",
+      analyzed).getOrElse(analyzed)
     val base =
       if (negotiated.fastEquals(analyzed)) analyzed
       else try spark.sessionState.analyzer.execute(negotiated)
       catch { case NonFatal(_) => analyzed }
-    val out = rewrite(base)
+    val out = FrontDoor.fold(FrontDoor.semantics, spark, "", base)
+      .getOrElse(base)
     if (out.fastEquals(analyzed)) plan else out
   }
 }

@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.{Cast, MillisToTimestamp}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types._
 
 /** Hive's INTEGRAL→TIMESTAMP cast reads MILLISECONDS — the notorious
@@ -35,10 +34,4 @@ object IntegralTimestampCasts {
           c.child.dataType == BooleanType =>
         MillisToTimestamp(Cast(Cast(c.child, IntegerType), LongType))
     }
-
-  /** Extensions-injected spelling for plain `spark.sql` deployments. */
-  class IntegralTimestampCastsRule extends Rule[LogicalPlan] {
-    override def apply(plan: LogicalPlan): LogicalPlan =
-      rewriteResolved(plan)
-  }
 }

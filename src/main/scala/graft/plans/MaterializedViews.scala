@@ -36,9 +36,10 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * as Hive's, which gates rewrite on metastore transaction ids it can see.
   *
   * Ownership: each session's [[MvRewriteRule]] owns its registry, and the
-  * session itself holds the rule (via `experimental.extraOptimizations` or
-  * the spark.sql.extensions injection). MV plans reference their session, so
-  * the whole MV graph is garbage-collected with the session; the only
+  * session itself holds the rule (in `experimental.extraOptimizations`,
+  * installed by both SQL entries — see [[FrontDoor.optimizerRules]]). MV
+  * plans reference their session, so the whole MV graph is
+  * garbage-collected with the session; the only
   * process-wide structure is a weak set of live rules used for cross-session
   * invalidation (keys weak, values primitive — no value→key strong chain).
   */
@@ -82,7 +83,6 @@ object MaterializedViews {
   private def ruleFor(spark: SparkSession): MvRewriteRule = {
     val existing = spark.experimental.extraOptimizations
       .collectFirst { case r: MvRewriteRule => r }
-      .orElse(rules.find(_.session eq spark)) // spark.sql.extensions-injected
     existing.getOrElse {
       val r = new MvRewriteRule(spark)
       spark.experimental.extraOptimizations =
@@ -122,7 +122,6 @@ object MaterializedViews {
 
   /** Rewrite rule: exact-subtree substitution + aggregate-rollup containment. */
   class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
-    private[plans] val session: SparkSession = spark
     private[plans] val registry =
       new java.util.concurrent.ConcurrentHashMap[String, Mv]()
     liveRules.put(this, java.lang.Boolean.TRUE)

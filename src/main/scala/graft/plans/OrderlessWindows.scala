@@ -74,33 +74,4 @@ object OrderlessWindows {
       Some(u.nameParts.head.toLowerCase(Locale.ROOT))
     case _ => None
   }
-
-  /** Parser-wrapping form for extensions-bootstrapped sessions: the
-    * analyzer's ResolveWindowOrder THROWS on an orderless ranking window
-    * inside the main resolution batch, BEFORE any injected resolution
-    * rule could iterate — so the rewrite must happen at parse time, same
-    * as the Engine.sql front door. Everything else delegates verbatim.
-    */
-  class HiveWindowParser(delegate: org.apache.spark.sql.catalyst.parser
-      .ParserInterface) extends org.apache.spark.sql.catalyst.parser
-      .ParserInterface {
-    override def parsePlan(sqlText: String): LogicalPlan =
-      OrderlessWindows(delegate.parsePlan(sqlText))
-    override def parseQuery(sqlText: String): LogicalPlan =
-      OrderlessWindows(delegate.parseQuery(sqlText))
-    override def parseExpression(sqlText: String) =
-      delegate.parseExpression(sqlText)
-    override def parseTableIdentifier(sqlText: String) =
-      delegate.parseTableIdentifier(sqlText)
-    override def parseFunctionIdentifier(sqlText: String) =
-      delegate.parseFunctionIdentifier(sqlText)
-    override def parseMultipartIdentifier(sqlText: String) =
-      delegate.parseMultipartIdentifier(sqlText)
-    override def parseTableSchema(sqlText: String) =
-      delegate.parseTableSchema(sqlText)
-    override def parseDataType(sqlText: String) =
-      delegate.parseDataType(sqlText)
-    override def parseRoutineParam(sqlText: String) =
-      delegate.parseRoutineParam(sqlText)
-  }
 }

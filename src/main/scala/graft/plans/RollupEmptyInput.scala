@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, LogicalPlan, Union}
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.LongType
 
 /** ROLLUP/CUBE answer their IMPLICIT grand-total row even over EMPTY
@@ -108,12 +107,4 @@ object RollupEmptyInput {
           }
         }
     }
-
-  /** Extensions-injected optimizer spelling for plain `spark.sql` /
-    * DataFrame deployments.
-    */
-  class RollupEmptyInputRule extends Rule[LogicalPlan] {
-    override def apply(plan: LogicalPlan): LogicalPlan =
-      rewriteResolved(plan)
-  }
 }

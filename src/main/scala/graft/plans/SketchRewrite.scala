@@ -47,6 +47,15 @@ object SketchRewrite {
 
   val ConfKey = "spark.graft.rewrite.countDistinctToSketch"
 
+  /** Install the rewrite rule on a session (idempotent; inert until
+    * [[ConfKey]] is set), as [[MaterializedViews.install]] does.
+    */
+  def install(spark: SparkSession): Unit =
+    if (!spark.experimental.extraOptimizations
+        .exists(_.isInstanceOf[CountDistinctToSketch]))
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ new CountDistinctToSketch(spark)
+
   class CountDistinctToSketch(session: SparkSession)
       extends Rule[LogicalPlan] {
 

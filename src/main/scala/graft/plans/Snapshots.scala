@@ -784,22 +784,9 @@ object Snapshots {
         rel -> FileStat(rows, cols ++ ltzStats.getOrElse(rel, Map.empty))
       }
       // Footers are independent metadata reads; the serial driver loop
-      // serialized many-file commits (ADVICE r17). A small fixed pool bounds
-      // concurrency; result order is irrelevant (keyed map).
-      if (files.size <= 1) files.map(statOf).toMap
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(8, files.size))
-        try {
-          val tasks: java.util.List[java.util.concurrent.Callable[(String, FileStat)]] =
-            files.map { st =>
-              new java.util.concurrent.Callable[(String, FileStat)] {
-                override def call(): (String, FileStat) = statOf(st)
-              }
-            }.asJava
-          pool.invokeAll(tasks).asScala.map(_.get()).toMap
-        } finally pool.shutdown()
-      }
+      // serialized many-file commits (ADVICE r17). At most 8 at a time;
+      // result order is irrelevant (keyed map).
+      graft.Parallel.map(files, 8)(statOf).toMap
     }
 
     /** Footer value → the stats-string rendering [[Pruning.key]] parses.

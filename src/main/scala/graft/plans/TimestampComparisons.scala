@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.{BinaryComparison, Cast, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{DoubleType, NumericType, TimestampType}
 
 /** Hive compares TIMESTAMP against NUMERIC operands by converting the
@@ -31,10 +30,4 @@ object TimestampComparisons {
         c.withNewChildren(Seq(Cast(c.left, DoubleType),
           Cast(c.right, DoubleType)))
     }
-
-  /** Extensions-injected spelling for plain `spark.sql` deployments. */
-  class TimestampComparisonsRule extends Rule[LogicalPlan] {
-    override def apply(plan: LogicalPlan): LogicalPlan =
-      rewriteResolved(plan)
-  }
 }

@@ -34,16 +34,18 @@ object TpchQueries {
 
   /** Spark-leg money respell of a both-engine text (see `both`): the fused
     * $rev product first, then single-column casts. Only COLUMN-argument
-    * casts rewrite — never literals or expressions (money_decimal requires a
-    * double column's quantization contract, and CAST(0 AS DECIMAL(28,4))
-    * must stay the typed zero).
+    * casts at the money scale (2 — the testdata's money columns are
+    * 2-decimal quantized doubles) rewrite — never literals, expressions or
+    * other scales (money_decimal requires a double column's quantization
+    * contract, and CAST(0 AS DECIMAL(28,4)) must stay the typed zero).
+    * MoneyRespellSpec pins both kinds.
     */
   private val DecCast =
-    """(?i)CAST\(\s*([A-Za-z_][A-Za-z0-9_.]*)\s+AS\s+DECIMAL\((\d+),\s*(\d+)\)\)""".r
+    """(?i)CAST\(\s*([A-Za-z_][A-Za-z0-9_.]*)\s+AS\s+DECIMAL\((\d+),\s*2\)\)""".r
   private[queries] def sparkMoney(sql: String): String =
     DecCast.replaceAllIn(
       sql.replace(rev, "money_decimal(l_extendedprice * (1-l_discount), 27, 4)"),
-      m => s"money_decimal(${m.group(1)}, ${m.group(2)}, ${m.group(3)})")
+      m => s"money_decimal(${m.group(1)}, ${m.group(2)}, 2)")
 
   val defs: Seq[QDef] = Seq(
 

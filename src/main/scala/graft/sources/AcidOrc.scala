@@ -247,23 +247,12 @@ object AcidOrc {
     }
   }
 
-  /** Driver-side bounded-parallel map for footer metadata fetches and
-    * per-partition compaction waves (no scala-parallel-collections
-    * dependency). Bound: one wave of ≤16 concurrent tasks; total work
-    * stays O(inputs), only the latency is amortized. Safe for Spark
-    * actions — job submission is thread-safe and each compaction task
-    * touches a disjoint partition directory.
+  /** Footer metadata fetches and per-partition compaction waves fan out
+    * through [[graft.Parallel]], at most 16 at a time (each compaction
+    * task touches a disjoint partition directory).
     */
-  private[sources] def parallelMap[A, B](in: Seq[A])(f: A => B): Seq[B] = {
-    if (in.size <= 1) return in.map(f)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, in.size))
-    try {
-      val futs = in.map(a => pool.submit(
-        new java.util.concurrent.Callable[B] { def call(): B = f(a) }))
-      futs.map(_.get())
-    } finally pool.shutdownNow() // on failure, queued fetches are cancelled
-  }
+  private[sources] def parallelMap[A, B](in: Seq[A])(f: A => B): Seq[B] =
+    graft.Parallel.map(in, 16)(f)
 
   // ------------------------------------------------------ orc-core bridge
 

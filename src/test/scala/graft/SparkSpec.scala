@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.chaining._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,5 +25,24 @@ object SparkSpec {
     s.sparkContext.setLogLevel("WARN")
     Engine.configure(s)
     s
+  }
+
+  /** A second session over the same context, bootstrapped the way
+    * `spark.sql.extensions=graft.GraftExtensions` does it on a cluster
+    * (no Engine call). The shared session stays the active/default one.
+    */
+  lazy val extensions: SparkSession = {
+    val shared = session
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    // Hive's coercions need non-ANSI mode: the one Engine.configure conf
+    // an extensions deployment sets itself
+    try SparkSession.builder()
+      .withExtensions(new graft.GraftExtensions().apply(_)).getOrCreate()
+      .tap(_.conf.set("spark.sql.ansi.enabled", "false"))
+    finally {
+      SparkSession.setDefaultSession(shared)
+      SparkSession.setActiveSession(shared)
+    }
   }
 }

@@ -79,12 +79,12 @@ class CastFormatSpec extends SparkSpec {
     // identifier-boundary safety: a trailing "as" inside an identifier
     // (x_as) must not be taken as the AS keyword — the real AS later in
     // the operand splits correctly
-    assert(Engine.rewriteCastFormat(
+    assert(graft.plans.CastFormat.rewrite(
       "SELECT CAST(t.x_as AS STRING FORMAT 'yyyy') FROM t") ===
       Some("SELECT cast_format(t.x_as, 'STRING', 'yyyy') FROM t"))
     // ... and with NO real AS keyword at all (the identifier's trailing
     // "as" is the only candidate), the rewrite must not fire
-    assert(Engine.rewriteCastFormat(
+    assert(graft.plans.CastFormat.rewrite(
       "SELECT CAST(expr_as STRING FORMAT 'yyyy') FROM t") === None)
   }
 

@@ -93,4 +93,41 @@ class SnapshotFooterStatsSpec extends AnyFunSuite {
     assert(t.readWhere($"id" === 55L).count() == 1L)
     assert(t.readWhere($"ts" === tsLit).count() == 1L)
   }
+
+  test("an unreadable footer during a commit surfaces its own exception, not ExecutionException") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = java.nio.file.Files.createTempDirectory(FaultyFs.Marker)
+      .toString + "/t"
+    conf.set("fs.file.impl", classOf[FaultyFs].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    FaultyFs.failOpens = true
+    val e =
+      try intercept[Exception] {
+        Snapshots.create(spark, root, spark.range(0, 100, 1, 3).toDF("id"))
+      } finally {
+        FaultyFs.failOpens = false
+        conf.unset("fs.file.impl"); conf.unset("fs.file.impl.disable.cache")
+      }
+    assert(e.isInstanceOf[FaultyFs.Unreadable], s"got $e")
+  }
+}
+
+/** The local filesystem whose parquet opens under a [[FaultyFs.Marker]]
+  * directory fail while [[FaultyFs.failOpens]] is set — nothing opens a
+  * data file for READING during a commit except its footer-stats
+  * collection.
+  */
+class FaultyFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int) =
+    if (FaultyFs.failOpens && f.getName.endsWith(".parquet") &&
+        f.toString.contains(FaultyFs.Marker))
+      throw new FaultyFs.Unreadable(f.toString)
+    else super.open(f, bufferSize)
+}
+
+object FaultyFs {
+  val Marker = "graft_faulty_footer_"
+  @volatile var failOpens = false
+  final class Unreadable(path: String)
+      extends java.io.IOException(s"unreadable footer: $path")
 }
