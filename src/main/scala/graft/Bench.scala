@@ -438,30 +438,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // local-iteration filter: comma-separated query names to bench alone
     // (also names the two roundtrips). Unset/empty = the full headline set.
     val only: Set[String] = sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", "")
       .split(',').map(_.trim).filter(_.nonEmpty).toSet
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // Split size sized to the benchmark SF: the sf0.1 tables are single
-      // ~1-11 MB files, so the 128 MB default reads each as ONE task and
-      // leaves the other 31 cores idle on every scan. 4 MB splits give
-      // scan parallelism matching the data (measured: scan-bound queries
-      // 10-25% faster, none slower); at real cluster scale (files >=
-      // 128 MB) the default is correct and this override is wrong — it is
-      // benchmark-scale sizing, not an engine constant.
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Engine.configure(spark)
+    val spark = Engine.mainSession(defaultCpus = 32)
 
     def run(name: String): Unit =
       try SparkEntry.queries(name)(spark, sfDir)

@@ -28,15 +28,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // the checkRule hook runs early with a session handle and is
     // idempotent: registries and durable state (spark.graft.catalog) load
     // before any query can reference them
-    ext.injectCheckRule { session =>
-      graft.functions.HiveFunctions.registerAll(session)
-      graft.functions.GeoFunctions.registerAll(session)
-      graft.plans.SnapshotSql.register(session)
-      graft.plans.NamedTables.bootstrap(session)
-      graft.plans.Authz.bootstrap(session)
-      FrontDoor.optimizerRules.foreach(_._2(session))
-      _ => ()
-    }
+    ext.injectCheckRule { session => Engine.install(session); _ => () }
     FrontDoor.planStages.foreach(st => st.ext match {
       case FrontDoor.AsResolution =>
         ext.injectResolutionRule(new FrontDoor.StageRule(st, _))

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** On-demand plan capture: dump `.explain("formatted")` for named catalog
   * queries to `<outDir>/<query>_<tag>.txt` — any scratch directory; the
@@ -9,8 +8,8 @@ import org.apache.spark.sql.SparkSession
   * plans, git history holds past rounds).
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <tag> [q1,q2,...]
-  * (default: the Bench.headline set). Same session settings as Bench so
-  * the captured plan is the benched plan.
+  * (default: the Bench.headline set). Same session as Bench
+  * ([[Engine.mainSession]]) so the captured plan is the benched plan.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -20,19 +19,7 @@ object PlanDump {
     val names: Seq[String] =
       if (args.length > 3) args(3).split(',').map(_.trim).filter(_.nonEmpty).toSeq
       else Bench.headline
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Engine.configure(spark)
+    val spark = Engine.mainSession(defaultCpus = 32)
     Files.createDirectories(Paths.get(outDir))
     names.foreach { n =>
       try {

@@ -76,7 +76,7 @@ object Authz {
 
   private def mutate(op: State => State): Unit = synchronized {
     state = op(state)
-    store.foreach(_.mutate(op))
+    durable.mutate(op)
   }
 
   private def norm(s: String): String = s.toLowerCase(Locale.ROOT)
@@ -161,7 +161,7 @@ object Authz {
     * teardown, not a metastore drop.
     */
   def clearAll(): Unit = synchronized {
-    state = State(); activeRoles.clear(); store = None; storeDir = ""
+    state = State(); activeRoles.clear(); durable.detach()
   }
 
   // ------------------------------------------------------- session context
@@ -176,7 +176,7 @@ object Authz {
     * pre-enforcement for the same reason); a session that never touched
     * authz still falls through to Spark's canonical SET ROLE error.
     */
-  def hasState: Boolean = store.nonEmpty || {
+  def hasState: Boolean = durable.get.nonEmpty || {
     val s = state
     s.roles.nonEmpty || s.grants.nonEmpty || s.rowFilters.nonEmpty ||
       s.columnMasks.nonEmpty
@@ -775,102 +775,30 @@ object Authz {
       t -> ms.groupBy(_.column).map { case (c, cm) =>
         c -> cm.map(m => m.principal -> m.expr).toMap } })
 
-  /** Versioned CAS store under `<catalog>/_authz/` — the same
-    * create-exclusive publish discipline as the [[NamedTables]] catalog
-    * and the snapshot manifest log, so concurrent admin JVMs serialize
-    * instead of overwriting each other's grants.
+  private implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
+
+  /** The durable database: a [[CasJsonStore]] under `<catalog>/_authz/`,
+    * so concurrent admin JVMs serialize instead of overwriting each
+    * other's grants.
     */
-  private final class AuthzStore(dir: org.apache.hadoop.fs.Path,
-      conf: org.apache.hadoop.conf.Configuration) {
-    import org.apache.hadoop.fs.Path
-    private val fs = dir.getFileSystem(conf)
-    private implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
-
-    private def versionPath(v: Long) = new Path(dir, f"v$v%08d.json")
-    private def versions(): Seq[Long] =
-      if (!fs.exists(dir)) Nil
-      else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-        .filter(n => n.startsWith("v") && n.endsWith(".json"))
-        .map(_.stripPrefix("v").stripSuffix(".json").toLong).sorted
-
-    def load(): (Long, State) = versions().lastOption match {
-      case None => (-1L, State())
-      case Some(v) =>
-        val in = fs.open(versionPath(v))
-        val txt = try {
-          val bs = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, bs, 8192, false)
-          bs.toString("UTF-8")
-        } finally in.close()
-        (v, ofDoc(org.json4s.jackson.Serialization.read[Doc](txt)))
-    }
-
-    private def publish(v: Long, s: State): Boolean = {
-      fs.mkdirs(dir)
-      val dst = versionPath(v)
-      if (fs.exists(dst)) return false
-      val tmp = new Path(dir, s".tmp-${java.util.UUID.randomUUID().toString}")
-      val out = fs.create(tmp, false)
-      try out.write(org.json4s.jackson.Serialization.write(toDoc(s))
-        .getBytes("UTF-8")) finally out.close()
-      val ok =
-        if (dst.toUri.getScheme == null || dst.toUri.getScheme == "file") {
-          val lp = java.nio.file.Paths.get(dst.toUri.getPath)
-          val tp = java.nio.file.Paths.get(fs.makeQualified(tmp).toUri.getPath)
-          try { java.nio.file.Files.createLink(lp, tp); true }
-          catch { case _: java.nio.file.FileAlreadyExistsException => false }
-        } else {
-          try {
-            org.apache.hadoop.fs.FileContext.getFileContext(dst.toUri, conf)
-              .rename(fs.makeQualified(tmp), fs.makeQualified(dst))
-            true
-          } catch {
-            case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-          }
-        }
-      fs.delete(tmp, false)
-      ok
-    }
-
-    def mutate(op: State => State): Unit = {
-      var done = false
-      var tries = 0
-      while (!done) {
-        val (v, cur) = load()
-        val next = op(cur)
-        done = (next == cur) || publish(v + 1, next)
-        tries += 1
-        require(tries <= 50, s"authz CAS did not converge at $dir")
-      }
-    }
-  }
-
-  @volatile private var store: Option[AuthzStore] = None
-  @volatile private var storeDir: String = ""
+  private[graft] val durable = new CasJsonStore.Attached[State](
+    this, "_authz", State(),
+    s => org.json4s.jackson.Serialization.write(toDoc(s)),
+    txt => ofDoc(org.json4s.jackson.Serialization.read[Doc](txt)))
 
   /** Install the persisted authz database when `spark.graft.catalog` is
     * set (the same conf that makes [[NamedTables]] durable): durable state
     * loads under the in-memory state (memory wins per table/role — it is
     * newer), and every mutation from here on writes through. Idempotent
-    * per path; called from [[graft.Engine.configure]] alongside the
-    * catalog bootstrap.
+    * per path; called from [[graft.Engine.install]] alongside the catalog
+    * bootstrap.
     */
-  def bootstrap(spark: SparkSession): Unit = {
-    val dir = spark.conf.getOption(NamedTables.CatalogConfKey).getOrElse("")
-    if (dir.isEmpty || dir == storeDir) return
-    synchronized {
-      if (dir == storeDir) return
-      val s = new AuthzStore(
-        new org.apache.hadoop.fs.Path(dir, "_authz"),
-        spark.sparkContext.hadoopConfiguration)
-      val durable = s.load()._2
-      state = State(
-        durable.roles ++ state.roles,
-        durable.grants ++ state.grants,
-        durable.rowFilters ++ state.rowFilters,
-        durable.columnMasks ++ state.columnMasks)
-      store = Some(s)
-      storeDir = dir
-    }
+  def bootstrap(spark: SparkSession): Unit = durable.attach(spark) { s =>
+    val d = s.load()._2
+    state = State(
+      d.roles ++ state.roles,
+      d.grants ++ state.grants,
+      d.rowFilters ++ state.rowFilters,
+      d.columnMasks ++ state.columnMasks)
   }
 }

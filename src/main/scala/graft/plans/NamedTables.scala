@@ -56,7 +56,7 @@ object NamedTables {
 
   def register(name: String, ref: Ref): Unit = {
     registry.put(norm(name), ref)
-    persist(_ + (norm(name) -> ref))
+    durable.mutate(_ + (norm(name) -> ref))
   }
 
   def registerSnapshot(name: String, root: String,
@@ -68,7 +68,7 @@ object NamedTables {
 
   def drop(name: String): Unit = {
     registry.remove(norm(name))
-    persist(_ - norm(name))
+    durable.mutate(_ - norm(name))
   }
 
   /** ALTER TABLE old RENAME TO new — a pure catalog move (the data root
@@ -81,7 +81,7 @@ object NamedTables {
       s"table $newName already exists")
     registry.put(norm(newName), ref)
     registry.remove(norm(oldName))
-    persist(m => m - norm(oldName) + (norm(newName) -> ref))
+    durable.mutate(m => m - norm(oldName) + (norm(newName) -> ref))
   }
 
   def get(name: String): Option[Ref] = registry.get(norm(name))
@@ -98,136 +98,53 @@ object NamedTables {
     */
   val CatalogConfKey = "spark.graft.catalog"
 
-  /** Durable registrations, so names survive a JVM restart — the role of the
-    * reference's metastore DB (ref standalone-metastore/src/main/thrift/
-    * hive_metastore.thrift:644: tables are durable name→location rows; here
-    * the catalog itself is a tiny snapshot-style log). The full name→ref map
-    * is one `v%08d.json` per change under the configured directory, published
-    * create-exclusive exactly like a [[Snapshots]] manifest: concurrent
-    * writers (two sessions registering at once) CAS on the version number and
-    * the loser replays its change against the fresh state, so no registration
-    * is lost. Catalogs are tiny (one row per table), so whole-map-per-version
-    * costs nothing and keeps recovery a single-file read.
-    */
   /** Catalog serialization row: `kind` is "snapshot" or "path". Top-level so
     * json4s reflection can construct it (inner classes need an outer ref).
     */
   private case class Entry(name: String, kind: String, root: String,
       writeMode: String)
 
-  private final class CatalogStore(dir: org.apache.hadoop.fs.Path,
-      conf: org.apache.hadoop.conf.Configuration) {
-    import org.apache.hadoop.fs.Path
-    private val fs = dir.getFileSystem(conf)
-    private implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
+  private implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
 
-    private def toEntries(m: Map[String, Ref]): List[Entry] =
-      m.toList.sortBy(_._1).map {
-        case (n, SnapshotRef(root, wm)) => Entry(n, "snapshot", root, wm)
-        case (n, PathRef(root)) => Entry(n, "path", root, "")
-      }
-    private def ofEntries(es: List[Entry]): Map[String, Ref] =
-      es.map {
-        case Entry(n, "snapshot", root, wm) => n -> SnapshotRef(root, wm)
-        case Entry(n, _, root, _) => n -> PathRef(root)
-      }.toMap
-
-    private def versionPath(v: Long) = new Path(dir, f"v$v%08d.json")
-
-    private def versions(): Seq[Long] =
-      if (!fs.exists(dir)) Nil
-      else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-        .filter(n => n.startsWith("v") && n.endsWith(".json"))
-        .map(_.stripPrefix("v").stripSuffix(".json").toLong).sorted
-
-    /** (latest version, its map); (-1, empty) for a fresh catalog. */
-    def load(): (Long, Map[String, Ref]) = versions().lastOption match {
-      case None => (-1L, Map.empty)
-      case Some(v) =>
-        val in = fs.open(versionPath(v))
-        val txt = try {
-          val bs = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, bs, 8192, false)
-          bs.toString("UTF-8")
-        } finally in.close()
-        (v, ofEntries(org.json4s.jackson.Serialization.read[List[Entry]](txt)))
+  private def toEntries(m: Map[String, Ref]): List[Entry] =
+    m.toList.sortBy(_._1).map {
+      case (n, SnapshotRef(root, wm)) => Entry(n, "snapshot", root, wm)
+      case (n, PathRef(root)) => Entry(n, "path", root, "")
     }
+  private def ofEntries(es: List[Entry]): Map[String, Ref] =
+    es.map {
+      case Entry(n, "snapshot", root, wm) => n -> SnapshotRef(root, wm)
+      case Entry(n, _, root, _) => n -> PathRef(root)
+    }.toMap
 
-    /** CAS publish of version `v` — create-exclusive, false on conflict. */
-    private def publish(v: Long, m: Map[String, Ref]): Boolean = {
-      fs.mkdirs(dir)
-      val dst = versionPath(v)
-      if (fs.exists(dst)) return false
-      val tmp = new Path(dir, s".tmp-${java.util.UUID.randomUUID().toString}")
-      val out = fs.create(tmp, false)
-      try out.write(org.json4s.jackson.Serialization.write(toEntries(m))
-        .getBytes("UTF-8")) finally out.close()
-      val ok =
-        if (dst.toUri.getScheme == null || dst.toUri.getScheme == "file") {
-          val lp = java.nio.file.Paths.get(dst.toUri.getPath)
-          val tp = java.nio.file.Paths.get(fs.makeQualified(tmp).toUri.getPath)
-          try { java.nio.file.Files.createLink(lp, tp); true }
-          catch { case _: java.nio.file.FileAlreadyExistsException => false }
-        } else {
-          try {
-            org.apache.hadoop.fs.FileContext.getFileContext(dst.toUri, conf)
-              .rename(fs.makeQualified(tmp), fs.makeQualified(dst))
-            true
-          } catch {
-            case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-          }
-        }
-      fs.delete(tmp, false)
-      ok
-    }
-
-    /** Apply `op` to the durable map, CAS-retrying against fresh state. */
-    def mutate(op: Map[String, Ref] => Map[String, Ref]): Unit = {
-      var done = false
-      var tries = 0
-      while (!done) {
-        val (v, cur) = load()
-        val next = op(cur)
-        done = (next == cur) || publish(v + 1, next)
-        tries += 1
-        require(tries <= 50, s"catalog CAS did not converge at $dir")
-      }
-    }
-  }
-
-  @volatile private var store: Option[CatalogStore] = None
-  @volatile private var storeDir: String = ""
-
-  private def persist(op: Map[String, Ref] => Map[String, Ref]): Unit =
-    store.foreach(_.mutate(op))
+  /** Durable registrations, so names survive a JVM restart — the role of
+    * the reference's metastore DB (ref standalone-metastore/src/main/thrift/
+    * hive_metastore.thrift:644: tables are durable name→location rows). The
+    * full name→ref map is one [[CasJsonStore]] document per change,
+    * directly under the configured directory.
+    */
+  private[graft] val durable = new CasJsonStore.Attached[Map[String, Ref]](
+    this, "", Map.empty,
+    m => org.json4s.jackson.Serialization.write(toEntries(m)),
+    txt => ofEntries(org.json4s.jackson.Serialization.read[List[Entry]](txt)))
 
   /** Install the persisted catalog when `spark.graft.catalog` is set: load
     * durable registrations (in-memory entries win on name conflict — they
     * are newer) and write-through every register/drop from here on.
-    * Idempotent per path; called from the extensions hook and
-    * [[graft.Engine.configure]], so both deployment surfaces get durable
+    * Idempotent per path; called from both SQL entries' install list
+    * ([[graft.Engine.install]]), so both deployment surfaces get durable
     * names without an explicit call.
     */
-  def bootstrap(spark: SparkSession): Unit = {
-    val dir = spark.conf.getOption(CatalogConfKey).getOrElse("")
-    if (dir.isEmpty || dir == storeDir) return
-    synchronized {
-      if (dir == storeDir) return
-      val s = new CatalogStore(new org.apache.hadoop.fs.Path(dir),
-        spark.sparkContext.hadoopConfiguration)
-      s.load()._2.foreach { case (n, ref) =>
-        if (!registry.contains(n)) registry.put(n, ref)
-      }
-      store = Some(s)
-      storeDir = dir
-    }
-  }
+  def bootstrap(spark: SparkSession): Unit =
+    durable.attach(spark)(_.load()._2.foreach { case (n, ref) =>
+      if (!registry.contains(n)) registry.put(n, ref)
+    })
 
   /** Test hook: forget all in-memory state (registrations and the persisted
     * store), as a JVM restart would.
     */
   private[graft] def resetForTest(): Unit = synchronized {
-    registry.clear(); store = None; storeDir = ""
+    registry.clear(); durable.detach()
   }
 
   /** The read plan for a reference — built fresh so the latest snapshot

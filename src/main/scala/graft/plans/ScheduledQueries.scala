@@ -97,14 +97,14 @@ object ScheduledQueries {
     val r = regFor(spark)
     Option(r.get(name)).foreach(s => r.put(name, s.copy(enabled = enabled)))
     if (stmtsFor(spark).containsKey(name))
-      persist(_.map(e => if (e.name == name) e.copy(enabled = enabled) else e))
+      durable.mutate(_.map(e => if (e.name == name) e.copy(enabled = enabled) else e))
   }
 
   /** DROP SCHEDULED QUERY name. */
   def drop(spark: SparkSession, name: String): Unit = {
     regFor(spark).remove(name)
     if (stmtsFor(spark).remove(name) != null)
-      persist(_.filterNot(_.name == name))
+      durable.mutate(_.filterNot(_.name == name))
   }
 
   def list(spark: SparkSession): Seq[Scheduled] = {
@@ -137,7 +137,7 @@ object ScheduledQueries {
         runAs(spark, s.owner)(sess => s.sink(s.query(sess)))
         r.put(s.name, s.copy(lastRunAt = now))
         if (stmtsFor(spark).containsKey(s.name))
-          persist(_.map(e => if (e.name == s.name) e.copy(lastRunAt = now) else e))
+          durable.mutate(_.map(e => if (e.name == s.name) e.copy(lastRunAt = now) else e))
         Some(s.name)
       } catch {
         case scala.util.control.NonFatal(e) => failures += e; None
@@ -234,7 +234,7 @@ object ScheduledQueries {
         val owner = Authz.currentUser(spark)
         create(spark, name, ms, Some(owner))(s => runner(s, stmt))(force)
         stmtsFor(spark).put(name, stmt.trim)
-        persist(_.filterNot(_.name == name) :+
+        durable.mutate(_.filterNot(_.name == name) :+
           SchedE(name, ms, stmt.trim, enabled = true, Long.MinValue,
             Some(owner)))
         Some(done(s"created scheduled query $name"))
@@ -252,7 +252,7 @@ object ScheduledQueries {
         val now = System.currentTimeMillis()
         r.put(name, s.copy(lastRunAt = now))
         if (stmtsFor(spark).containsKey(name))
-          persist(_.map(e => if (e.name == name) e.copy(lastRunAt = now) else e))
+          durable.mutate(_.map(e => if (e.name == name) e.copy(lastRunAt = now) else e))
         Some(done(s"executed scheduled query $name"))
       case DropR(name) =>
         admin("DROP SCHEDULED QUERY")
@@ -289,29 +289,15 @@ object ScheduledQueries {
 
   private implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
 
-  @volatile private var store: Option[CasJsonStore[List[SchedE]]] = None
-  @volatile private var storeDir: String = ""
-
-  private def persist(op: List[SchedE] => List[SchedE]): Unit =
-    store.foreach(_.mutate(op))
+  private val durable = new CasJsonStore.Attached[List[SchedE]](
+    this, "_scheduled", Nil,
+    l => org.json4s.jackson.Serialization.write(l),
+    txt => org.json4s.jackson.Serialization.read[List[SchedE]](txt))
 
   /** Install the persisted registry when `spark.graft.catalog` is set.
     * Idempotent per path.
     */
-  def bootstrap(spark: SparkSession): Unit = {
-    val dir = spark.conf.getOption(NamedTables.CatalogConfKey).getOrElse("")
-    if (dir.isEmpty || dir == storeDir) return
-    synchronized {
-      if (dir == storeDir) return
-      store = Some(new CasJsonStore[List[SchedE]](
-        new org.apache.hadoop.fs.Path(dir, "_scheduled"),
-        spark.sparkContext.hadoopConfiguration,
-        Nil,
-        l => org.json4s.jackson.Serialization.write(l),
-        txt => org.json4s.jackson.Serialization.read[List[SchedE]](txt)))
-      storeDir = dir
-    }
-  }
+  def bootstrap(spark: SparkSession): Unit = durable.attach(spark)(_ => ())
 
   /** Rebuild this session's registry entries from the durable store
     * (statement text re-binds to the session's front-door `runner`).
@@ -319,7 +305,7 @@ object ScheduledQueries {
     */
   private def hydrate(spark: SparkSession,
       runner: (SparkSession, String) => DataFrame): Unit =
-    store.foreach { s =>
+    durable.get.foreach { s =>
       val r = regFor(spark)
       val stmts = stmtsFor(spark)
       s.load()._2.foreach { e =>
@@ -333,9 +319,7 @@ object ScheduledQueries {
     }
 
   /** Test hook: detach the durable store, as a JVM restart would. */
-  private[graft] def resetStoreForTest(): Unit = synchronized {
-    store = None; storeDir = ""
-  }
+  private[graft] def resetStoreForTest(): Unit = durable.detach()
 
   /** Test hook: forget one session's in-memory registry (hydration then
     * rebuilds it from the durable store), as a fresh session would see.

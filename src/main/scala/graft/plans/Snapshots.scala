@@ -299,7 +299,7 @@ object Snapshots {
     // ------------------------------------------------------------------ log
 
     private[plans] def manifestPath(v: Long): Path =
-      new Path(logPath, f"v$v%08d.json")
+      CasJsonStore.versionPath(logPath, v)
 
     private[plans] def writeManifestJson(m: Manifest): String =
       org.json4s.jackson.Serialization.write(m)
@@ -324,12 +324,7 @@ object Snapshots {
     }
 
     private[plans] def versions(): Seq[Long] =
-      if (!fs.exists(logPath)) Nil
-      else fs.listStatus(logPath).toSeq
-        .map(_.getPath.getName)
-        .filter(n => n.startsWith("v") && n.endsWith(".json"))
-        .map(n => n.stripPrefix("v").stripSuffix(".json").toLong)
-        .sorted
+      CasJsonStore.versions(fs, logPath)
 
     /** Branch commits publish into the SAME version-slot sequence (one CAS
       * namespace — no cross-prefix collisions) but carry [[RefMetaKey]] in
@@ -505,38 +500,13 @@ object Snapshots {
       casPublish(toWrite)
     }
 
-    /** Atomic create-exclusive publish of `v{version}.json`. Local
-      * filesystems get a true atomic hard link (link(2) fails with EEXIST);
-      * others use rename-without-overwrite via FileContext, the HDFS-portable
-      * equivalent (atomic, fails if the destination exists).
+    /** Create-exclusive publish of `m` at its version slot — false when the
+      * slot is taken. No strictly-increasing check: a mainline commit may
+      * fill a slot below a branch commit's (see [[nextSlot]]).
       */
-    private[plans] def casPublish(m: Manifest): Boolean = {
-      fs.mkdirs(logPath)
-      val dst = manifestPath(m.version)
-      if (fs.exists(dst)) return false
-      val tmp = new Path(logPath, s".tmp-${UUID.randomUUID().toString}")
-      val out = fs.create(tmp, false)
-      try out.write(writeManifestJson(m).getBytes("UTF-8")) finally out.close()
-      val ok =
-        if (dst.toUri.getScheme == null || dst.toUri.getScheme == "file") {
-          val lp = java.nio.file.Paths.get(dst.toUri.getPath)
-          val tp = java.nio.file.Paths.get(
-            fs.makeQualified(tmp).toUri.getPath)
-          try { java.nio.file.Files.createLink(lp, tp); true }
-          catch { case _: java.nio.file.FileAlreadyExistsException => false }
-        } else {
-          try {
-            org.apache.hadoop.fs.FileContext
-              .getFileContext(dst.toUri, spark.sparkContext.hadoopConfiguration)
-              .rename(fs.makeQualified(tmp), fs.makeQualified(dst))
-            true
-          } catch {
-            case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-          }
-        }
-      fs.delete(tmp, false)
-      ok
-    }
+    private[plans] def casPublish(m: Manifest): Boolean =
+      CasJsonStore.publish(fs, logPath, m.version,
+        writeManifestJson(m).getBytes("UTF-8"))
 
     // ----------------------------------------------------------------- data
 

@@ -83,7 +83,7 @@ object Workload {
 
   private def mutate(op: WState => WState): Unit = synchronized {
     state = op(state)
-    store.foreach(_.mutate(op))
+    durable.mutate(op)
   }
 
   private def norm(s: String): String = s.toLowerCase(Locale.ROOT)
@@ -177,7 +177,7 @@ object Workload {
     */
   def clearAll(): Unit = synchronized {
     state = WState(); movedTo.clear(); admission.clear()
-    store = None; storeDir = ""
+    durable.detach()
   }
 
   // ------------------------------------------------------- durable store
@@ -225,42 +225,30 @@ object Workload {
     }.toMap,
     d.active)
 
-  @volatile private var store: Option[CasJsonStore[WState]] = None
-  @volatile private var storeDir: String = ""
+  private[graft] val durable = new CasJsonStore.Attached[WState](
+    this, "_workload", WState(),
+    st => org.json4s.jackson.Serialization.write(toDoc(st)),
+    txt => ofDoc(org.json4s.jackson.Serialization.read[WDoc](txt)))
 
   /** Install the persisted WLM database when `spark.graft.catalog` is set
     * (the same conf that makes [[NamedTables]] and [[Authz]] durable):
     * durable state loads under the in-memory state (memory wins per plan —
     * it is newer), and every mutation from here on writes through.
-    * Idempotent per path; called from [[graft.Engine.configure]].
+    * Idempotent per path; called from [[graft.Engine.install]].
     */
-  def bootstrap(spark: SparkSession): Unit = {
-    val dir = spark.conf.getOption(NamedTables.CatalogConfKey).getOrElse("")
-    if (dir.isEmpty || dir == storeDir) return
-    synchronized {
-      if (dir == storeDir) return
-      val s = new CasJsonStore[WState](
-        new org.apache.hadoop.fs.Path(dir, "_workload"),
-        spark.sparkContext.hadoopConfiguration,
-        WState(),
-        st => org.json4s.jackson.Serialization.write(toDoc(st)),
-        txt => ofDoc(org.json4s.jackson.Serialization.read[WDoc](txt)))
-      val durable = s.load()._2
-      val memPlans = state.plans
-      val memActive = state.active
-      state = WState(durable.plans ++ memPlans,
-        memActive.orElse(durable.active))
-      // persist pre-bootstrap (memory-only) plans immediately: [[mutate]]
-      // replays each later op against the DURABLE state, where a plan that
-      // never reached the store would make activate/createPool/createTrigger
-      // hit the op's None-guard and silently persist nothing — the plan
-      // (and all its edits) would then vanish on restart.
-      if (memPlans.nonEmpty || memActive.nonEmpty)
-        s.mutate(st => WState(st.plans ++ memPlans,
-          memActive.orElse(st.active)))
-      store = Some(s)
-      storeDir = dir
-    }
+  def bootstrap(spark: SparkSession): Unit = durable.attach(spark) { s =>
+    val d = s.load()._2
+    val memPlans = state.plans
+    val memActive = state.active
+    state = WState(d.plans ++ memPlans, memActive.orElse(d.active))
+    // persist pre-bootstrap (memory-only) plans immediately: [[mutate]]
+    // replays each later op against the DURABLE state, where a plan that
+    // never reached the store would make activate/createPool/createTrigger
+    // hit the op's None-guard and silently persist nothing — the plan
+    // (and all its edits) would then vanish on restart.
+    if (memPlans.nonEmpty || memActive.nonEmpty)
+      s.mutate(st => WState(st.plans ++ memPlans,
+        memActive.orElse(st.active)))
   }
 
   /** Compile a plan to the fair-scheduler allocation file a real cluster

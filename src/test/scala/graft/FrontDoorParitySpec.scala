@@ -4,7 +4,7 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 
-import graft.plans.{FrontDoor, MaterializedViews, NamedTables, SketchRewrite, Snapshots}
+import graft.plans.{Authz, FrontDoor, MaterializedViews, NamedTables, SketchRewrite, Snapshots, Workload}
 
 /** The two SQL entries run the one stage registry ([[FrontDoor]]): for
   * every stage the `spark.sql.extensions` entry runs, one statement whose
@@ -111,6 +111,21 @@ class FrontDoorParitySpec extends SparkSpec {
     val v = ext.sql("SELECT field('b', 'a', 'b') AS f, mask_first_n('Abcd1234') AS m")
       .head()
     assert(v.getInt(0) === 2 && v.getString(1) === "Xxxx1234")
+    // both entries attach the same durable registries to spark.graft.catalog
+    val registries = Seq(NamedTables.durable, Authz.durable, Workload.durable)
+    def attachedBy(entry: SparkSession => Unit, base: SparkSession) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_parity_cat_")
+        .toString
+      val s = base.newSession()
+      s.conf.set(NamedTables.CatalogConfKey, dir)
+      entry(s)
+      registries.map(_.dir == dir)
+    }
+    try {
+      val viaEngine = attachedBy(Engine.configure(_), spark)
+      assert(viaEngine === Seq(true, true, true))
+      assert(attachedBy(_.sql("SELECT 1").collect(), ext) === viaEngine)
+    } finally registries.foreach(_.detach())
   }
 
   test("named and time-travel snapshot reads resolve on both entries") {
