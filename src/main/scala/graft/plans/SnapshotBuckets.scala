@@ -1,7 +1,5 @@
 package graft.plans
 
-import java.util.ConcurrentModificationException
-
 import org.apache.hadoop.fs.Path
 
 import graft.plans.Snapshots.{jsonFormats, BucketConfig, GbCol}
@@ -72,7 +70,7 @@ private[plans] trait SnapshotBucketOps { self: Snapshots.SnapshotTable =>
           if fs.exists(p) =>
         val existing = SidecarJson.read[BucketConfig](fs, p)
         if (!existing.contains(cfg))
-          throw new ConcurrentModificationException(
+          throw new Snapshots.ConcurrentModificationException(
             s"concurrent create at $root declared a different bucket " +
               s"layout: existing=$existing, attempted=$cfg")
     }

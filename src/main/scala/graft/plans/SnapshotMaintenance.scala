@@ -1,11 +1,11 @@
 package graft.plans
 
-import java.util.{ConcurrentModificationException, UUID}
+import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.plans.Snapshots.Manifest
@@ -29,81 +29,93 @@ private[plans] trait SnapshotMaintenanceOps { self: Snapshots.SnapshotTable =>
     * exactly the small-file debris this removes.
     */
   def compact(targetBytes: Long = 128L * 1024 * 1024,
-      minInputFiles: Int = 2, maxRetries: Int = 10): Manifest = {
-    var attempt = 0
-    while (true) {
-      val head = latest()
-      // byte sizes from the manifest when recorded (zero filesystem
-      // calls — at 100 TB a per-file getFileStatus sweep is the
-      // bottleneck); pre-recording manifests fall back to the listing
-      val sized = head.files.map { f =>
-        val rec = head.stats.get(f).map(_.bytes).getOrElse(0L)
-        f -> (if (rec > 0L) rec
-              else fs.getFileStatus(new Path(rootPath, f)).getLen)
-      }
+      minInputFiles: Int = 2, maxRetries: Int = 10): Manifest =
+    commit("compact", maxRetries) { head =>
+      val sized = head.files.map(f => f -> fileBytes(head, f))
       val small = sized.filter(_._2 < targetBytes)
-      if (small.size < minInputFiles) return head
-      val smallSet = small.map(_._1).toSet
-      val nOut = math.max(1, math.ceil(
-        small.map(_._2).sum.toDouble / targetBytes).toInt)
-      // readFiles applies pending MOR deletes, so compaction FOLDS them
-      // into the rewritten files — the compactor's second job
-      val input = readFiles(head.copy(files = head.files.filter(smallSet)))
-      val packed =
-        if (bucketConfig().isDefined)
-          // bucketed tables: stage() itself regroups rows onto their
-          // buckets (one task per bucket) — a repartition here would
-          // just add a second shuffle for stage to undo
-          input
-        else if (head.partitionCols.nonEmpty)
-          // co-locate each partition's rows so partitionBy emits one
-          // file per (partition, output-slot) instead of a file per
-          // (input task x partition)
-          input.repartition(nOut, head.partitionCols.map(col): _*)
-        else input.repartition(nOut)
-      val (staged, stagedStats) = stage(packed, head.partitionCols,
-        head.colMapping)
-      // consolidate the delete list: entries for compacted-away files are
-      // stale; if none survive, readers return to the join-free fast path
-      val keptFiles = head.files.filterNot(smallSet)
-      val newDeletes =
-        if (head.deletes.isEmpty) head.deletes
-        else {
-          val delSchema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("file",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("pos",
-              org.apache.spark.sql.types.LongType)))
-          val dels = spark.read.schema(delSchema)
-            .parquet(head.deletes.map(d => new Path(rootPath, d).toString): _*)
-          val keptDf = spark.createDataFrame(
-            keptFiles.map(org.apache.spark.sql.Row(_)).asJava,
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("__kept",
-                org.apache.spark.sql.types.StringType))))
-          val live = dels.join(keptDf, dels("file") === keptDf("__kept"),
-            "left_semi")
-          if (live.isEmpty) Nil
+      if (small.size < minInputFiles) None
+      else {
+        val smallSet = small.map(_._1).toSet
+        val nOut = outputFiles(small.map(_._2).sum, targetBytes)
+        // readFiles applies pending MOR deletes, so compaction FOLDS them
+        // into the rewritten files — the compactor's second job
+        val input = readFiles(head.copy(files = head.files.filter(smallSet)))
+        val packed =
+          if (bucketConfig().isDefined)
+            // bucketed tables: stage() itself regroups rows onto their
+            // buckets (one task per bucket) — a repartition here would
+            // just add a second shuffle for stage to undo
+            input
+          else if (head.partitionCols.nonEmpty)
+            // co-locate each partition's rows so partitionBy emits one
+            // file per (partition, output-slot) instead of a file per
+            // (input task x partition)
+            input.repartition(nOut, head.partitionCols.map(col): _*)
+          else input.repartition(nOut)
+        val (staged, stagedStats) = stage(packed, head.partitionCols,
+          head.colMapping)
+        // consolidate the delete list: entries for compacted-away files are
+        // stale; if none survive, readers return to the join-free fast path
+        val keptFiles = head.files.filterNot(smallSet)
+        val newDeletes =
+          if (head.deletes.isEmpty) head.deletes
           else {
-            val delDir = s"deletes/${UUID.randomUUID().toString.take(8)}"
-            live.coalesce(1).write.mode("errorifexists")
-              .parquet(new Path(rootPath, delDir).toString)
-            listParquet(new Path(rootPath, delDir)).map(relativize)
+            val dels = readDeletes(head.deletes)
+            val keptDf = spark.createDataFrame(
+              keptFiles.map(org.apache.spark.sql.Row(_)).asJava,
+              org.apache.spark.sql.types.StructType(Seq(
+                org.apache.spark.sql.types.StructField("__kept",
+                  org.apache.spark.sql.types.StringType))))
+            val live = dels.join(keptDf, dels("file") === keptDf("__kept"),
+              "left_semi")
+            if (live.isEmpty) Nil else writeDeletes(live.coalesce(1))
           }
-        }
-      val m = Manifest(nextSlot(head), head.version,
-        System.currentTimeMillis(), "compact", head.partitionCols,
-        head.schemaJson, keptFiles ++ staged,
-        (head.stats -- smallSet) ++ stagedStats, Map.empty, newDeletes,
-        colMapping = head.colMapping,
-        droppedPhysical = head.droppedPhysical)
-      if (publish(head, m)) return m
-      attempt += 1
-      if (attempt > maxRetries)
-        throw new ConcurrentModificationException(
-          s"compact at $root lost the commit race $attempt times — giving up")
+        Some(head.copy(files = keptFiles ++ staged,
+          stats = (head.stats -- smallSet) ++ stagedStats, deletes = newDeletes))
+      }
     }
-    sys.error("unreachable")
+
+  /** A data file's byte size: recorded in the manifest when known (zero
+    * filesystem calls — at 100 TB a per-file getFileStatus sweep is the
+    * bottleneck), else from the filesystem (manifests written before sizes
+    * were recorded).
+    */
+  private def fileBytes(m: Manifest, f: String): Long = {
+    val rec = m.stats.get(f).map(_.bytes).getOrElse(0L)
+    if (rec > 0L) rec else fs.getFileStatus(new Path(rootPath, f)).getLen
+  }
+
+  /** Output file count for rewriting `bytes` into ~`targetBytes` files. */
+  private def outputFiles(bytes: Long, targetBytes: Long): Int =
+    math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
+
+  /** Whole-table layout rewrite shared by [[clusterBy]] and [[zOrderBy]]:
+    * `order(input, nOut)` lays the current rows (MOR deletes folded in)
+    * out over `nOut` output files; the commit replaces every file and
+    * empties the delete list. `what` names the keys in refusals.
+    */
+  private def relayout(action: String, what: String, cols: Seq[String],
+      targetBytes: Long, maxRetries: Int)(
+      order: (DataFrame, Int) => DataFrame): Manifest = {
+    val head0 = latest()
+    val bad = cols.toSet.intersect(head0.partitionCols.toSet)
+    require(bad.isEmpty,
+      s"$what keys cannot be partition columns: ${bad.mkString(", ")}")
+    val missing = cols.filterNot(schemaOf(head0.schemaJson).fieldNames.contains)
+    require(missing.isEmpty, s"unknown $what columns: ${missing.mkString(", ")}")
+    commit(action, maxRetries) { head =>
+      if (head.files.isEmpty) None
+      else {
+        val nOut = outputFiles(head.files.map(fileBytes(head, _)).sum,
+          targetBytes)
+        // preserveLayout: on a bucketed table the range layout survives and
+        // each range-task's file splits per bucket dir — files then hold a
+        // (key range x bucket) cell, prunable on both axes
+        val (staged, stagedStats) = stage(order(readFiles(head), nOut),
+          head.partitionCols, head.colMapping, preserveLayout = true)
+        Some(head.copy(files = staged, stats = stagedStats, deletes = Nil))
+      }
+    }
   }
 
   /** Data clustering: rewrites the table range-partitioned and sorted on
@@ -116,46 +128,12 @@ private[plans] trait SnapshotMaintenanceOps { self: Snapshots.SnapshotTable =>
     * like compaction — and folds pending MOR deletes in.
     */
   def clusterBy(cols: Seq[String], targetBytes: Long = 128L * 1024 * 1024,
-      maxRetries: Int = 10): Manifest = {
-    val head0 = latest()
-    val bad = cols.toSet.intersect(head0.partitionCols.toSet)
-    require(bad.isEmpty,
-      s"cluster keys cannot be partition columns: ${bad.mkString(", ")}")
-    val schema = schemaOf(head0.schemaJson)
-    val missing = cols.filterNot(schema.fieldNames.contains)
-    require(missing.isEmpty, s"unknown cluster columns: ${missing.mkString(", ")}")
-    var attempt = 0
-    while (true) {
-      val head = latest()
-      if (head.files.isEmpty) return head
-      val totalBytes = head.files.map { f =>
-        val rec = head.stats.get(f).map(_.bytes).getOrElse(0L)
-        if (rec > 0L) rec
-        else fs.getFileStatus(new Path(rootPath, f)).getLen
-      }.sum
-      val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-      val input = readFiles(head) // MOR deletes fold in
-      val clustered = input
+      maxRetries: Int = 10): Manifest =
+    relayout("cluster", "cluster", cols, targetBytes, maxRetries) {
+      (input, nOut) => input
         .repartitionByRange(nOut, cols.map(col): _*)
         .sortWithinPartitions(cols.map(col): _*)
-      // preserveLayout: on a bucketed table the range layout survives and
-      // each range-task's file splits per bucket dir — files then hold a
-      // (cluster-key range x bucket) cell, prunable on both axes
-      val (staged, stagedStats) = stage(clustered, head.partitionCols,
-        head.colMapping, preserveLayout = true)
-      val m = Manifest(nextSlot(head), head.version,
-        System.currentTimeMillis(), "cluster", head.partitionCols,
-        head.schemaJson, staged, stagedStats, Map.empty, Nil,
-        colMapping = head.colMapping,
-        droppedPhysical = head.droppedPhysical)
-      if (publish(head, m)) return m
-      attempt += 1
-      if (attempt > maxRetries)
-        throw new ConcurrentModificationException(
-          s"cluster at $root lost the commit race $attempt times — giving up")
     }
-    sys.error("unreachable")
-  }
 
   /** Multi-dimensional clustering — the OPTIMIZE ... ZORDER BY analog
     * (public design: Delta Z-ordering; the Morton-curve literature).
@@ -179,65 +157,36 @@ private[plans] trait SnapshotMaintenanceOps { self: Snapshots.SnapshotTable =>
     require(cols.size >= 2,
       "zOrderBy needs >= 2 columns (use clusterBy for one)")
     require(cols.size * bits <= 62, s"${cols.size} cols x $bits bits overflows")
-    val head0 = latest()
-    val bad = cols.toSet.intersect(head0.partitionCols.toSet)
-    require(bad.isEmpty,
-      s"z-order keys cannot be partition columns: ${bad.mkString(", ")}")
-    val schema = schemaOf(head0.schemaJson)
-    val missing = cols.filterNot(schema.fieldNames.contains)
-    require(missing.isEmpty, s"unknown z-order columns: ${missing.mkString(", ")}")
     val nBuckets = 1 << bits
-    var attempt = 0
-    while (true) {
-      val head = latest()
-      if (head.files.isEmpty) return head
-      val totalBytes = head.files.map { f =>
-        val rec = head.stats.get(f).map(_.bytes).getOrElse(0L)
-        if (rec > 0L) rec
-        else fs.getFileStatus(new Path(rootPath, f)).getLen
-      }.sum
-      val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-      val input = readFiles(head) // MOR deletes fold in
-      // per-column quantile boundaries (2^bits - 1 cuts); constant
-      // columns degenerate to bucket 0, which is still a valid curve
-      val probs = (1 until nBuckets).map(_.toDouble / nBuckets).toArray
-      val numeric = cols.map(c => col(c).cast("double").as(c))
-      val bounds = input.select(numeric: _*).stat
-        .approxQuantile(cols.toArray, probs, 0.01)
-      def bucketOf(c: String, bs: Array[Double]): Column = {
-        val arr = array(bs.distinct.sorted.map(lit(_)).toIndexedSeq: _*)
-        // count boundaries strictly below the value: one pass over the
-        // broadcast literal array, fully codegen'd; NULL -> bucket 0
-        aggregate(arr, lit(0),
-          (acc, b) => acc + when(col(c).cast("double") > b, 1).otherwise(0))
-      }
-      val zcol = cols.zipWithIndex.map { case (c, ci) =>
-        val bucket = bucketOf(c, bounds(ci))
-        (0 until bits).map { bit =>
-          // bit `bit` of this column lands at interleaved position
-          // bit * ncols + ci of the z-value
-          shiftleft(shiftright(bucket, bit).bitwiseAND(lit(1)),
-            bit * cols.size + ci).cast("long")
+    relayout("zorder", "z-order", cols, targetBytes, maxRetries) {
+      (input, nOut) =>
+        // per-column quantile boundaries (2^bits - 1 cuts); constant
+        // columns degenerate to bucket 0, which is still a valid curve
+        val probs = (1 until nBuckets).map(_.toDouble / nBuckets).toArray
+        val numeric = cols.map(c => col(c).cast("double").as(c))
+        val bounds = input.select(numeric: _*).stat
+          .approxQuantile(cols.toArray, probs, 0.01)
+        def bucketOf(c: String, bs: Array[Double]): Column = {
+          val arr = array(bs.distinct.sorted.map(lit(_)).toIndexedSeq: _*)
+          // count boundaries strictly below the value: one pass over the
+          // broadcast literal array, fully codegen'd; NULL -> bucket 0
+          aggregate(arr, lit(0),
+            (acc, b) => acc + when(col(c).cast("double") > b, 1).otherwise(0))
+        }
+        val zcol = cols.zipWithIndex.map { case (c, ci) =>
+          val bucket = bucketOf(c, bounds(ci))
+          (0 until bits).map { bit =>
+            // bit `bit` of this column lands at interleaved position
+            // bit * ncols + ci of the z-value
+            shiftleft(shiftright(bucket, bit).bitwiseAND(lit(1)),
+              bit * cols.size + ci).cast("long")
+          }.reduce(_.bitwiseOR(_))
         }.reduce(_.bitwiseOR(_))
-      }.reduce(_.bitwiseOR(_))
-      val ordered = input.withColumn("__z", zcol)
-        .repartitionByRange(nOut, col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-      val (staged, stagedStats) = stage(ordered, head.partitionCols,
-        head.colMapping, preserveLayout = true)
-      val m = Manifest(nextSlot(head), head.version,
-        System.currentTimeMillis(), "zorder", head.partitionCols,
-        head.schemaJson, staged, stagedStats, Map.empty, Nil,
-        colMapping = head.colMapping,
-        droppedPhysical = head.droppedPhysical)
-      if (publish(head, m)) return m
-      attempt += 1
-      if (attempt > maxRetries)
-        throw new ConcurrentModificationException(
-          s"zorder at $root lost the commit race $attempt times — giving up")
+        input.withColumn("__z", zcol)
+          .repartitionByRange(nOut, col("__z"))
+          .sortWithinPartitions("__z")
+          .drop("__z")
     }
-    sys.error("unreachable")
   }
 
   // --------------------------------------------------------------- vacuum

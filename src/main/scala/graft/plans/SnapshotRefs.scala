@@ -1,12 +1,9 @@
 package graft.plans
 
-import java.util.ConcurrentModificationException
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{coalesce, col, lit, when}
 
-import graft.plans.Snapshots.{jsonFormats, FileStat, Manifest, RefMetaKey, RefRow, SnapshotRef}
+import graft.plans.Snapshots.{jsonFormats, Branch, Manifest, RefRow, SnapshotRef}
 
 /** Branch/tag refs for [[Snapshots.SnapshotTable]] — split out of
   * Snapshots.scala purely for file size; every member runs as part of the
@@ -166,71 +163,18 @@ private[plans] trait SnapshotRefOps { self: Snapshots.SnapshotTable =>
   /** Read the state a branch or tag points at (time travel by name). */
   def readRef(name: String): DataFrame = readFiles(refHead(name))
 
-  /** Append onto a BRANCH head: publishes into the shared slot sequence
-    * marked with [[RefMetaKey]] (invisible to the mainline), then CAS-
-    * bumps the ref. Concurrent branch appends serialize on the ref: a
-    * loser's published manifest is simply unreachable (vacuum reclaims
-    * it) and the append retries on the fresh branch head.
+  /** Append onto a BRANCH head — [[Snapshots.SnapshotTable.append]]
+    * committed on the branch line (see [[Snapshots.Line]]): invisible to
+    * the mainline, serialized with other branch writers on the ref.
     */
   def appendToBranch(branch: String, df: DataFrame,
-      maxRetries: Int = 10): Manifest = {
-    val r0 = refs().getOrElse(branch,
-      throw new IllegalArgumentException(s"no branch $branch on $root"))
-    require(r0.kind == "branch",
-      s"$branch on $root is a tag — tags are immutable")
-    val head0 = resolve(readManifest(manifestPath(r0.version)))
-    require(df.schema.fieldNames.sorted.sameElements(
-      schemaOf(head0.schemaJson).fieldNames.sorted),
-      "append schema must match table schema")
-    val (staged, stagedStats) = stage(
-      validateConstraints(conform(df, schemaOf(head0.schemaJson)), "append"),
-      head0.partitionCols, head0.colMapping)
-    var attempt = 0
-    while (true) {
-      val r = refs().get(branch) match {
-        case Some(cur) if cur.kind == "branch" => cur
-        case _ => throw new ConcurrentModificationException(
-          s"branch $branch on $root vanished mid-append")
-      }
-      val head = resolve(readManifest(manifestPath(r.version)))
-      if (head.colMapping != head0.colMapping)
-        throw new ConcurrentModificationException(
-          s"append to branch $branch at $root raced a column rename — " +
-            "retry the append")
-      val m = Manifest(nextBranchSlot(), head.version,
-        System.currentTimeMillis(), "append", head.partitionCols,
-        head.schemaJson, head.files ++ staged, head.stats ++ stagedStats,
-        Map(RefMetaKey -> branch), head.deletes,
-        colMapping = head.colMapping,
-        droppedPhysical = head.droppedPhysical)
-      if (publish(head, m)) {
-        var took = false
-        refsStore.mutate { rm =>
-          rm.get(branch) match {
-            case Some(cur) if cur.kind == "branch" &&
-                cur.version == r.version =>
-              took = true; rm + (branch ->
-                cur.copy(version = m.version))
-            case _ => took = false; rm
-          }
-        }
-        if (took) return m
-        // ref moved between our head read and bump: the manifest just
-        // published is unreachable — retry against the fresh head
-      }
-      attempt += 1
-      if (attempt > maxRetries)
-        throw new ConcurrentModificationException(
-          s"append to branch $branch at $root lost the commit race " +
-            s"$attempt times — giving up")
-    }
-    sys.error("unreachable")
-  }
+      maxRetries: Int = 10): Manifest =
+    appendUnless(df, maxRetries, Map.empty, _ => false, Branch(branch))
 
   /** The branch's current head manifest, refusing tags — the validation
-    * gate every branch-addressed DML verb passes through.
+    * gate every branch-addressed verb passes through.
     */
-  private def branchHead(branch: String): Manifest = {
+  private[plans] def branchHead(branch: String): Manifest = {
     val r = refs().getOrElse(branch,
       throw new IllegalArgumentException(s"no branch $branch on $root"))
     require(r.kind == "branch",
@@ -238,92 +182,28 @@ private[plans] trait SnapshotRefOps { self: Snapshots.SnapshotTable =>
     resolve(readManifest(manifestPath(r.version)))
   }
 
-  /** Generic BRANCH commit: reads the branch head, lets `body` derive the
-    * next content (files, stats, deletes; None = predicate matched nothing,
-    * no-op), publishes under a branch slot tagged with [[RefMetaKey]]
-    * (invisible to the mainline), then CAS-bumps the ref —
-    * [[appendToBranch]]'s serialization protocol, shared by the branch
-    * UPDATE/DELETE/MERGE verbs. A lost ref race replays `body` against the
-    * fresh branch head, so branch DML is write-serializable exactly like
-    * mainline COW.
+  /** CAS-bump `branch` from version `from` to `to`; false when the ref
+    * moved or vanished since the commit read its head.
     */
-  private def branchCommit(branch: String, action: String, maxRetries: Int)(
-      body: Manifest => Option[(Seq[String], Map[String, FileStat], Seq[String])])
-      : Manifest = {
-    var attempt = 0
-    while (true) {
-      val r = refs().getOrElse(branch,
-        throw new IllegalArgumentException(s"no branch $branch on $root"))
-      require(r.kind == "branch",
-        s"$branch on $root is a tag — tags are immutable")
-      val head = resolve(readManifest(manifestPath(r.version)))
-      body(head) match {
-        case None => return head // nothing matched — no-op
-        case Some((files, stats, deletes)) =>
-          val m = Manifest(nextBranchSlot(), head.version,
-            System.currentTimeMillis(), action, head.partitionCols,
-            head.schemaJson, files, stats, Map(RefMetaKey -> branch), deletes,
-            colMapping = head.colMapping,
-            droppedPhysical = head.droppedPhysical)
-          if (publish(head, m)) {
-            var took = false
-            refsStore.mutate { rm =>
-              rm.get(branch) match {
-                case Some(cur) if cur.kind == "branch" &&
-                    cur.version == r.version =>
-                  took = true; rm + (branch -> cur.copy(version = m.version))
-                case _ => took = false; rm
-              }
-            }
-            if (took) return m
-            // ref moved between head read and bump: the published manifest
-            // is unreachable (vacuum reclaims it) — replay on the new head
-          }
+  private[plans] def bumpRef(branch: String, from: Long, to: Long): Boolean = {
+    var took = false
+    refsStore.mutate { rm =>
+      rm.get(branch) match {
+        case Some(cur) if cur.kind == "branch" && cur.version == from =>
+          took = true; rm + (branch -> cur.copy(version = to))
+        case _ => took = false; rm
       }
-      attempt += 1
-      if (attempt > maxRetries)
-        throw new ConcurrentModificationException(
-          s"$action on branch $branch at $root lost the commit race " +
-            s"$attempt times — giving up")
     }
-    sys.error("unreachable")
+    took
   }
 
-  /** Copy-on-write rewrite against a BRANCH head — the mainline `cow`
-    * algebra (affected-file discovery over visible rows, post-image
-    * rewrite, untouched files carried over) addressed at the branch.
-    * Branch DML is always COW: the WAP audience is small and short-lived,
-    * so MOR's write-cost trade has nothing to buy here.
-    */
-  private def branchCow(branch: String, action: String, maxRetries: Int)(
-      postImage: DataFrame => DataFrame, predicate: Column): Manifest =
-    branchCommit(branch, action, maxRetries) { head =>
-      val visible = applyDeletes(readFilesMeta(head), head)
-      val affected = visible.filter(predicate)
-        .select(col("__file")).distinct()
-        .collect().map(_.getString(0))
-        .toSet
-      if (affected.isEmpty) None
-      else {
-        val schema = schemaOf(head.schemaJson)
-        val affectedDf = applyDeletes(
-          readFilesMeta(head.copy(files = head.files.filter(affected))), head)
-          .select(schema.fieldNames.map(col): _*)
-        val post =
-          if (action == "delete") postImage(affectedDf)
-          else validateConstraints(postImage(affectedDf), action)
-        val (staged, stagedStats) = stage(post,
-          head.partitionCols, head.colMapping)
-        Some((head.files.filterNot(affected) ++ staged,
-          (head.stats -- affected) ++ stagedStats, head.deletes))
-      }
-    }
+  // Branch DML is always COW: the WAP audience is small and short-lived,
+  // so MOR's write-cost trade has nothing to buy there.
 
   /** DELETE WHERE cond addressed at a BRANCH (`DELETE FROM t.branch_x`). */
   def deleteWhereOnBranch(branch: String, cond: Column,
       maxRetries: Int = 10): Manifest =
-    branchCow(branch, "delete", maxRetries)(
-      df => df.filter(!coalesce(cond, lit(false))), cond)
+    deleteOn(Branch(branch), cond, maxRetries)
 
   /** UPDATE ... SET ... WHERE cond addressed at a BRANCH — same
     * assignment rules as the mainline [[Snapshots.SnapshotTable.updateWhere]]
@@ -331,21 +211,8 @@ private[plans] trait SnapshotRefOps { self: Snapshots.SnapshotTable =>
     * pre-update row).
     */
   def updateWhereOnBranch(branch: String, cond: Column,
-      set: Map[String, Column], maxRetries: Int = 10): Manifest = {
-    val head0 = branchHead(branch)
-    val bad = set.keySet.intersect(head0.partitionCols.toSet)
-    require(bad.isEmpty,
-      s"cannot assign partition columns: ${bad.mkString(", ")}")
-    val unknown = set.keySet.diff(schemaOf(head0.schemaJson).fieldNames.toSet)
-    require(unknown.isEmpty,
-      s"UPDATE assigns nonexistent column(s): ${unknown.mkString(", ")}")
-    branchCow(branch, "update", maxRetries)({ df =>
-      val c = coalesce(cond, lit(false))
-      df.select(df.columns.map(name =>
-        set.get(name).map(e => when(c, e).otherwise(col(name)))
-          .getOrElse(col(name)).as(name)): _*)
-    }, cond)
-  }
+      set: Map[String, Column], maxRetries: Int = 10): Manifest =
+    updateOn(Branch(branch), cond, set, maxRetries)
 
   /** Composite-key multi-arm MERGE addressed at a BRANCH — the mainline
     * [[Snapshots.SnapshotTable.mergeSpec]] algebra (file-granular rewrite,
@@ -354,90 +221,44 @@ private[plans] trait SnapshotRefOps { self: Snapshots.SnapshotTable =>
     */
   def mergeSpecOnBranch(branch: String, source: DataFrame,
       mergeKeys: Seq[(String, String)], spec: MergeEngine.Spec,
-      sourceKeysUnique: Boolean = false, maxRetries: Int = 10): Manifest = {
-    val head0 = branchHead(branch)
-    val setCols = (spec.matched ++ spec.notMatchedBySource)
-      .collect { case MergeEngine.Update(_, s) => s.keySet }.flatten.toSet
-    val bad = setCols.intersect(head0.partitionCols.toSet)
-    require(bad.isEmpty,
-      s"MERGE cannot assign partition columns: ${bad.mkString(", ")}")
-    branchCommit(branch, "merge", maxRetries) { head =>
-      val cols = schemaOf(head.schemaJson).fieldNames.toSeq
-      def postOf(affectedDf: DataFrame): DataFrame =
-        MergeEngine.postImage(affectedDf, source, mergeKeys,
-          cols, spec, sourceKeysUnique)
-      val keys = source.select(mergeKeys.map { case (tk, sk) =>
-        col(sk).as("__s_" + tk) }: _*).distinct()
-      val visible = applyDeletes(readFilesMeta(head), head)
-      val semiCond = mergeKeys.map { case (tk, _) =>
-        visible(tk) === keys("__s_" + tk) }.reduce(_ && _)
-      val affected =
-        if (spec.touchesUnmatchedTargets) head.files.toSet
-        else visible
-          .join(keys, semiCond, "left_semi")
-          .select(col("__file")).distinct()
-          .collect().map(_.getString(0))
-          .toSet
-      val schema = schemaOf(head.schemaJson)
-      if (affected.isEmpty && spec.inserts.isEmpty) None
-      else {
-        val post =
-          if (affected.isEmpty) postOf(readFiles(head.copy(files = Nil)))
-          else postOf(applyDeletes(
-            readFilesMeta(head.copy(files = head.files.filter(affected))),
-            head).select(schema.fieldNames.map(col): _*))
-        val (staged, stagedStats) = stage(
-          validateConstraints(post, "merge"), head.partitionCols,
-          head.colMapping)
-        Some((head.files.filterNot(affected) ++ staged,
-          (head.stats -- affected) ++ stagedStats, head.deletes))
-      }
-    }
-  }
+      sourceKeysUnique: Boolean = false, maxRetries: Int = 10): Manifest =
+    mergeSpecOn(Branch(branch), source, mergeKeys, spec, sourceKeysUnique,
+      maxRetries)
 
   /** ALTER TABLE ... EXECUTE FAST-FORWARD: advance the MAINLINE to the
     * branch head — the publish step of WAP. Requires the current
     * mainline head to be an ancestor of the branch head (nothing
     * committed to main since the fork), else refuses: a fast-forward
-    * never merges or discards mainline commits.
+    * never merges or discards mainline commits. The new mainline manifest
+    * is the branch head's state, parented on (and diffed against) the
+    * branch head.
     */
   def fastForward(branch: String, maxRetries: Int = 10): Manifest = {
-    val r = refs().getOrElse(branch,
-      throw new IllegalArgumentException(s"no branch $branch on $root"))
-    require(r.kind == "branch", s"$branch on $root is a tag")
-    val b = resolve(readManifest(manifestPath(r.version)))
-    var attempt = 0
-    while (true) {
+    val b = branchHead(branch)
+    retrying("fast-forward", maxRetries) { () =>
       val head = latest()
-      if (head.version == b.version) return head // already there
-      // ancestor walk along parent pointers (bounded by log length); a
-      // pruned intermediate manifest (vacuum) breaks the chain — refuse
-      // with the clear error rather than crash on the missing file
-      var v = b.version
-      var found = false
-      while (v >= 0 && !found && fs.exists(manifestPath(v))) {
-        if (v == head.version) found = true
-        else v = readManifest(manifestPath(v)).parent
+      if (head.version == b.version) Some(head) // already there
+      else {
+        // ancestor walk along parent pointers (bounded by log length); a
+        // pruned intermediate manifest (vacuum) breaks the chain — refuse
+        // with the clear error rather than crash on the missing file
+        var v = b.version
+        var found = false
+        while (v >= 0 && !found && fs.exists(manifestPath(v))) {
+          if (v == head.version) found = true
+          else v = readManifest(manifestPath(v)).parent
+        }
+        require(found,
+          s"cannot fast-forward $root to branch $branch: mainline head " +
+            s"${head.version} is not an ancestor of branch head " +
+            s"${b.version} — commits landed on main since the fork (or " +
+            "the fork lineage was vacuumed)")
+        val m = b.copy(version = nextSlot(head), parent = b.version,
+          timestampMs = System.currentTimeMillis(), action = "fast-forward",
+          meta = Map("ff_branch" -> branch, "ff_version" -> b.version.toString))
+        if (publish(b, m)) Some(m) else None
       }
-      require(found,
-        s"cannot fast-forward $root to branch $branch: mainline head " +
-          s"${head.version} is not an ancestor of branch head " +
-          s"${b.version} — commits landed on main since the fork (or " +
-          "the fork lineage was vacuumed)")
-      val m = Manifest(nextSlot(head), b.version,
-        System.currentTimeMillis(), "fast-forward", b.partitionCols,
-        b.schemaJson, b.files, b.stats,
-        Map("ff_branch" -> branch, "ff_version" -> b.version.toString),
-        b.deletes, colMapping = b.colMapping,
-        droppedPhysical = b.droppedPhysical)
-      if (publish(b, m)) return m
-      attempt += 1
-      if (attempt > maxRetries)
-        throw new ConcurrentModificationException(
-          s"fast-forward at $root lost the commit race $attempt times — " +
-            "giving up")
     }
-    sys.error("unreachable")
   }
 
   /** ALTER TABLE ... EXECUTE CHERRY-PICK: re-apply one APPEND-ONLY
@@ -476,14 +297,14 @@ private[plans] trait SnapshotRefOps { self: Snapshots.SnapshotTable =>
       s"cherry-pick of version $v at $root unsupported: only append-only " +
         "commits can be cherry-picked (this one removes or retires files)")
     commit("cherry-pick", maxRetries,
-        Map("cherry_picked" -> v.toString)) { head =>
+        _ => Map("cherry_picked" -> v.toString)) { head =>
       require(schemaOf(head.schemaJson).fieldNames.sorted.sameElements(
         schemaOf(raw.schemaJson).fieldNames.sorted),
         s"cherry-pick of version $v across schema evolution is not supported")
       val fresh = adds.filterNot(head.files.toSet)
       if (fresh.isEmpty) None
-      else Some((head.files ++ fresh,
-        head.stats ++ addStats.view.filterKeys(fresh.toSet).toMap))
+      else Some(head.copy(files = head.files ++ fresh,
+        stats = head.stats ++ addStats.view.filterKeys(fresh.toSet).toMap))
     }
   }
 
@@ -496,23 +317,8 @@ private[plans] trait SnapshotRefOps { self: Snapshots.SnapshotTable =>
     require(fs.exists(p),
       s"version $v does not exist (vacuumed or never committed)")
     val old = resolve(readManifest(p))
-    var attempt = 0
-    while (true) {
-      val head = latest()
-      if (v == head.version) return head
-      val m = Manifest(nextSlot(head), head.version,
-        System.currentTimeMillis(), "set-current-snapshot",
-        old.partitionCols, old.schemaJson, old.files, old.stats,
-        Map("set_version" -> v.toString), old.deletes,
-        colMapping = old.colMapping,
-        droppedPhysical = old.droppedPhysical)
-      if (publish(head, m)) return m
-      attempt += 1
-      if (attempt > maxRetries)
-        throw new ConcurrentModificationException(
-          s"set-current-snapshot at $root lost the commit race " +
-            s"$attempt times — giving up")
-    }
-    sys.error("unreachable")
+    commit("set-current-snapshot", maxRetries,
+        _ => Map("set_version" -> v.toString))(head =>
+      if (v == head.version) None else Some(old))
   }
 }

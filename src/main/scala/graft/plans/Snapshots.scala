@@ -36,8 +36,11 @@ import org.apache.spark.sql.functions._
   * rename-without-overwrite elsewhere — both fail if the version already
   * exists). A loser re-reads the new latest manifest, re-validates, and
   * retries: appends always rebase cleanly; a COW commit whose replaced
-  * files vanished re-plans against the new snapshot; after `maxRetries` it
-  * raises `ConcurrentModificationException`. Readers list the log and read
+  * files vanished re-plans against the new snapshot. Every writer — DML,
+  * schema evolution, branch verbs and maintenance (compact, cluster,
+  * z-order) — runs that loop through one primitive
+  * ([[SnapshotTable.commit]]), so after `maxRetries` lost races every one
+  * raises [[ConcurrentModificationException]]. Readers list the log and read
   * one manifest's files — they never block writers and always see a
   * complete committed version (snapshot isolation).
   *
@@ -218,6 +221,21 @@ object Snapshots {
     */
   private[plans] val RefMetaKey = "graft.ref"
 
+  /** The line a commit lands on (see [[SnapshotTable.commit]]).
+    * [[Mainline]]: the head is `latest()`, the slot is `nextSlot(head)`.
+    * [[Branch]]: the head is the branch ref's head (tags and a vanished ref
+    * refuse), the slot is past the global max (`nextBranchSlot()`), the
+    * meta gains [[RefMetaKey]] (invisible to the mainline), and after the
+    * publish the ref is CAS-bumped from the head the commit was planned
+    * on. Concurrent branch writers serialize on that bump: a lost bump
+    * leaves the published manifest unreachable (vacuum reclaims it) and
+    * counts as a lost race, so the commit replays against the fresh branch
+    * head — branch DML is write-serializable exactly like mainline DML.
+    */
+  private[plans] sealed trait Line
+  private[plans] case object Mainline extends Line
+  private[plans] final case class Branch(name: String) extends Line
+
   /** Per-session reentrant pin of
     * `spark.sql.sources.bucketing.autoBucketedScan.enabled=false` for the
     * duration of bucketed staged writes. A naive save/set/restore races
@@ -371,7 +389,6 @@ object Snapshots {
     private[plans] def lineage(): Map[Long, Long] =
       versions().map(v => v -> readManifest(manifestPath(v)).parent).toMap
 
-    /** Latest committed manifest (resolved to full form). */
     /** Committed MAINLINE version numbers, ascending ([[Replication]]
       * walks them; branch commits are not part of the replicated lineage
       * until fast-forwarded into the mainline).
@@ -388,6 +405,7 @@ object Snapshots {
     private[plans] def rowsOf(m: Manifest, files: Seq[String]): DataFrame =
       readFiles(m.copy(files = files))
 
+    /** Latest committed manifest (resolved to full form). */
     def latest(): Manifest = {
       val vs = versions()
       require(vs.nonEmpty, s"not a snapshot table (no _graft_log): $root")
@@ -904,14 +922,6 @@ object Snapshots {
           col("__file") :+ col("__pos"): _*)
     }
 
-    /** Scan over the manifest's files through [[SnapshotFileIndex]]. The
-      * relation's columns are the PHYSICAL parquet names (identical to the
-      * logical ones unless a RENAME COLUMN committed a mapping); callers
-      * alias them back to logical. Filters pushed through the alias arrive
-      * here named physically — matching both the file-level stats (recorded
-      * under physical names at write time) and the parquet footers.
-      * Partition columns never rename, so the partition schema is shared.
-      */
     /** The partition spec `f` was WRITTEN under — the ordered keys of its
       * own `k=v` path segments (bucket staging dirs excluded). After
       * `SET PARTITION SPEC` a manifest's files span specs; each file's
@@ -970,6 +980,14 @@ object Snapshots {
       }
     }
 
+    /** Scan over the manifest's files through [[SnapshotFileIndex]]. The
+      * relation's columns are the PHYSICAL parquet names (identical to the
+      * logical ones unless a RENAME COLUMN committed a mapping); callers
+      * alias them back to logical. Filters pushed through the alias arrive
+      * here named physically — matching both the file-level stats (recorded
+      * under physical names at write time) and the parquet footers.
+      * Partition columns never rename, so the partition schema is shared.
+      */
     private def scanRelation(m: Manifest,
         schema: org.apache.spark.sql.types.StructType,
         isStreaming: Boolean = false): DataFrame = {
@@ -1064,17 +1082,29 @@ object Snapshots {
     private[plans] def applyDeletes(withMeta: DataFrame, m: Manifest): DataFrame =
       if (m.deletes.isEmpty) withMeta
       else {
-        val delSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("file",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("pos",
-            org.apache.spark.sql.types.LongType)))
-        val dels = spark.read.schema(delSchema)
-          .parquet(m.deletes.map(d => new Path(rootPath, d).toString): _*)
+        val dels = readDeletes(m.deletes)
         withMeta.join(dels,
           withMeta("__file") === dels("file") && withMeta("__pos") === dels("pos"),
           "left_anti")
       }
+
+    /** The (file, pos) entries of merge-on-read delete sidecars. */
+    private[plans] def readDeletes(sidecars: Seq[String]): DataFrame = {
+      import org.apache.spark.sql.types._
+      spark.read.schema(StructType(Seq(StructField("file", StringType),
+          StructField("pos", LongType))))
+        .parquet(sidecars.map(d => new Path(rootPath, d).toString): _*)
+    }
+
+    /** Writes `entries` (columns `file`, `pos`) as a new merge-on-read
+      * delete sidecar under deletes/<uuid>/ and returns its table-relative
+      * files (none when `entries` wrote no file).
+      */
+    private[plans] def writeDeletes(entries: DataFrame): Seq[String] = {
+      val dir = new Path(rootPath, s"deletes/${UUID.randomUUID().toString.take(8)}")
+      entries.write.mode("errorifexists").parquet(dir.toString)
+      listParquet(dir).map(relativize)
+    }
 
     // ---------------------------------------------------------------- reads
 
@@ -1221,13 +1251,7 @@ object Snapshots {
       if (newDel.isEmpty)
         return spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      val delSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("file",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("pos",
-          org.apache.spark.sql.types.LongType)))
-      val dels = spark.read.schema(delSchema)
-        .parquet(newDel.map(d => new Path(rootPath, d).toString): _*)
+      val dels = readDeletes(newDel)
       val affected = dels.select("file").distinct()
         .collect().map(_.getString(0)).toSet // bounded: affected files only
       val base = readFilesMeta(head.copy(files =
@@ -1396,35 +1420,63 @@ object Snapshots {
       }
     }
 
-
-    /** Commit loop: stage once, then CAS against the moving head. `validate`
-      * sees the latest manifest and returns the commit's file list + stats
-      * (or throws); appends validate trivially, COW validates replaced files.
+    /** The one retry loop every writer runs: `step` plans against a fresh
+      * head and either finishes (the published manifest, or the head for a
+      * no-op) or reports a lost publish race (None) and runs again. After
+      * `maxRetries` lost races it gives up with
+      * [[ConcurrentModificationException]].
       */
-    private[plans] def commit(action: String, maxRetries: Int,
-        meta: Map[String, String] = Map.empty,
-        deletesOf: Manifest => Seq[String] = _.deletes)(
-        validate: Manifest => Option[(Seq[String], Map[String, FileStat])]): Manifest = {
+    private[plans] def retrying(action: String, maxRetries: Int)(
+        step: () => Option[Manifest]): Manifest = {
       var attempt = 0
-      while (true) {
-        val head = latest()
-        validate(head) match {
-          case None => return head // no-op (nothing matched)
-          case Some((files, stats)) =>
-            val m = Manifest(nextSlot(head), head.version,
-              System.currentTimeMillis(), action, head.partitionCols,
-              head.schemaJson, files, stats, meta, deletesOf(head),
-              colMapping = head.colMapping,
-              droppedPhysical = head.droppedPhysical)
-            if (publish(head, m)) return m
-        }
+      var done = step()
+      while (done.isEmpty) {
         attempt += 1
         if (attempt > maxRetries)
           throw new ConcurrentModificationException(
             s"$action at $root lost the commit race $attempt times — giving up")
+        done = step()
       }
-      sys.error("unreachable")
+      done.get
     }
+
+    private def headOf(line: Line): Manifest = line match {
+      case Mainline => latest()
+      case Branch(b) => branchHead(b)
+    }
+
+    /** The one commit primitive: stage once (the caller), then CAS against
+      * the moving head of `line` (see [[Line]]). `next` sees the head and
+      * returns the new state — listing, schema, mapping — as
+      * `head.copy(...)`, or None for a no-op (the head is returned). The
+      * commit stamps the slot, the parent (= head), the timestamp, `action`
+      * and `meta(head)`: meta is never inherited from the head. A lost race
+      * re-runs `next` against the new head, so COW validation (the replaced
+      * files were taken FROM the head the CAS succeeded on) and predicate
+      * re-evaluation both hold.
+      */
+    private[plans] def commit(action: String, maxRetries: Int,
+        meta: Manifest => Map[String, String] = _ => Map.empty,
+        line: Line = Mainline)(next: Manifest => Option[Manifest]): Manifest =
+      retrying(action, maxRetries) { () =>
+        val head = headOf(line)
+        next(head) match {
+          case None => Some(head) // no-op
+          case Some(n) =>
+            val (slot, lineMeta) = line match {
+              case Mainline => (nextSlot(head), meta(head))
+              case Branch(b) => (nextBranchSlot(), meta(head) + (RefMetaKey -> b))
+            }
+            val m = n.copy(version = slot, parent = head.version,
+              timestampMs = System.currentTimeMillis(), action = action,
+              meta = lineMeta)
+            val won = publish(head, m) && (line match {
+              case Mainline => true
+              case Branch(b) => bumpRef(b, head.version, m.version)
+            })
+            if (won) Some(m) else None
+        }
+      }
 
     /** Appends `df`. Never conflicts: losers rebase their staged files onto
       * the new head and re-publish (the data files are written once).
@@ -1433,10 +1485,6 @@ object Snapshots {
         meta: Map[String, String] = Map.empty): Manifest =
       appendUnless(df, maxRetries, meta, _ => false)
 
-    /** Stage once, then commit unless `skip(head)` says the append became
-      * redundant — re-evaluated against each fresh head inside the CAS
-      * retry loop, so the skip decision is serialized with publication.
-      */
     /** Order the frame's columns to the table schema AND cast each to its
       * declared type. Writing a differently-typed column (a decimal literal
       * into a double column, say) would stage a parquet file whose physical
@@ -1449,23 +1497,30 @@ object Snapshots {
       df.select(schema.fields.map(f =>
         col(f.name).cast(f.dataType).as(f.name)): _*)
 
-    private def appendUnless(df: DataFrame, maxRetries: Int,
-        meta: Map[String, String], skip: Manifest => Boolean): Manifest = {
-      val head0 = latest()
+    /** Stage once, then commit onto `line` unless `skip(head)` says the
+      * append became redundant — re-evaluated against each fresh head
+      * inside the CAS retry loop, so the skip decision is serialized with
+      * publication.
+      */
+    private[plans] def appendUnless(df: DataFrame, maxRetries: Int,
+        meta: Map[String, String], skip: Manifest => Boolean,
+        line: Line = Mainline): Manifest = {
+      val head0 = headOf(line)
       require(df.schema.fieldNames.sorted.sameElements(
         schemaOf(head0.schemaJson).fieldNames.sorted),
         "append schema must match table schema")
       val (staged, stagedStats) = stage(
         validateConstraints(conform(df, schemaOf(head0.schemaJson)), "append"),
         head0.partitionCols, head0.colMapping)
-      commit("append", maxRetries, meta)(head =>
+      commit("append", maxRetries, _ => meta, line)(head =>
         if (skip(head)) None // duplicate landed concurrently — no-op
         else if (head.colMapping != head0.colMapping)
           // a rename committed between staging and publication: the staged
           // files carry stale physical names — restage rather than corrupt
           throw new ConcurrentModificationException(
             s"append at $root raced a column rename — retry the append")
-        else Some((head.files ++ staged, head.stats ++ stagedStats)))
+        else Some(head.copy(files = head.files ++ staged,
+          stats = head.stats ++ stagedStats)))
     }
 
     /** Idempotent streaming append: exactly-once per (streamId, batchId) —
@@ -1511,22 +1566,22 @@ object Snapshots {
       */
     def overwrite(df: DataFrame, maxRetries: Int = 10): Manifest = {
       val head0 = latest()
-      val staged = stage(
+      val (staged, stagedStats) = stage(
         validateConstraints(conform(df, schemaOf(head0.schemaJson)), "overwrite"),
         head0.partitionCols, head0.colMapping)
-      commit("overwrite", maxRetries, deletesOf = _ => Nil)(_ => Some(staged))
+      commit("overwrite", maxRetries)(head =>
+        Some(head.copy(files = staged, stats = stagedStats, deletes = Nil)))
     }
 
-    /** File-granularity COW: rewrites only the files that contain matching
-      * rows. On a lost race the ENTIRE plan re-runs against the winning
-      * snapshot (affected files recomputed, post-image restaged), so the
-      * predicate semantics are serializable, not just the file swap.
+    /** File-granularity COW onto `line`: rewrites only the files that
+      * contain matching rows. On a lost race the ENTIRE plan re-runs
+      * against the winning snapshot (affected files recomputed, post-image
+      * restaged), so the predicate semantics are serializable, not just the
+      * file swap.
       */
-    private def cow(action: String, maxRetries: Int)(
-        postImage: DataFrame => DataFrame, predicate: Column): Manifest = {
-      var attempt = 0
-      while (true) {
-        val head = latest()
+    private def cow(action: String, maxRetries: Int, line: Line)(
+        postImage: DataFrame => DataFrame, predicate: Column): Manifest =
+      commit(action, maxRetries, line = line) { head =>
         // provenance scan with pending MOR deletes applied: affected files
         // are discovered over VISIBLE rows, and the rewritten post-image
         // folds those deletes in (a deleted row can never resurrect)
@@ -1535,38 +1590,30 @@ object Snapshots {
           .select(col("__file")).distinct()
           .collect().map(_.getString(0))
           .toSet
-        if (affected.isEmpty) return head // nothing matched — no-op
-        val schema = schemaOf(head.schemaJson)
-        val affectedDf = applyDeletes(
-          readFilesMeta(head.copy(files = head.files.filter(affected))), head)
-          .select(schema.fieldNames.map(col): _*)
-        val post =
-          if (action == "delete") postImage(affectedDf)
-          else validateConstraints(postImage(affectedDf), action)
-        val (staged, stagedStats) = stage(post,
-          head.partitionCols, head.colMapping)
-        val files = head.files.filterNot(affected) ++ staged
-        val m = Manifest(nextSlot(head), head.version,
-          System.currentTimeMillis(), action, head.partitionCols,
-          head.schemaJson, files, (head.stats -- affected) ++ stagedStats,
-          Map.empty, head.deletes,
-          colMapping = head.colMapping,
-          droppedPhysical = head.droppedPhysical)
-        // CAS can only succeed if head is still the latest version, and the
-        // affected files were taken FROM head — so a successful publish
-        // proves no concurrent commit removed them (write-serializable).
-        if (publish(head, m)) return m
-        attempt += 1
-        if (attempt > maxRetries)
-          throw new ConcurrentModificationException(
-            s"$action at $root lost the commit race $attempt times — giving up")
+        if (affected.isEmpty) None // nothing matched — no-op
+        else {
+          val schema = schemaOf(head.schemaJson)
+          val affectedDf = applyDeletes(
+            readFilesMeta(head.copy(files = head.files.filter(affected))), head)
+            .select(schema.fieldNames.map(col): _*)
+          val post =
+            if (action == "delete") postImage(affectedDf)
+            else validateConstraints(postImage(affectedDf), action)
+          val (staged, stagedStats) = stage(post,
+            head.partitionCols, head.colMapping)
+          Some(head.copy(files = head.files.filterNot(affected) ++ staged,
+            stats = (head.stats -- affected) ++ stagedStats))
+        }
       }
-      sys.error("unreachable")
-    }
 
     /** DELETE WHERE cond — rewrites only files containing matches. */
     def deleteWhere(cond: Column, maxRetries: Int = 10): Manifest =
-      cow("delete", maxRetries)(df => df.filter(!coalesce(cond, lit(false))), cond)
+      deleteOn(Mainline, cond, maxRetries)
+
+    private[plans] def deleteOn(line: Line, cond: Column,
+        maxRetries: Int): Manifest =
+      cow("delete", maxRetries, line)(
+        df => df.filter(!coalesce(cond, lit(false))), cond)
 
     /** Merge-on-read DELETE: writes only a (file, row-position) delete
       * sidecar — no data file rewrites — and readers anti-join it at scan
@@ -1579,34 +1626,21 @@ object Snapshots {
       * Racing writers serialize exactly like COW: a lost CAS replays the
       * predicate against the winning snapshot.
       */
-    def deleteWhereMergeOnRead(cond: Column, maxRetries: Int = 10): Manifest = {
-      var attempt = 0
-      while (true) {
-        val head = latest()
-        if (head.files.isEmpty) return head
-        val matches = applyDeletes(readFilesMeta(head), head)
-          .filter(coalesce(cond, lit(false)))
-          .select(col("__file").as("file"), col("__pos").as("pos"))
-        if (matches.isEmpty) return head // nothing matched — no-op
-        val delDir = s"deletes/${UUID.randomUUID().toString.take(8)}"
-        matches.write.mode("errorifexists")
-          .parquet(new Path(rootPath, delDir).toString)
-        val sidecars = listParquet(new Path(rootPath, delDir)).map(relativize)
-        if (sidecars.isEmpty) return head // nothing matched — no-op
-        val m = Manifest(nextSlot(head), head.version,
-          System.currentTimeMillis(), "delete-mor", head.partitionCols,
-          head.schemaJson, head.files, head.stats, Map.empty,
-          head.deletes ++ sidecars,
-          colMapping = head.colMapping,
-          droppedPhysical = head.droppedPhysical)
-        if (publish(head, m)) return m
-        attempt += 1
-        if (attempt > maxRetries)
-          throw new ConcurrentModificationException(
-            s"delete-mor at $root lost the commit race $attempt times — giving up")
+    def deleteWhereMergeOnRead(cond: Column, maxRetries: Int = 10): Manifest =
+      commit("delete-mor", maxRetries) { head =>
+        if (head.files.isEmpty) None
+        else {
+          val matches = applyDeletes(readFilesMeta(head), head)
+            .filter(coalesce(cond, lit(false)))
+            .select(col("__file").as("file"), col("__pos").as("pos"))
+          if (matches.isEmpty) None // nothing matched — no-op
+          else {
+            val sidecars = writeDeletes(matches)
+            if (sidecars.isEmpty) None
+            else Some(head.copy(deletes = head.deletes ++ sidecars))
+          }
+        }
       }
-      sys.error("unreachable")
-    }
 
     /** Schema evolution — ALTER TABLE ADD COLUMNS (ref: the reference's
       * AlterTableAddColsDesc under ql/ddl/table/): a metadata-only commit
@@ -1617,10 +1651,8 @@ object Snapshots {
       * each version's own schema.
       */
     def addColumns(cols: org.apache.spark.sql.types.StructType,
-        maxRetries: Int = 10): Manifest = {
-      var attempt = 0
-      while (true) {
-        val head = latest()
+        maxRetries: Int = 10): Manifest =
+      commit("add-columns", maxRetries) { head =>
         val existing = schemaOf(head.schemaJson)
         val dup = cols.fieldNames.toSet.intersect(existing.fieldNames.toSet)
         require(dup.isEmpty, s"columns already exist: ${dup.mkString(", ")}")
@@ -1657,19 +1689,9 @@ object Snapshots {
         }
         val newSchema = org.apache.spark.sql.types.StructType(
           existing.fields ++ cols.fields.map(_.copy(nullable = true)))
-        val m = Manifest(nextSlot(head), head.version,
-          System.currentTimeMillis(), "add-columns", head.partitionCols,
-          newSchema.json, head.files, head.stats, Map.empty, head.deletes,
-          colMapping = head.colMapping ++ mappingAdds,
-          droppedPhysical = head.droppedPhysical)
-        if (publish(head, m)) return m
-        attempt += 1
-        if (attempt > maxRetries)
-          throw new ConcurrentModificationException(
-            s"add-columns at $root lost the commit race $attempt times — giving up")
+        Some(head.copy(schemaJson = newSchema.json,
+          colMapping = head.colMapping ++ mappingAdds))
       }
-      sys.error("unreachable")
-    }
 
     /** Schema evolution — ALTER TABLE RENAME COLUMN (Hive's CHANGE COLUMN
       * rename, ref ql/ddl/table/column/ AlterTableRenameColDesc class of
@@ -1682,9 +1704,7 @@ object Snapshots {
     def renameColumn(oldName: String, newName: String,
         maxRetries: Int = 10): Manifest = {
       require(oldName != newName, "rename to the same name is a no-op")
-      var attempt = 0
-      while (true) {
-        val head = latest()
+      val m = commit("rename-column", maxRetries) { head =>
         val existing = schemaOf(head.schemaJson)
         require(existing.fieldNames.contains(oldName),
           s"no such column: $oldName")
@@ -1704,24 +1724,13 @@ object Snapshots {
         val newSchema = org.apache.spark.sql.types.StructType(
           existing.fields.map(f =>
             if (f.name == oldName) f.copy(name = newName) else f))
-        val newMapping = (head.colMapping - oldName) ++
-          (if (phys == newName) Map.empty[String, String]
-           else Map(newName -> phys))
-        val m = Manifest(nextSlot(head), head.version,
-          System.currentTimeMillis(), "rename-column", head.partitionCols,
-          newSchema.json, head.files, head.stats, Map.empty, head.deletes,
-          colMapping = newMapping,
-          droppedPhysical = head.droppedPhysical)
-        if (publish(head, m)) {
-          renameInConstraints(oldName, newName)
-          return m
-        }
-        attempt += 1
-        if (attempt > maxRetries)
-          throw new ConcurrentModificationException(
-            s"rename-column at $root lost the commit race $attempt times — giving up")
+        Some(head.copy(schemaJson = newSchema.json,
+          colMapping = (head.colMapping - oldName) ++
+            (if (phys == newName) Map.empty[String, String]
+             else Map(newName -> phys))))
       }
-      sys.error("unreachable")
+      renameInConstraints(oldName, newName)
+      m
     }
 
     /** Schema evolution — ALTER TABLE DROP COLUMN (the reference's REPLACE
@@ -1732,9 +1741,7 @@ object Snapshots {
       * instead of resurrecting the dropped values.
       */
     def dropColumn(name: String, maxRetries: Int = 10): Manifest = {
-      var attempt = 0
-      while (true) {
-        val head = latest()
+      val m = commit("drop-column", maxRetries) { head =>
         val existing = schemaOf(head.schemaJson)
         require(existing.fieldNames.contains(name), s"no such column: $name")
         require(!head.partitionCols.contains(name),
@@ -1745,23 +1752,13 @@ object Snapshots {
         bucketConfig().foreach(b => require(
           !b.cols.contains(phys) && !b.sortCols.contains(phys),
           s"cannot drop bucket/sort column $name"))
-        val newSchema = org.apache.spark.sql.types.StructType(
-          existing.fields.filterNot(_.name == name))
-        val m = Manifest(nextSlot(head), head.version,
-          System.currentTimeMillis(), "drop-column", head.partitionCols,
-          newSchema.json, head.files, head.stats, Map.empty, head.deletes,
+        Some(head.copy(schemaJson = org.apache.spark.sql.types.StructType(
+            existing.fields.filterNot(_.name == name)).json,
           colMapping = head.colMapping - name,
-          droppedPhysical = (head.droppedPhysical :+ phys).distinct)
-        if (publish(head, m)) {
-          dropFromConstraints(name)
-          return m
-        }
-        attempt += 1
-        if (attempt > maxRetries)
-          throw new ConcurrentModificationException(
-            s"drop-column at $root lost the commit race $attempt times — giving up")
+          droppedPhysical = (head.droppedPhysical :+ phys).distinct))
       }
-      sys.error("unreachable")
+      dropFromConstraints(name)
+      m
     }
 
     /** Schema evolution — ALTER TABLE ... ALTER COLUMN c TYPE t (Hive's
@@ -1788,9 +1785,7 @@ object Snapshots {
         case (ByteType | ShortType | IntegerType, DoubleType) => true
         case _ => false
       }
-      var attempt = 0
-      while (true) {
-        val head = latest()
+      commit("alter-column-type", maxRetries) { head =>
         val existing = schemaOf(head.schemaJson)
         val f = existing.fields.find(_.name == name).getOrElse(
           throw new IllegalArgumentException(s"no such column: $name"))
@@ -1811,27 +1806,18 @@ object Snapshots {
         require(widens(f.dataType, to),
           s"only lossless widenings are metadata-only: " +
             s"${f.dataType.simpleString} -> ${to.simpleString} is not")
-        if (f.dataType == to) return head // no-op
-        // existing blooms hashed the narrow type — invalidate them
-        bloomConfig().foreach { cfg =>
-          val phys = head.physical(name)
-          writeBloomConfig(BloomConfig(cfg.cols.filterNot(_ == phys),
-            cfg.bits, cfg.gen + 1))
+        if (f.dataType == to) None // no-op
+        else {
+          // existing blooms hashed the narrow type — invalidate them
+          bloomConfig().foreach { cfg =>
+            val phys = head.physical(name)
+            writeBloomConfig(BloomConfig(cfg.cols.filterNot(_ == phys),
+              cfg.bits, cfg.gen + 1))
+          }
+          Some(head.copy(schemaJson = StructType(existing.fields.map(x =>
+            if (x.name == name) x.copy(dataType = to) else x)).json))
         }
-        val newSchema = StructType(existing.fields.map(x =>
-          if (x.name == name) x.copy(dataType = to) else x))
-        val m = Manifest(nextSlot(head), head.version,
-          System.currentTimeMillis(), "alter-column-type", head.partitionCols,
-          newSchema.json, head.files, head.stats, Map.empty, head.deletes,
-          colMapping = head.colMapping,
-          droppedPhysical = head.droppedPhysical)
-        if (publish(head, m)) return m
-        attempt += 1
-        if (attempt > maxRetries)
-          throw new ConcurrentModificationException(
-            s"alter-column-type at $root lost the commit race $attempt times — giving up")
       }
-      sys.error("unreachable")
     }
 
     /** RESTORE TABLE ... TO VERSION AS OF `v`: roll the table back to a
@@ -1850,24 +1836,11 @@ object Snapshots {
       require(fs.exists(p),
         s"version $v does not exist (vacuumed or never committed)")
       val old = resolve(readManifest(p))
-      var attempt = 0
-      while (true) {
-        val head = latest()
-        require(v <= head.version, s"cannot restore to future version $v")
-        if (v == head.version) return head // no-op
-        val m = Manifest(nextSlot(head), head.version,
-          System.currentTimeMillis(), "restore", old.partitionCols,
-          old.schemaJson, old.files, old.stats,
-          Map("restored_version" -> v.toString), old.deletes,
-          colMapping = old.colMapping,
-          droppedPhysical = old.droppedPhysical)
-        if (publish(head, m)) return m
-        attempt += 1
-        if (attempt > maxRetries)
-          throw new ConcurrentModificationException(
-            s"restore at $root lost the commit race $attempt times — giving up")
+      commit("restore", maxRetries, _ => Map("restored_version" -> v.toString)) {
+        head =>
+          require(v <= head.version, s"cannot restore to future version $v")
+          if (v == head.version) None else Some(old)
       }
-      sys.error("unreachable")
     }
 
     /** RESTORE ... TO TIMESTAMP AS OF: the last version committed at or
@@ -1893,64 +1866,50 @@ object Snapshots {
       * [[zOrderBy]] rewrite under the CURRENT spec, so background
       * maintenance gradually migrates old generations.
       */
-    def setPartitionSpec(cols: Seq[String], maxRetries: Int = 10): Manifest = {
-      var attempt = 0
-      while (true) {
-        val head = latest()
-        val schema = schemaOf(head.schemaJson)
-        // entries may be TRANSFORMS — day(ts), month(ts), year(ts),
-        // hour(ts), bucket(N, c), truncate(W, c) — encoded as derived
-        // dir-key names (ts_day, c_bucket16, ...; see
-        // [[PartitionTransforms]]); identity entries stay plain columns.
-        // Partition dirs are physical names; map once, here.
-        val phys = cols.map(PartitionTransforms.parseEntry(_) match {
-          case Left(c) =>
-            require(schema.fieldNames.contains(c), s"no such column: $c")
-            head.physical(c)
-          case Right(sp) =>
-            require(schema.fieldNames.contains(sp.src),
-              s"no such column: ${sp.src}")
-            PartitionTransforms.validate(sp, schema(sp.src).dataType)
-            val derived = sp.copy(src = head.physical(sp.src)).dirName
-            require(!schema.fieldNames.contains(derived) &&
-                !head.colMapping.valuesIterator.contains(derived),
-              s"transform field name $derived collides with a column")
-            derived
-        })
-        require(phys.distinct == phys, "duplicate partition column")
-        bucketConfig().foreach { b =>
-          val clash = phys.filter(c => b.cols.contains(c) ||
-            b.sortCols.contains(c))
-          require(clash.isEmpty,
-            s"bucket/sort columns cannot become partition columns: " +
-              clash.mkString(", "))
-        }
-        if (phys == head.partitionCols) return head
-        val m = Manifest(nextSlot(head), head.version,
-          System.currentTimeMillis(), "set-partition-spec", phys,
-          head.schemaJson, head.files, head.stats,
-          Map("previous-spec" -> head.partitionCols.mkString(",")),
-          head.deletes, colMapping = head.colMapping,
-          droppedPhysical = head.droppedPhysical)
-        if (publish(head, m)) return m
-        attempt += 1
-        if (attempt > maxRetries)
-          throw new ConcurrentModificationException(
-            s"set-partition-spec at $root lost the commit race " +
-              s"$attempt times — giving up")
+    def setPartitionSpec(cols: Seq[String], maxRetries: Int = 10): Manifest =
+      commit("set-partition-spec", maxRetries,
+          head => Map("previous-spec" -> head.partitionCols.mkString(","))) {
+        head =>
+          val schema = schemaOf(head.schemaJson)
+          // entries may be TRANSFORMS — day(ts), month(ts), year(ts),
+          // hour(ts), bucket(N, c), truncate(W, c) — encoded as derived
+          // dir-key names (ts_day, c_bucket16, ...; see
+          // [[PartitionTransforms]]); identity entries stay plain columns.
+          // Partition dirs are physical names; map once, here.
+          val phys = cols.map(PartitionTransforms.parseEntry(_) match {
+            case Left(c) =>
+              require(schema.fieldNames.contains(c), s"no such column: $c")
+              head.physical(c)
+            case Right(sp) =>
+              require(schema.fieldNames.contains(sp.src),
+                s"no such column: ${sp.src}")
+              PartitionTransforms.validate(sp, schema(sp.src).dataType)
+              val derived = sp.copy(src = head.physical(sp.src)).dirName
+              require(!schema.fieldNames.contains(derived) &&
+                  !head.colMapping.valuesIterator.contains(derived),
+                s"transform field name $derived collides with a column")
+              derived
+          })
+          require(phys.distinct == phys, "duplicate partition column")
+          bucketConfig().foreach { b =>
+            val clash = phys.filter(c => b.cols.contains(c) ||
+              b.sortCols.contains(c))
+            require(clash.isEmpty,
+              s"bucket/sort columns cannot become partition columns: " +
+                clash.mkString(", "))
+          }
+          if (phys == head.partitionCols) None
+          else Some(head.copy(partitionCols = phys))
       }
-      sys.error("unreachable")
-    }
-
 
     /** TRUNCATE TABLE: one metadata commit that empties the file list (and
       * resets pending MOR deletes — every row they referenced is gone).
       * Data files stay on disk for time travel until [[vacuum]].
       */
     def truncate(maxRetries: Int = 10): Manifest =
-      commit("truncate", maxRetries, deletesOf = _ => Nil)(head =>
+      commit("truncate", maxRetries)(head =>
         if (head.files.isEmpty && head.deletes.isEmpty) None
-        else Some((Nil, Map.empty)))
+        else Some(head.copy(files = Nil, stats = Map.empty, deletes = Nil)))
 
     /** Merge-on-read UPDATE: the matched rows' old positions go into a
       * delete sidecar and their updated images append as new files — the
@@ -1962,62 +1921,57 @@ object Snapshots {
       */
     def updateWhereMergeOnRead(cond: Column, set: Map[String, Column],
         maxRetries: Int = 10): Manifest = {
-      val head0 = latest()
-      val bad = set.keySet.intersect(head0.partitionCols.toSet)
+      checkAssignments(latest(), set)
+      commit("update-mor", maxRetries) { head =>
+        if (head.files.isEmpty) None
+        else {
+          val schema = schemaOf(head.schemaJson)
+          val matches = applyDeletes(readFilesMeta(head), head)
+            .filter(coalesce(cond, lit(false)))
+          if (matches.isEmpty) None // nothing matched — no-op
+          else {
+            // old positions retire via sidecar...
+            val sidecars = writeDeletes(
+              matches.select(col("__file").as("file"), col("__pos").as("pos")))
+            // ...and the updated images append as fresh files (conformed: a
+            // SET expression must not change the column's physical type; one
+            // projection so all assignments read the PRE-update row)
+            val updated = conform(
+              matches.select(schema.fieldNames.map(c =>
+                set.getOrElse(c, col(c)).as(c)): _*), schema)
+            val (staged, stagedStats) = stage(
+              validateConstraints(updated, "update-mor"), head.partitionCols,
+              head.colMapping)
+            Some(head.copy(files = head.files ++ staged,
+              stats = head.stats ++ stagedStats,
+              deletes = head.deletes ++ sidecars))
+          }
+        }
+      }
+    }
+
+    /** UPDATE assignments: partition columns are not assignable (rows never
+      * move between partitions) and every target must exist.
+      */
+    private def checkAssignments(head: Manifest, set: Map[String, Column]): Unit = {
+      val bad = set.keySet.intersect(head.partitionCols.toSet)
       require(bad.isEmpty, s"cannot assign partition columns: ${bad.mkString(", ")}")
-      val unknown = set.keySet.diff(schemaOf(head0.schemaJson).fieldNames.toSet)
+      val unknown = set.keySet.diff(schemaOf(head.schemaJson).fieldNames.toSet)
       require(unknown.isEmpty,
         s"UPDATE assigns nonexistent column(s): ${unknown.mkString(", ")}")
-      var attempt = 0
-      while (true) {
-        val head = latest()
-        if (head.files.isEmpty) return head
-        val schema = schemaOf(head.schemaJson)
-        val matches = applyDeletes(readFilesMeta(head), head)
-          .filter(coalesce(cond, lit(false)))
-        if (matches.isEmpty) return head // nothing matched — no-op
-        // old positions retire via sidecar...
-        val delDir = s"deletes/${UUID.randomUUID().toString.take(8)}"
-        matches.select(col("__file").as("file"), col("__pos").as("pos"))
-          .write.mode("errorifexists")
-          .parquet(new Path(rootPath, delDir).toString)
-        val sidecars = listParquet(new Path(rootPath, delDir)).map(relativize)
-        // ...and the updated images append as fresh files (conformed: a
-        // SET expression must not change the column's physical type; one
-        // projection so all assignments read the PRE-update row)
-        val updated = conform(
-          matches.select(schema.fieldNames.map(c =>
-            set.getOrElse(c, col(c)).as(c)): _*), schema)
-        val (staged, stagedStats) = stage(
-          validateConstraints(updated, "update-mor"), head.partitionCols,
-          head.colMapping)
-        val m = Manifest(nextSlot(head), head.version,
-          System.currentTimeMillis(), "update-mor", head.partitionCols,
-          head.schemaJson, head.files ++ staged, head.stats ++ stagedStats,
-          Map.empty, head.deletes ++ sidecars,
-          colMapping = head.colMapping,
-          droppedPhysical = head.droppedPhysical)
-        if (publish(head, m)) return m
-        attempt += 1
-        if (attempt > maxRetries)
-          throw new ConcurrentModificationException(
-            s"update-mor at $root lost the commit race $attempt times — giving up")
-      }
-      sys.error("unreachable")
     }
 
     /** UPDATE ... SET ... WHERE cond — partition columns not assignable
       * (rows never move between partitions), matching [[Dml.updateWhere]].
       */
     def updateWhere(cond: Column, set: Map[String, Column],
-        maxRetries: Int = 10): Manifest = {
-      val head = latest()
-      val bad = set.keySet.intersect(head.partitionCols.toSet)
-      require(bad.isEmpty, s"cannot assign partition columns: ${bad.mkString(", ")}")
-      val unknown = set.keySet.diff(schemaOf(head.schemaJson).fieldNames.toSet)
-      require(unknown.isEmpty,
-        s"UPDATE assigns nonexistent column(s): ${unknown.mkString(", ")}")
-      cow("update", maxRetries)({ df =>
+        maxRetries: Int = 10): Manifest =
+      updateOn(Mainline, cond, set, maxRetries)
+
+    private[plans] def updateOn(line: Line, cond: Column,
+        set: Map[String, Column], maxRetries: Int): Manifest = {
+      checkAssignments(headOf(line), set)
+      cow("update", maxRetries, line)({ df =>
         val c = coalesce(cond, lit(false))
         // one projection, not a fold: SQL assignments all read the
         // PRE-update row (SET a = b, b = a swaps)
@@ -2111,9 +2065,7 @@ object Snapshots {
         concat(lit(s"$sk="), coalesce(col(sk).cast("string"), lit("NULL")))
       }: _*)
 
-      var attempt = 0
-      while (true) {
-        val head = latest()
+      commit("merge-mor", maxRetries) { head =>
         val schema = schemaOf(head.schemaJson)
         val visible = applyDeletes(readFilesMeta(head), head)
         // matched pairs keep (file, pos) provenance for the sidecar plus
@@ -2146,42 +2098,30 @@ object Snapshots {
             if (rows.isEmpty) None else Some(rows)
           }
         val hasMatches = hasMatchedArm && !matches.isEmpty
-        if (!hasMatches && inserts.isEmpty) return head // no-op
-        // old positions of matched rows retire via sidecar...
-        val sidecars =
-          if (!hasMatches) Nil
-          else {
-            val delDir = s"deletes/${UUID.randomUUID().toString.take(8)}"
-            matches.select(col("__file").as("file"), col("__pos").as("pos"))
-              .write.mode("errorifexists")
-              .parquet(new Path(rootPath, delDir).toString)
-            listParquet(new Path(rootPath, delDir)).map(relativize)
-          }
-        // ...and updated images + inserts append as fresh files
-        val images =
-          if (whenMatchedDelete || !hasMatches) None
-          else Some(matches.select(schema.fieldNames.map(c =>
-            whenMatchedSet.getOrElse(c, tc(c)).as(c)): _*))
-        val appended = (images.toSeq ++ inserts.toSeq)
-          .reduceOption(_ unionByName _)
-          .map(df => stage(
-            validateConstraints(conform(df, schema), "merge-mor"),
-            head.partitionCols, head.colMapping))
-        val (staged, stagedStats) =
-          appended.getOrElse((Seq.empty[String], Map.empty[String, FileStat]))
-        val m = Manifest(nextSlot(head), head.version,
-          System.currentTimeMillis(), "merge-mor", head.partitionCols,
-          head.schemaJson, head.files ++ staged, head.stats ++ stagedStats,
-          Map.empty, head.deletes ++ sidecars,
-          colMapping = head.colMapping,
-          droppedPhysical = head.droppedPhysical)
-        if (publish(head, m)) return m
-        attempt += 1
-        if (attempt > maxRetries)
-          throw new ConcurrentModificationException(
-            s"merge-mor at $root lost the commit race $attempt times — giving up")
+        if (!hasMatches && inserts.isEmpty) None // no-op
+        else {
+          // old positions of matched rows retire via sidecar...
+          val sidecars =
+            if (!hasMatches) Nil
+            else writeDeletes(
+              matches.select(col("__file").as("file"), col("__pos").as("pos")))
+          // ...and updated images + inserts append as fresh files
+          val images =
+            if (whenMatchedDelete || !hasMatches) None
+            else Some(matches.select(schema.fieldNames.map(c =>
+              whenMatchedSet.getOrElse(c, tc(c)).as(c)): _*))
+          val appended = (images.toSeq ++ inserts.toSeq)
+            .reduceOption(_ unionByName _)
+            .map(df => stage(
+              validateConstraints(conform(df, schema), "merge-mor"),
+              head.partitionCols, head.colMapping))
+          val (staged, stagedStats) =
+            appended.getOrElse((Seq.empty[String], Map.empty[String, FileStat]))
+          Some(head.copy(files = head.files ++ staged,
+            stats = head.stats ++ stagedStats,
+            deletes = head.deletes ++ sidecars))
+        }
       }
-      sys.error("unreachable")
     }
 
     /** Full multi-arm MERGE (conditional matched arms, conditional insert,
@@ -2192,8 +2132,8 @@ object Snapshots {
       */
     def mergeSpec(source: DataFrame, targetKey: String, sourceKey: String,
         spec: MergeEngine.Spec,
-        sourceKeysUnique: Boolean = false,
-        maxRetries: Int = 10): Manifest =
+        sourceKeysUnique: Boolean,
+        maxRetries: Int): Manifest =
       mergeSpec(source, Seq(targetKey -> sourceKey), spec, sourceKeysUnique,
         maxRetries)
 
@@ -2202,23 +2142,25 @@ object Snapshots {
       */
     def mergeSpec(source: DataFrame, mergeKeys: Seq[(String, String)],
         spec: MergeEngine.Spec,
-        sourceKeysUnique: Boolean,
-        maxRetries: Int): Manifest = {
-      val head0 = latest()
-      val cols = schemaOf(head0.schemaJson).fieldNames.toSeq
+        sourceKeysUnique: Boolean = false,
+        maxRetries: Int = 10): Manifest =
+      mergeSpecOn(Mainline, source, mergeKeys, spec, sourceKeysUnique,
+        maxRetries)
+
+    private[plans] def mergeSpecOn(line: Line, source: DataFrame,
+        mergeKeys: Seq[(String, String)], spec: MergeEngine.Spec,
+        sourceKeysUnique: Boolean, maxRetries: Int): Manifest = {
       val setCols = (spec.matched ++ spec.notMatchedBySource)
         .collect { case MergeEngine.Update(_, s) => s.keySet }.flatten.toSet
-      val bad = setCols.intersect(head0.partitionCols.toSet)
+      val bad = setCols.intersect(headOf(line).partitionCols.toSet)
       require(bad.isEmpty,
         s"MERGE cannot assign partition columns: ${bad.mkString(", ")}")
 
-      def postOf(affectedDf: DataFrame): DataFrame =
-        MergeEngine.postImage(affectedDf, source, mergeKeys,
-          cols, spec, sourceKeysUnique)
-
-      var attempt = 0
-      while (true) {
-        val head = latest()
+      commit("merge", maxRetries, line = line) { head =>
+        val schema = schemaOf(head.schemaJson)
+        def postOf(affectedDf: DataFrame): DataFrame =
+          MergeEngine.postImage(affectedDf, source, mergeKeys,
+            schema.fieldNames.toSeq, spec, sourceKeysUnique)
         val keys = source.select(mergeKeys.map { case (tk, sk) =>
           col(sk).as("__s_" + tk) }: _*).distinct()
         // provenance scan over VISIBLE rows (pending MOR deletes applied):
@@ -2233,34 +2175,22 @@ object Snapshots {
             .select(col("__file")).distinct()
             .collect().map(_.getString(0))
             .toSet
-        val schema = schemaOf(head.schemaJson)
-        val post =
-          if (affected.isEmpty) {
-            if (spec.inserts.isEmpty) return head // nothing matched, no inserts
+        if (affected.isEmpty && spec.inserts.isEmpty) None // nothing matched, no inserts
+        else {
+          val post =
             // no target row matches any source key — every source row inserts
-            postOf(readFiles(head.copy(files = Nil)))
-          } else postOf(applyDeletes(
-            readFilesMeta(head.copy(files = head.files.filter(affected))), head)
-            .select(schema.fieldNames.map(col): _*))
-        val (staged, stagedStats) = stage(
-          validateConstraints(post, "merge"), head.partitionCols,
-          head.colMapping)
-        val m = Manifest(nextSlot(head), head.version,
-          System.currentTimeMillis(), "merge", head.partitionCols,
-          head.schemaJson, head.files.filterNot(affected) ++ staged,
-          (head.stats -- affected) ++ stagedStats, Map.empty, head.deletes,
-          colMapping = head.colMapping,
-          droppedPhysical = head.droppedPhysical)
-        if (publish(head, m)) return m
-        attempt += 1
-        if (attempt > maxRetries)
-          throw new ConcurrentModificationException(
-            s"merge at $root lost the commit race $attempt times — giving up")
+            if (affected.isEmpty) postOf(readFiles(head.copy(files = Nil)))
+            else postOf(applyDeletes(
+              readFilesMeta(head.copy(files = head.files.filter(affected))), head)
+              .select(schema.fieldNames.map(col): _*))
+          val (staged, stagedStats) = stage(
+            validateConstraints(post, "merge"), head.partitionCols,
+            head.colMapping)
+          Some(head.copy(files = head.files.filterNot(affected) ++ staged,
+            stats = (head.stats -- affected) ++ stagedStats))
+        }
       }
-      sys.error("unreachable")
     }
-
-
 
     // ------------------------------------------------------------------
     // Constraints (see [[TableConstraints]])

@@ -1145,7 +1145,7 @@ object SqlDml {
       // the branch head; tags refuse inside mergeSpecOnBranch
       case (r: NamedTables.SnapshotRef, Some(b)) =>
         Snapshots.table(spark, r.root).mergeSpecOnBranch(b, source,
-          mergeKeys, spec, sourceKeysUnique = false, maxRetries = 10)
+          mergeKeys, spec)
       case (r: NamedTables.SnapshotRef, None)
           if r.writeMode == NamedTables.WriteMor && morShape(spec) =>
         // merge-on-read table + single-unconditional-arm statement: retire
@@ -1167,8 +1167,7 @@ object SqlDml {
               insertValues = insVals)
         }
       case (r: NamedTables.SnapshotRef, None) =>
-        Snapshots.table(spark, r.root).mergeSpec(source, mergeKeys, spec,
-          sourceKeysUnique = false, maxRetries = 10)
+        Snapshots.table(spark, r.root).mergeSpec(source, mergeKeys, spec)
       case (NamedTables.PathRef(path), _) =>
         Dml.mergeSpec(spark, path, source, mergeKeys, spec,
           sourceKeysUnique = false)

@@ -163,6 +163,51 @@ class SnapshotsSpec extends SparkSpec {
       t.append(nums(10, 20), maxRetries = 0))
   }
 
+  // every committing verb, maintenance included, loses a race the same way:
+  // the engine's exception, naming the verb's action
+  private def mergeSource = {
+    import spark.implicits._
+    Seq((3L, "m", 3), (100L, "new", 0)).toDF("id", "s", "k")
+  }
+
+  private val jammedVerbs
+      : Seq[(String, Snapshots.SnapshotTable => Snapshots.Manifest)] =
+    Seq(
+      "delete" -> (_.deleteWhere(col("id") < 5, maxRetries = 0)),
+      "update" -> (_.updateWhere(col("id") < 5, Map("s" -> lit("u")),
+        maxRetries = 0)),
+      "merge" -> (_.mergeSpec(mergeSource, Seq("id" -> "id"),
+        MergeEngine.specOf(Map("s" -> lit("m")), whenMatchedDelete = false,
+          insertUnmatched = true), sourceKeysUnique = false, maxRetries = 0)),
+      "merge-mor" -> (_.mergeMergeOnRead(mergeSource, "id", "id",
+        whenMatchedSet = Map("s" -> lit("m")), maxRetries = 0)),
+      "delete-mor" -> (_.deleteWhereMergeOnRead(col("id") < 5, maxRetries = 0)),
+      "add-columns" -> (_.addColumns(org.apache.spark.sql.types.StructType(
+        Seq(org.apache.spark.sql.types.StructField("x",
+          org.apache.spark.sql.types.LongType))), maxRetries = 0)),
+      "restore" -> (_.restore(0L, maxRetries = 0)),
+      "set-partition-spec" -> (_.setPartitionSpec(Seq("k"), maxRetries = 0)),
+      "truncate" -> (_.truncate(maxRetries = 0)),
+      "compact" -> (_.compact(maxRetries = 0)),
+      "cluster" -> (_.clusterBy(Seq("id"), maxRetries = 0)),
+      "zorder" -> (_.zOrderBy(Seq("id", "k"), maxRetries = 0)))
+
+  jammedVerbs.foreach { case (action, run) =>
+    test(s"exhausted retries raise ConcurrentModificationException: $action") {
+      val root = freshRoot()
+      val t = Snapshots.create(spark, root, nums(0, 10))
+      t.append(nums(10, 20))
+      // jam the next version slot with a copy of the head manifest: the
+      // head still reads as v1, and every CAS at v2 fails
+      val log = java.nio.file.Paths.get(root, "_graft_log")
+      java.nio.file.Files.write(log.resolve("v00000002.json"),
+        java.nio.file.Files.readAllBytes(log.resolve("v00000001.json")))
+      val e = intercept[Snapshots.ConcurrentModificationException](run(t))
+      assert(e.getMessage.startsWith(
+        s"$action at $root lost the commit race 1 times"), e.getMessage)
+    }
+  }
+
   test("merge updates matched rows, inserts unmatched, leaves the rest") {
     import spark.implicits._
     val root = freshRoot()
