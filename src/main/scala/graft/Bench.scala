@@ -95,25 +95,21 @@ object Bench {
       "stays zero -- the metric exists to pin the plan shape, not to " +
       "manufacture a local speedup"),
     "hive_acid_read_base" -> ("benched from r16 on: delete-free BASE-ONLY " +
-      "acid read (the post-compaction state) through AcidColumnarOrc's " +
-      "zero-copy ColumnarBatch wrap of the row struct; breakdown's " +
-      "acid_base_rowbridge is the identical read with the fast path " +
-      "forced off. r16 decision numbers: KEEP -- at sf0.1 (150k rows, " +
-      "overhead-dominated) columnar 0.097s vs rowbridge 0.118s (1.2x); " +
-      "at 10M rows (scale-representative, min-of-3) columnar-equivalent " +
-      "plain ORC 0.25s vs rowbridge 0.91s (3.6x). Spark's native ORC " +
-      "readers CANNOT read acid files at all (orc-core acid detection " +
-      "remaps batches under all three reader modes -- probed r16, " +
-      "AcidColumnarSpec scaladoc), so the DSv2 wrap is the only columnar " +
-      "route; the gate engages only for the exact post-compaction state " +
-      "and everything else keeps the row bridge"),
-    "hive_acid_read" -> ("benched from r12 on: ACID migration bridge -- " +
+      "acid read (the post-compaction state) of the full orders table " +
+      "and aggregate, through AcidColumnarOrc's zero-copy ColumnarBatch " +
+      "wrap of the orc-core batches. Spark's native ORC readers CANNOT " +
+      "read acid files at all (orc-core acid detection remaps batches " +
+      "under all three reader modes -- AcidColumnarSpec scaladoc), so " +
+      "the DSv2 scan is the only columnar route; every acid read takes " +
+      "it. The per-row Row bridge it replaced measured 1.2x slower here " +
+      "and 3.6x slower at 10M rows (r16)"),
+    "hive_acid_read" -> ("benched from r12 on: ACID migration read -- " +
       "reconstruct base_5 + delta_6_6 + delete_delta_7_7 over the full " +
       "orders table (4 buckets, fixture build untimed/cached) and " +
-      "aggregate; the timed span is the orc-core RecordReader scan with " +
-      "id-column-pruned deletes + anti-join. A row-at-a-time bridge by " +
-      "design (orc-core's acid detection bars Spark's columnar reader); " +
-      "steady state should CONVERT to a snapshot table, not re-read"))
+      "aggregate; the timed span is the same AcidColumnarOrc scan with " +
+      "the delete side decoding only the ROW__ID columns, plus the " +
+      "anti-join; steady state should CONVERT to a snapshot table, not " +
+      "re-read"))
 
   /** The 22 queries benched since round 1 and their r1 (sf0.1, local[32],
     * single-run) totals — emitted as `matched22_sec`/`matched22_vs_r1` so
@@ -355,19 +351,9 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** Hive ACID migration read: reconstruct + aggregate an ACID directory
-    * tree (base + delta + delete_delta over the full orders table). The
-    * fixture build is untimed (it's the legacy warehouse, not the
-    * operator); the timed span is the bridge reader itself — listing,
-    * id-column-pruned delete scan, anti-join, aggregate. A cached fixture
-    * is reused across passes (ACID dirs are immutable by contract).
-    */
   /** Post-compaction ACID read: a delete-free base-only snapshot of the
-    * full orders table — the state [[graft.sources.AcidColumnarOrc]]'s
-    * zero-copy ColumnarBatch path engages for (r16). The breakdown's
-    * `acid_base_rowbridge` runs the IDENTICAL read with the fast path
-    * forced off, so the pair measures the columnar win on this fixture
-    * directly. Fixture build untimed and cached.
+    * full orders table through [[graft.sources.AcidColumnarOrc]]. Fixture
+    * build untimed and cached.
     */
   private val acidBaseFixture =
     new java.util.concurrent.atomic.AtomicReference[String]()
@@ -386,23 +372,24 @@ object Bench {
       acidBaseFixture.set(d)
       d
     }
-  private def hiveAcidReadBase(spark: SparkSession, sfDir: String,
-      columnar: Boolean): Double = {
+  private def hiveAcidReadBase(spark: SparkSession, sfDir: String): Double = {
     import org.apache.spark.sql.functions._
     val dir = acidBaseDir(spark, sfDir)
-    if (!columnar)
-      spark.conf.set("spark.graft.acid.columnarRead", "false")
-    try {
-      val t0 = System.nanoTime()
-      graft.sources.AcidOrc.read(spark, dir)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)), sum(col("o_totalprice")))
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    } finally if (!columnar)
-      spark.conf.unset("spark.graft.acid.columnarRead")
+    val t0 = System.nanoTime()
+    graft.sources.AcidOrc.read(spark, dir)
+      .groupBy(col("o_orderstatus"))
+      .agg(count(lit(1)), sum(col("o_totalprice")))
+      .write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
   }
 
+  /** Hive ACID migration read: reconstruct + aggregate an ACID directory
+    * tree (base + delta + delete_delta over the full orders table). The
+    * fixture build is untimed (it's the legacy warehouse, not the
+    * operator); the timed span is the reader itself — listing,
+    * id-column-pruned delete scan, anti-join, aggregate. A cached fixture
+    * is reused across passes (ACID dirs are immutable by contract).
+    */
   private val acidFixture = new java.util.concurrent.atomic.AtomicReference[String]()
   private def hiveAcidRead(spark: SparkSession, sfDir: String): Double = {
     import org.apache.spark.sql.functions._
@@ -489,11 +476,9 @@ object Bench {
       catch { case e: Throwable =>
         System.err.println(s"[bench] spj warmup FAILED: ${e.getMessage}") }
 
-    // acid-base warmup (builds the compacted fixture + compiles both the
-    // columnar and row-bridge read plans)
+    // acid-base warmup (builds the compacted fixture + compiles the plan)
     if (doAcidBase)
-      try { hiveAcidReadBase(spark, sfDir, columnar = true)
-        hiveAcidReadBase(spark, sfDir, columnar = false) }
+      try hiveAcidReadBase(spark, sfDir)
       catch { case e: Throwable =>
         System.err.println(s"[bench] acid-base warmup FAILED: ${e.getMessage}") }
 
@@ -559,8 +544,7 @@ object Bench {
         catch { case e: Throwable =>
           System.err.println(s"[bench] hive_acid_read FAILED: ${e.getMessage}"); -1.0 }
       })) ++ (if (!doAcidBase) Seq.empty else Seq("hive_acid_read_base" -> {
-        try { cleanStorage(gc = false);
-          hiveAcidReadBase(spark, sfDir, columnar = true) }
+        try { cleanStorage(gc = false); hiveAcidReadBase(spark, sfDir) }
         catch { case e: Throwable =>
           System.err.println(s"[bench] hive_acid_read_base FAILED: ${e.getMessage}"); -1.0 }
       }))
@@ -614,20 +598,7 @@ object Bench {
             System.err.println(
               s"[bench] shuffle baseline FAILED: ${e.getMessage}"); -1.0 }
         }.filter(_ >= 0).minOption.getOrElse(-1.0))
-    // ACID columnar context: the identical base-only read through the
-    // row bridge — the spread vs `hive_acid_read_base` is the per-row
-    // conversion cost the ColumnarBatch wrap removes.
-    val acidRowBridgeBaseline: Seq[(String, Double)] =
-      if (!doAcidBase) Seq.empty
-      else Seq("acid_base_rowbridge" ->
-        (1 to nRuns).map { _ =>
-          try { cleanStorage(gc = false)
-            hiveAcidReadBase(spark, sfDir, columnar = false) }
-          catch { case e: Throwable =>
-            System.err.println(
-              s"[bench] acid rowbridge FAILED: ${e.getMessage}"); -1.0 }
-        }.filter(_ >= 0).minOption.getOrElse(-1.0))
-    val bd = (breakdown ++ shuffleBaseline ++ acidRowBridgeBaseline)
+    val bd = (breakdown ++ shuffleBaseline)
       .map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
 

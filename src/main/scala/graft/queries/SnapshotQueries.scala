@@ -515,11 +515,11 @@ object SnapshotQueries {
            |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
     },
 
-    // Post-compaction COLUMNAR acid read (r16, [[graft.sources
-    // .AcidColumnarOrc]]): a full-table delta compacted into base_1 —
-    // the delete-free base-only state — reads through the zero-copy
-    // ColumnarBatch path (AcidColumnarSpec pins the plan shape; this
-    // entry pins the VALUES under the DuckDB gate).
+    // Post-compaction acid read (r16): a full-table delta compacted into
+    // base_1 — the delete-free base-only state — through the one acid
+    // scan, [[graft.sources.AcidColumnarOrc]]'s zero-copy ColumnarBatch
+    // wrap (AcidColumnarSpec pins the plan shape; this entry pins the
+    // VALUES under the DuckDB gate).
     q("s43_hive_acid_columnar_base",
       """SELECT o_orderstatus, count(*) AS n,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(25,2))) AS DOUBLE) AS total
@@ -539,8 +539,8 @@ object SnapshotQueries {
     },
 
     // ... and the PARTITIONED post-compaction state (r16): per-partition
-    // deltas compacted to one base each — the columnar gate's partitioned
-    // branch, with partition values surfaced from constant vectors.
+    // deltas compacted to one base each, with partition values surfaced
+    // from constant vectors.
     q("s44_hive_acid_columnar_partitioned",
       """SELECT o_orderstatus AS p, count(*) AS n,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(25,2))) AS DOUBLE) AS total

@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.orc.{OrcFile, TypeDescription}
-import org.apache.hadoop.hive.ql.exec.vector
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -38,18 +37,17 @@ import org.apache.spark.sql.types._
   * file's root schema and silently remaps any non-identical reader schema
   * onto `row`'s children — so every column-pruned Spark read of an ACID
   * file fails with misaligned vectors (the long-standing reason vanilla
-  * Spark cannot read the reference's managed ACID tables). The scan here
-  * is the reference's own architecture (ql/io/orc/OrcRawRecordMerger
-  * drives RecordReaders event-by-event): one Spark task per byte-range
-  * split of a bucket file (OrcInputFormat's stripe rule), each task an
-  * ORC `RecordReader` with an identity reader schema (no evolution, no
-  * remap) and explicit include-columns — so the delete-side scan really
-  * does read only the three ROW__ID columns off disk. The
-  * anti-join and everything above it is an ordinary Catalyst plan; AQE
-  * broadcasts the delete set when it is small. Migration guidance stands:
-  * read ACID once, land it in a snapshot table/parquet, and query that —
-  * this reader's job is correctness and IO-shaped pruning at the
-  * boundary, not replacing the columnar fast path.
+  * Spark cannot read the reference's managed ACID tables). Every ACID
+  * read here goes through one scan, [[AcidColumnarOrc]]: one Spark task
+  * per byte-range split of a file (OrcInputFormat's stripe rule), each an
+  * ORC `RecordReader` with the identity reader schema (no evolution, no
+  * remap) and include flags from the pruned columns — so the delete-side
+  * scan really does read only the three ROW__ID columns off disk — whose
+  * vectors Spark consumes zero-copy as a `ColumnarBatch`. The anti-join
+  * and everything above it is an ordinary Catalyst plan; AQE broadcasts
+  * the delete set when it is small. Migration guidance stands: read ACID
+  * once, land it in a snapshot table/parquet, and query that — this
+  * reader's job is correctness and IO-shaped pruning at the boundary.
   *
   * Scope, stated honestly:
   *   - The default mode implements the ACID '''v2''' read contract
@@ -65,22 +63,25 @@ import org.apache.spark.sql.types._
   *     reconstructed here: per (partition, task-id bucket), files sort
   *     base-then-`_copy_N` and rows number 0..n across them in that order
   *     (ref ql/io/orc/OrcRawRecordMerger.java:319,342 OriginalReaderPair;
-  *     AcidUtils original-file ordering). The positional scan engages
-  *     only when identity is needed — a plain read of originals keeps the
-  *     pruned columnar path. Originals whose names don't follow the
-  *     `<task>_<attempt>[_copy_N]` contract have no derivable ROW__IDs
-  *     and refuse loudly when identity is asked of them.
+  *     AcidUtils original-file ordering). Originals join the ACID scan
+  *     only when identity is needed; a plain read of them is Spark's own
+  *     pruned ORC read, since they lack the wrapper columns. Originals
+  *     whose names don't follow the `<task>_<attempt>[_copy_N]` contract
+  *     have no derivable ROW__IDs and refuse loudly when identity is
+  *     asked of them.
   *   - The listing is assumed clean of uncommitted/aborted write ids
   *     (what the cleaner leaves behind); open-transaction snapshot
   *     isolation needs the metastore's txn list, which has no analog
   *     here. Add-columns schema evolution across deltas IS handled (the
   *     widest row struct is the table schema; older files' missing
-  *     fields read NULL, adapted by name per task); a same-named column
-  *     changing type refuses loudly — compact first.
+  *     fields, nested ones included, read NULL, adapted by name per
+  *     task); a same-named column changing type refuses loudly — compact
+  *     first.
   *   - Partition values parse from `k=v` path segments as strings, like a
   *     schema-less `spark.read` of a Hive layout; cast downstream.
   */
 object AcidOrc {
+  import AcidColumnarOrc.{OriginalIds, Split, scan}
 
   val OpInsert = 0
   val OpUpdate = 1
@@ -94,7 +95,7 @@ object AcidOrc {
 
   def decodeBucketId(encoded: Int): Int = (encoded >> 16) & 0xfff
 
-  private val PartColName = "_graft_acid_part"
+  private[sources] val PartColName = "_graft_acid_part"
   private val AcidCols = Seq("operation", "originalTransaction", "bucket",
     "rowId", "currentTransaction", "row")
   private val IdCols = Seq("originalTransaction", "bucket", "rowId")
@@ -114,6 +115,11 @@ object AcidOrc {
 
   private[sources] def hidden(name: String): Boolean =
     name.startsWith(".") || name.startsWith("_")
+
+  /** A `k=v` partition directory (not a base/delta/delete_delta dir). */
+  private def isPartDir(name: String): Boolean =
+    !hidden(name) && name.contains("=") && BaseRe.unapplySeq(name).isEmpty &&
+      DeltaRe.unapplySeq(name).isEmpty && DeleteRe.unapplySeq(name).isEmpty
 
   /** Widest-range-wins selection of non-overlapping delta dirs above the
     * base (AcidUtils.getAcidState's ordering: ascending min write id,
@@ -143,9 +149,7 @@ object AcidOrc {
       Range(m.toLong, n.toLong, p) }.filter(_.max <= maxWid)
     val deletes = named.collect { case (DeleteRe(m, n), p) =>
       Range(m.toLong, n.toLong, p) }.filter(_.max <= maxWid)
-    val partDirs = named.filter { case (n, _) =>
-      !hidden(n) && n.contains("=") && BaseRe.unapplySeq(n).isEmpty &&
-        DeltaRe.unapplySeq(n).isEmpty && DeleteRe.unapplySeq(n).isEmpty }
+    val partDirs = named.filter { case (n, _) => isPartDir(n) }
     val originals = files.map(_.getPath).filterNot(p => hidden(p.getName))
 
     val here =
@@ -179,9 +183,7 @@ object AcidOrc {
       case (DeltaRe(m, n), p) if inRange(m.toLong, n.toLong) => p }
     val dels = named.collect {
       case (DeleteRe(m, n), p) if inRange(m.toLong, n.toLong) => p }
-    val partDirs = named.filter { case (n, _) =>
-      !hidden(n) && n.contains("=") && BaseRe.unapplySeq(n).isEmpty &&
-        DeltaRe.unapplySeq(n).isEmpty && DeleteRe.unapplySeq(n).isEmpty }
+    val partDirs = named.filter { case (n, _) => isPartDir(n) }
     val here =
       if (rows.nonEmpty || dels.nonEmpty) Seq((partSub, rows, dels)) else Nil
     here ++ partDirs.flatMap { case (n, p) =>
@@ -203,11 +205,7 @@ object AcidOrc {
         case (DeltaRe(_, n), _) => n.toLong
         case (DeleteRe(_, n), _) => n.toLong
       }
-      val sub = named.collect {
-        case (n, p) if !hidden(n) && n.contains("=") &&
-          BaseRe.unapplySeq(n).isEmpty && DeltaRe.unapplySeq(n).isEmpty &&
-          DeleteRe.unapplySeq(n).isEmpty => mx(p)
-      }
+      val sub = named.collect { case (n, p) if isPartDir(n) => mx(p) }
       (own ++ sub).foldLeft(-1L)(math.max)
     }
     mx(root)
@@ -221,31 +219,36 @@ object AcidOrc {
         f.getPath.toString -> f.getLen
     }
 
-  /** One scan task: a byte range of one bucket file. ORC's range contract
-    * (the OrcInputFormat split rule) reads exactly the stripes that START
-    * within [offset, offset+length) — ranges tile a file with no overlap
-    * and no gaps, so a 1 GB bucket file becomes ~8 parallel tasks instead
-    * of one.
-    */
-  private case class AcidSplit(file: String, partSub: String,
-      offset: Long, length: Long)
-
   /** Split size knob; ORC stripes are ~64 MB by default, so the default
     * groups a couple of stripes per task.
     */
   val SplitBytesKey = "spark.graft.acid.splitBytes"
 
+  private def splitBytes(spark: SparkSession): Long =
+    spark.conf.getOption(SplitBytesKey).map(_.toLong)
+      .getOrElse(128L * 1024 * 1024)
+
+  /** Byte-range splits of (file, length, partSub) ACID bucket files, at
+    * most [[SplitBytesKey]] bytes each.
+    */
   private def splitsOf(spark: SparkSession,
-      files: Seq[(String, Long, String)]): Seq[AcidSplit] = {
-    val splitBytes = spark.conf.getOption(SplitBytesKey)
-      .map(_.toLong).getOrElse(128L * 1024 * 1024)
+      files: Seq[(String, Long, String)]): Seq[Split] = {
+    val size = splitBytes(spark)
     files.flatMap { case (f, len, part) =>
-      if (len <= splitBytes) Seq(AcidSplit(f, part, 0L, Long.MaxValue - 1))
-      else (0L until len by splitBytes).map { off =>
-        AcidSplit(f, part, off, math.min(splitBytes, len - off))
+      if (len <= size) Seq(Split(f, part, 0L, Long.MaxValue - 1))
+      else (0L until len by size).map { off =>
+        Split(f, part, off, math.min(size, len - off))
       }
     }
   }
+
+  /** Splits of the bucket files in each (partSub, dirs) pair. */
+  private def dirSplits(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem,
+      dirs: Seq[(String, Seq[Path])]): Seq[Split] =
+    splitsOf(spark, dirs.flatMap { case (part, ds) =>
+      ds.flatMap(bucketFiles(fs, _)).map { case (f, len) => (f, len, part) }
+    })
 
   /** Footer metadata fetches and per-partition compaction waves fan out
     * through [[graft.Parallel]], at most 16 at a time (each compaction
@@ -254,7 +257,7 @@ object AcidOrc {
   private[sources] def parallelMap[A, B](in: Seq[A])(f: A => B): Seq[B] =
     graft.Parallel.map(in, 16)(f)
 
-  // ------------------------------------------------------ orc-core bridge
+  // ------------------------------------------------------- orc-core types
 
   /** TypeDescription → Catalyst type (the subset the reference's SerDes
     * produce; UNION has no Catalyst analog and is refused).
@@ -287,231 +290,6 @@ object AcidOrc {
     }
   }
 
-  /** One vector cell → the external Row value for `toCatalyst`'s type. */
-  private def cell(cv: vector.ColumnVector, td: TypeDescription,
-      r0: Int): Any = {
-    val r = if (cv.isRepeating) 0 else r0
-    if (!cv.noNulls && cv.isNull(r)) return null
-    import TypeDescription.Category._
-    td.getCategory match {
-      case BOOLEAN =>
-        cv.asInstanceOf[vector.LongColumnVector].vector(r) != 0L
-      case BYTE =>
-        cv.asInstanceOf[vector.LongColumnVector].vector(r).toByte
-      case SHORT =>
-        cv.asInstanceOf[vector.LongColumnVector].vector(r).toShort
-      case INT =>
-        cv.asInstanceOf[vector.LongColumnVector].vector(r).toInt
-      case LONG => cv.asInstanceOf[vector.LongColumnVector].vector(r)
-      case FLOAT =>
-        cv.asInstanceOf[vector.DoubleColumnVector].vector(r).toFloat
-      case DOUBLE => cv.asInstanceOf[vector.DoubleColumnVector].vector(r)
-      case STRING | VARCHAR | CHAR =>
-        val b = cv.asInstanceOf[vector.BytesColumnVector]
-        new String(b.vector(r), b.start(r), b.length(r), "UTF-8")
-      case BINARY =>
-        val b = cv.asInstanceOf[vector.BytesColumnVector]
-        java.util.Arrays.copyOfRange(b.vector(r), b.start(r),
-          b.start(r) + b.length(r))
-      case DATE =>
-        java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(
-          cv.asInstanceOf[vector.LongColumnVector].vector(r)))
-      case TIMESTAMP | TIMESTAMP_INSTANT =>
-        val t = cv.asInstanceOf[vector.TimestampColumnVector]
-        val ts = new java.sql.Timestamp(t.time(r))
-        ts.setNanos(t.nanos(r))
-        ts
-      case DECIMAL =>
-        cv.asInstanceOf[vector.DecimalColumnVector].vector(r)
-          .getHiveDecimal.bigDecimalValue()
-      case STRUCT =>
-        val s = cv.asInstanceOf[vector.StructColumnVector]
-        val kids = td.getChildren
-        Row.fromSeq((0 until kids.size()).map(i =>
-          cell(s.fields(i), kids.get(i), r)))
-      case LIST =>
-        val l = cv.asInstanceOf[vector.ListColumnVector]
-        val (off, len) = (l.offsets(r).toInt, l.lengths(r).toInt)
-        (off until off + len).map(i => cell(l.child, td.getChildren.get(0), i))
-      case MAP =>
-        val m = cv.asInstanceOf[vector.MapColumnVector]
-        val (off, len) = (m.offsets(r).toInt, m.lengths(r).toInt)
-        (off until off + len).map(i =>
-          cell(m.keys, td.getChildren.get(0), i) ->
-            cell(m.values, td.getChildren.get(1), i)).toMap
-      case other => throw new UnsupportedOperationException(
-        s"ORC type $other has no Catalyst analog")
-    }
-  }
-
-  /** include-columns flags for the wanted top-level fields (subtree ids
-    * marked wholesale) — the pruning `spark.read.orc` cannot apply here.
-    */
-  private def includeFlags(td: TypeDescription,
-      wanted: Seq[String]): Array[Boolean] = {
-    val inc = new Array[Boolean](td.getMaximumId + 1)
-    inc(0) = true
-    val names = td.getFieldNames
-    val kids = td.getChildren
-    (0 until names.size()).foreach { i =>
-      if (wanted.contains(names.get(i))) {
-        val k = kids.get(i)
-        (k.getId to k.getMaximumId).foreach(inc(_) = true)
-      }
-    }
-    inc
-  }
-
-  /** Compile a row-index → value converter for reference type `ref` over
-    * a possibly older-schema file vector: structs adapt by name (fields
-    * the file lacks read NULL, extra file fields are ignored — the
-    * reference's add-columns evolution); anything else must match types
-    * exactly, refused loudly otherwise. Compiled ONCE per task against
-    * the batch's (stable, reused) vectors — no per-row name lookups or
-    * type re-derivation on the bridge's hot path.
-    */
-  private def adapter(cv: vector.ColumnVector, fileTd: TypeDescription,
-      ref: DataType): Int => Any = (ref, toCatalyst(fileTd)) match {
-    case (rs: StructType, _: StructType) =>
-      val s = cv.asInstanceOf[vector.StructColumnVector]
-      val names = fileTd.getFieldNames
-      val idx = (0 until names.size()).map(names.get(_)).zipWithIndex.toMap
-      val kids: Array[Int => Any] = rs.fields.map { f =>
-        idx.get(f.name) match {
-          case Some(i) =>
-            adapter(s.fields(i), fileTd.getChildren.get(i), f.dataType)
-          case None => (_: Int) => null
-        }
-      }
-      (r0: Int) => {
-        val r = if (cv.isRepeating) 0 else r0
-        if (!cv.noNulls && cv.isNull(r)) null
-        else Row.fromSeq(kids.toSeq.map(_(r)))
-      }
-    case (want, got) if want == got =>
-      (r: Int) => cell(cv, fileTd, r)
-    case (want, got) => throw new UnsupportedOperationException(
-      s"ACID schema evolution changed a column's type ($got -> $want); " +
-        "only added/removed struct fields adapt — compact the table")
-  }
-
-  /** Distributed scan of ACID bucket files: one task per split, each an
-    * ORC RecordReader with IDENTITY schema (orc-core's acid detection
-    * forbids anything else) + include-columns. Emits `wanted` top-level
-    * columns plus the partition-subpath column. Files may carry older
-    * row-struct schemas (add-columns evolution): each task adapts its
-    * file's rows to the reference schema by name, missing fields NULL.
-    */
-  private def scanAcid(spark: SparkSession, splits: Seq[AcidSplit],
-      wanted: Seq[String]): DataFrame = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def schemaOf(file: String): TypeDescription = {
-      val r = OrcFile.createReader(new Path(file),
-        OrcFile.readerOptions(hconf))
-      try r.getSchema finally r.close()
-    }
-    // the reference schema is the WIDEST row struct among the scanned
-    // directories (the table's current schema after add-columns
-    // evolution) — one footer read per distinct base/delta dir, the same
-    // driver metadata cost the reference's split generation pays. The
-    // fetches run on a small pool so a thousand-delta uncompacted table
-    // pays max(latency) per 16-dir wave, not sum(latency), at plan time.
-    val dirHeads = splits.map(_.file).distinct
-      .groupBy(f => new Path(f).getParent.toString)
-      .map { case (_, fs) => fs.head }.toSeq
-    val fileTd = parallelMap(dirHeads)(schemaOf)
-      .maxBy { td =>
-        if (td.getCategory != TypeDescription.Category.STRUCT) -1
-        else {
-          val names = td.getFieldNames
-          val rowIdx = (0 until names.size()).find(i =>
-            names.get(i) == "row")
-          td.getMaximumId + rowIdx.map(i =>
-            td.getChildren.get(i).getMaximumId).getOrElse(0)
-        }
-      }
-    require(fileTd.getCategory == TypeDescription.Category.STRUCT,
-      s"not a struct-rooted ORC file under: ${splits.head.file}")
-    val present = {
-      val names = fileTd.getFieldNames
-      (0 until names.size()).map(names.get)
-    }
-    val missing = wanted.filterNot(present.contains)
-    require(missing.isEmpty,
-      s"ACID file ${splits.head.file} lacks columns: " +
-        missing.mkString(", "))
-    val fieldIdx = wanted.map(present.indexOf)
-    val schemaStr = fileTd.toString // TypeDescription is not serializable
-    val outSchema = StructType(
-      fieldIdx.map(i => StructField(present(i),
-        toCatalyst(fileTd.getChildren.get(i)))) :+
-        StructField(PartColName, StringType, nullable = false))
-    // ship the FS conf the driver resolved the files with
-    val confBytes = {
-      val bos = new java.io.ByteArrayOutputStream()
-      val dos = new java.io.DataOutputStream(bos)
-      hconf.write(dos)
-      dos.close()
-      bos.toByteArray
-    }
-    val bc = spark.sparkContext.broadcast(confBytes)
-    val idxArr = fieldIdx.toArray
-    val rdd = spark.sparkContext
-      .parallelize(splits, splits.size)
-      .flatMap { case AcidSplit(file, partSub, offset, length) =>
-        val conf = new org.apache.hadoop.conf.Configuration(false)
-        conf.readFields(new java.io.DataInputStream(
-          new java.io.ByteArrayInputStream(bc.value)))
-        val refTd = TypeDescription.fromString(schemaStr)
-        val refKids = refTd.getChildren
-        val reader = OrcFile.createReader(new Path(file),
-          OrcFile.readerOptions(conf))
-        // IDENTITY reader schema (the file's own): orc-core's acid
-        // detection remaps any other; evolution is adapted row-side
-        val td = reader.getSchema
-        val fileNames = {
-          val ns = td.getFieldNames
-          (0 until ns.size()).map(ns.get)
-        }
-        val fileIdx = idxArr.map(f => fileNames.indexOf(present(f)))
-        val rows = reader.rows(reader.options.schema(td)
-          .include(includeFlags(td, wanted)).range(offset, length))
-        // a downstream limit can abandon the iterator mid-file — close on
-        // task completion, not only on exhaustion
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit] { _ =>
-            try rows.close() catch { case _: Throwable => () }
-            try reader.close() catch { case _: Throwable => () }
-          })
-        val batch = td.createRowBatch()
-        val kids = td.getChildren
-        val converters: Array[Int => Any] = idxArr.indices.map { w =>
-          val fi = fileIdx(w)
-          if (fi < 0) (_: Int) => null
-          else adapter(batch.cols(fi), kids.get(fi),
-            toCatalyst(refKids.get(idxArr(w))))
-        }.toArray
-        new Iterator[Row] {
-          private var i = 0
-          private var n = 0
-          private var done = false
-          private def advance(): Unit =
-            while (i >= n && !done) {
-              if (rows.nextBatch(batch)) { n = batch.size; i = 0 }
-              else { done = true; rows.close(); reader.close() }
-            }
-          def hasNext: Boolean = { advance(); !done }
-          def next(): Row = {
-            advance()
-            val vals = converters.toSeq.map(_(i))
-            i += 1
-            Row.fromSeq(vals :+ partSub)
-          }
-        }
-      }
-    spark.createDataFrame(rdd, outSchema)
-  }
-
   // ------------------------------------------- pre-ACID original files
 
   /** Original-file name contract (ref ql/io/AcidUtils.java
@@ -522,9 +300,6 @@ object AcidOrc {
     */
   private val OriginalRe = """(\d+)_\d+(?:_copy_(\d+))?""".r
 
-  private case class OrigSplit(file: String, partSub: String, offset: Long,
-      length: Long, encodedBucket: Int, firstRowId: Long)
-
   /** Positional ROW__ID plan for pre-ACID originals: per (partition,
     * bucket), files sort base-then-copy_N and rows number 0..n across
     * them in that order — originalTransaction = 0, bucket = the encoded
@@ -533,13 +308,12 @@ object AcidOrc {
     * counts come from footers read here once per original file (driver
     * metadata cost bounded by file count, fetched in parallel waves), so
     * each byte-range split knows its exact first rowId and originals stay
-    * splittable. Returns the splits plus the widest root schema string.
+    * splittable. Returns the splits plus each file's root schema.
     */
   private def originalPlan(spark: SparkSession,
-      files: Seq[(Path, String)]): (Seq[OrigSplit], String) = {
+      files: Seq[(Path, String)]): (Seq[Split], Seq[TypeDescription]) = {
     val hconf = spark.sparkContext.hadoopConfiguration
-    val splitBytes = spark.conf.getOption(SplitBytesKey)
-      .map(_.toLong).getOrElse(128L * 1024 * 1024)
+    val size = splitBytes(spark)
     case class Meta(p: Path, part: String, bucketId: Int, copyN: Int,
         schema: TypeDescription, stripes: Seq[(Long, Long, Long)])
     val parsed = files.map { case (p, part) =>
@@ -561,9 +335,9 @@ object AcidOrc {
             (s.getOffset, s.getLength, s.getNumberOfRows)))
       } finally reader.close()
     }
-    val widest = metas.map(_.schema).maxBy(_.getMaximumId)
-    require(widest.getCategory == TypeDescription.Category.STRUCT,
-      s"original file ${metas.head.p} is not struct-rooted ORC")
+    metas.find(_.schema.getCategory != TypeDescription.Category.STRUCT)
+      .foreach(m => throw new IllegalArgumentException(
+        s"original file ${m.p} is not struct-rooted ORC"))
     val splits = metas.groupBy(m => (m.part, m.bucketId)).toSeq
       .sortBy(_._1).flatMap { case ((part, bucketId), group) =>
         var rowOffset = 0L
@@ -573,13 +347,13 @@ object AcidOrc {
         // changing it). NOT numeric: copy_10 sorts BEFORE copy_2, and the
         // stored ROW__IDs of any delete ever written depend on that.
         group.sortBy(_.p.getName).flatMap { m =>
-          // group stripes into ~splitBytes chunks; ORC's range contract
-          // reads exactly the stripes that START within the range
+          // group stripes into ~size chunks; ORC's range contract reads
+          // exactly the stripes that START within the range
           val chunks = scala.collection.mutable.Buffer(
             scala.collection.mutable.Buffer[(Long, Long, Long)]())
           var bytes = 0L
           m.stripes.foreach { s =>
-            if (chunks.last.nonEmpty && bytes + s._2 > splitBytes) {
+            if (chunks.last.nonEmpty && bytes + s._2 > size) {
               chunks += scala.collection.mutable.Buffer(); bytes = 0L
             }
             chunks.last += s; bytes += s._2
@@ -587,88 +361,13 @@ object AcidOrc {
           chunks.filter(_.nonEmpty).map { ch =>
             val first = rowOffset
             rowOffset += ch.map(_._3).sum
-            OrigSplit(m.p.toString, part, ch.head._1,
-              ch.last._1 - ch.head._1 + 1, encodeBucket(bucketId), first)
+            Split(m.p.toString, part, ch.head._1,
+              ch.last._1 - ch.head._1 + 1,
+              Some(OriginalIds(encodeBucket(bucketId), first)))
           }
         }
       }
-    (splits, widest.toString)
-  }
-
-  /** Distributed scan of original files with synthetic ROW__IDs attached:
-    * emits the widest schema's user columns (older files adapt by name,
-    * missing fields NULL) plus `originalTransaction` (always 0), `bucket`,
-    * `rowId` and the partition subpath — the same shape the ACID-side scan
-    * joins deletes against.
-    */
-  private def scanOriginals(spark: SparkSession, splits: Seq[OrigSplit],
-      refSchema: String): DataFrame = {
-    val refTd = TypeDescription.fromString(refSchema)
-    val refStruct = toCatalyst(refTd).asInstanceOf[StructType]
-    val outSchema = StructType(refStruct.fields.toSeq ++ Seq(
-      StructField("originalTransaction", LongType, nullable = false),
-      StructField("bucket", IntegerType, nullable = false),
-      StructField("rowId", LongType, nullable = false),
-      StructField(PartColName, StringType, nullable = false)))
-    val confBytes = {
-      val bos = new java.io.ByteArrayOutputStream()
-      val dos = new java.io.DataOutputStream(bos)
-      spark.sparkContext.hadoopConfiguration.write(dos)
-      dos.close()
-      bos.toByteArray
-    }
-    val bc = spark.sparkContext.broadcast(confBytes)
-    val rdd = spark.sparkContext.parallelize(splits, splits.size).flatMap {
-      case OrigSplit(file, partSub, offset, length, encB, firstRow) =>
-        val conf = new org.apache.hadoop.conf.Configuration(false)
-        conf.readFields(new java.io.DataInputStream(
-          new java.io.ByteArrayInputStream(bc.value)))
-        val ref = TypeDescription.fromString(refSchema)
-        val reader = OrcFile.createReader(new Path(file),
-          OrcFile.readerOptions(conf))
-        val td = reader.getSchema
-        val rows = reader.rows(reader.options.schema(td)
-          .range(offset, length))
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit] { _ =>
-            try rows.close() catch { case _: Throwable => () }
-            try reader.close() catch { case _: Throwable => () }
-          })
-        val batch = td.createRowBatch()
-        val names = td.getFieldNames
-        val idx = (0 until names.size()).map(names.get(_)).zipWithIndex.toMap
-        val refNames = ref.getFieldNames
-        val refKids = ref.getChildren
-        val converters: Array[Int => Any] =
-          (0 until refNames.size()).map { i =>
-            idx.get(refNames.get(i)) match {
-              case Some(fi) => adapter(batch.cols(fi), td.getChildren.get(fi),
-                toCatalyst(refKids.get(i)))
-              case None => (_: Int) => null
-            }
-          }.toArray
-        new Iterator[Row] {
-          private var i = 0
-          private var n = 0
-          private var done = false
-          private var rid = firstRow
-          private def advance(): Unit =
-            while (i >= n && !done) {
-              if (rows.nextBatch(batch)) { n = batch.size; i = 0 }
-              else { done = true; rows.close(); reader.close() }
-            }
-          def hasNext: Boolean = { advance(); !done }
-          def next(): Row = {
-            advance()
-            val vals = converters.toSeq.map(_(i))
-            i += 1
-            val out = Row.fromSeq(vals ++ Seq(0L, encB, rid, partSub))
-            rid += 1
-            out
-          }
-        }
-    }
-    spark.createDataFrame(rdd, outSchema)
+    (splits, metas.map(_.schema))
   }
 
   /** Write rows as ONE pre-ACID original file `<task>_0` (or
@@ -692,7 +391,6 @@ object AcidOrc {
     fs.rename(part, target)
     fs.delete(staging, true)
   }
-
   /** The raw event stream of one or more ACID files — the six wrapper
     * columns as-is, no snapshot reconstruction. The debugging/auditing
     * view (what `SELECT ROW__ID, *` shows in the reference).
@@ -703,7 +401,7 @@ object AcidOrc {
       val p = new Path(f)
       (f, p.getFileSystem(hconf).getFileStatus(p).getLen, "")
     }
-    scanAcid(spark, splitsOf(spark, sized), AcidCols).drop(PartColName)
+    scan(spark, splitsOf(spark, sized), AcidCols)
   }
 
   /** Operability view of the directory state the snapshot reconstruction
@@ -762,10 +460,25 @@ object AcidOrc {
   def partitionColumns(spark: SparkSession, table: String): Seq[String] = {
     val root = new Path(table)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    walk(fs, root, "").map(_.partSub).filter(_.nonEmpty)
-      .map(_.split("/").toSeq.map(_.split("=", 2)(0)))
-      .headOption.getOrElse(Nil)
+    partitionColumns(table, walk(fs, root, "").map(_.partSub))
   }
+
+  /** Key names of the `k=v` partition subpaths, which must agree. */
+  private def partitionColumns(table: String,
+      partSubs: Seq[String]): Seq[String] = {
+    val keyed = partSubs.filter(_.nonEmpty).distinct
+      .map(_.split("/").toSeq.map(_.split("=", 2)(0))).distinct
+    require(keyed.size <= 1, s"inconsistent partition layouts under $table: " +
+      keyed.map(_.mkString("/")).mkString(", "))
+    keyed.headOption.getOrElse(Nil)
+  }
+
+  /** Partition columns from the subpath column, which is then dropped. */
+  private def withParts(df: DataFrame, partCols: Seq[String]): DataFrame =
+    partCols.foldLeft(df) { (d, k) =>
+      d.withColumn(k, regexp_extract(col(PartColName),
+        java.util.regex.Pattern.quote(k) + "=([^/]+)", 1))
+    }.drop(PartColName)
 
   // ---------------------------------------------------------------- reader
 
@@ -779,8 +492,8 @@ object AcidOrc {
 
   /** As [[read]], plus each row's identity: `_acid_otid`, `_acid_bucket`,
     * `_acid_rowid` (the ROW__ID triple) and `_acid_part` (the partition
-    * subpath) — what the write verbs target deletes by. Refused on tables
-    * with pre-ACID originals (no reconstructible identity).
+    * subpath) — what the write verbs target deletes by. Pre-ACID originals
+    * carry the reference's positional ROW__IDs (see the object doc).
     */
   def readWithIds(spark: SparkSession, table: String,
       legacyUpdates: Boolean = false,
@@ -796,74 +509,39 @@ object AcidOrc {
     val states = walk(fs, root, "", maxWriteId)
     require(states.nonEmpty, s"no base_/delta_ directories under $table")
 
-    def paired(pick: StateDir => Seq[Path]): Seq[AcidSplit] =
-      splitsOf(spark, states.flatMap(s => pick(s).flatMap(bucketFiles(fs, _))
-        .map { case (f, len) => (f, len, s.partSub) }))
-    val rowFiles = paired(_.rowDirs)
-    val deleteFiles = paired(_.deleteDirs)
-    val originalFiles = states.flatMap(s =>
-      s.originals.map(_.toString -> s.partSub))
-    require(rowFiles.nonEmpty || originalFiles.nonEmpty,
+    val rowSplits =
+      dirSplits(spark, fs, states.map(s => s.partSub -> s.rowDirs))
+    val deleteSplits =
+      dirSplits(spark, fs, states.map(s => s.partSub -> s.deleteDirs))
+    val originalFiles = states.flatMap(s => s.originals.map(_ -> s.partSub))
+    require(rowSplits.nonEmpty || originalFiles.nonEmpty,
       s"ACID table $table has no data files")
+    val partCols = partitionColumns(table, states.map(_.partSub))
 
-    // partition columns: key names from the k=v subpaths (must agree)
-    val partCols: Seq[String] = {
-      val keyed = states.map(_.partSub).filter(_.nonEmpty)
-        .map(_.split("/").toSeq.map(_.split("=", 2)(0)))
-      require(keyed.distinct.size <= 1,
-        s"inconsistent partition layouts under $table: " +
-          keyed.distinct.map(_.mkString("/")).mkString(", "))
-      keyed.headOption.getOrElse(Nil)
-    }
-
-    // COLUMNAR fast path (see [[AcidColumnarOrc]]): the delete-free,
-    // no-id-projection state with ONE base/delta directory per partition
-    // — i.e. a compacted tree — reads through a zero-copy ColumnarBatch
-    // wrap of the row struct instead of the per-row bridge (measured
-    // 3.6x at 10M rows). Partition columns surface as constant vectors
-    // from each split's k=v subpath. A mixed-schema tree (add-columns
-    // evolution across partitions) keeps the adapting row bridge, as
-    // does `spark.graft.acid.columnarRead=false`.
-    if (!withIds && !legacyUpdates && deleteFiles.isEmpty &&
-        originalFiles.isEmpty && rowFiles.nonEmpty &&
-        rowFiles.groupBy(_.partSub).forall { case (_, fs) =>
-          fs.map(s => new Path(s.file).getParent.toString)
-            .distinct.size == 1 } &&
-        spark.conf.getOption("spark.graft.acid.columnarRead")
-          .forall(_.toBoolean)) {
-      val headsBySub = rowFiles.groupBy(_.partSub)
-        .map { case (_, fs) => fs.head.file }.toSeq
-      val schemas = parallelMap(headsBySub)(f =>
-        scala.util.Try(AcidColumnarOrc.rowSchema(f)).toOption)
-      if (schemas.forall(_.isDefined) && schemas.flatten.distinct.size == 1) {
-        val rowSchema = schemas.head.get
-        val schema = org.apache.spark.sql.types.StructType(
-          rowSchema.fields ++ partCols.map(c =>
-            org.apache.spark.sql.types.StructField(c,
-              org.apache.spark.sql.types.StringType, nullable = false)))
-        return AcidColumnarOrc.scan(spark, schema, partCols,
-          rowFiles.map(s => (s.file, s.offset, s.length, s.partSub)))
-      }
-      // else: schema drift across partitions — row bridge below
-    }
-
-    // delete events, shared by both sides: delete_delta dirs plus (legacy
-    // mode) op=2 records inline in regular deltas — the re-scan reads only
-    // the id columns off disk (include-columns)
+    // delete events: delete_delta dirs plus (legacy mode) op=2 records
+    // inline in regular deltas — the scans decode only the id columns
     val deletes: Option[DataFrame] = {
-      val fromDirs = if (deleteFiles.isEmpty) None
-        else Some(scanAcid(spark, deleteFiles, IdCols))
-      val inline = if (!legacyUpdates || rowFiles.isEmpty) None else Some(
-        scanAcid(spark, rowFiles, "operation" +: IdCols)
+      val fromDirs = if (deleteSplits.isEmpty) None
+        else Some(scan(spark, deleteSplits, IdCols :+ PartColName))
+      val inline = if (!legacyUpdates || rowSplits.isEmpty) None else Some(
+        scan(spark, rowSplits, "operation" +: IdCols :+ PartColName)
           .where(col("operation") === OpDelete).drop("operation"))
-      val both = fromDirs.toSeq ++ inline
-      if (both.isEmpty) None else Some(both.reduce(_ unionByName _))
+      (fromDirs ++ inline).reduceOption(_ unionByName _)
     }
 
-    val acidLive: Option[DataFrame] = if (rowFiles.isEmpty) None else {
-      val rows = scanAcid(spark, rowFiles,
-        if (legacyUpdates) AcidCols
-        else AcidCols.filterNot(Set("operation", "currentTransaction")))
+    // originals join the scan with their positional ROW__IDs only when
+    // identity is needed — identity-addressed verbs, or delete events that
+    // target originals (originalTransaction = 0, probed with a limit-1
+    // scan). Otherwise they lack the wrapper columns that trip orc-core's
+    // acid detection, and Spark's own pruned ORC read applies.
+    val positional = originalFiles.nonEmpty && (withIds || deletes.exists(
+      _.where(col("originalTransaction") === 0L).limit(1).count() > 0L))
+    val (originalSplits, originalRows) =
+      if (positional) originalPlan(spark, originalFiles) else (Nil, Nil)
+
+    val scanned = if (rowSplits.isEmpty && originalSplits.isEmpty) None else {
+      val rows = scan(spark, rowSplits ++ originalSplits,
+        AcidCols :+ PartColName, partCols, originalRows)
       val live =
         if (!legacyUpdates) rows
         else {
@@ -875,76 +553,24 @@ object AcidOrc {
             .withColumn("_graft_latest",
               max(col("currentTransaction")).over(w))
             .where(col("currentTransaction") === col("_graft_latest"))
-            .drop("_graft_latest")
         }
-      Some(deletes match {
-        case None => live
-        case Some(d) if applyDeletes => live.join(d,
-          IdCols :+ PartColName, "left_anti")
-        case Some(_) => live // CDC pre-image read: deletes resolved upstream
-      })
-    }
-
-    def withParts(df: DataFrame): DataFrame =
-      partCols.foldLeft(df) { (d, k) =>
-        d.withColumn(k, regexp_extract(col(PartColName),
-          java.util.regex.Pattern.quote(k) + "=([^/]+)", 1))
-      }.drop(PartColName)
-
-    val acidSide = acidLive.map { df =>
-      val cols =
-        if (!withIds) Seq(col("row.*"), col(PartColName))
-        else Seq(col("row.*"), col("originalTransaction").as("_acid_otid"),
-          col("bucket").as("_acid_bucket"), col("rowId").as("_acid_rowid"),
-          col(PartColName).as("_acid_part"), col(PartColName))
-      withParts(df.select(cols: _*))
-    }
-
-    val originalSide = if (originalFiles.isEmpty) None else {
-      // deletes against originals key on synthetic positional ROW__IDs
-      // (originalTransaction = 0). Reconstruct them only when identity is
-      // actually needed — identity-addressed verbs, or delete events that
-      // target originals (probed with a 3-column limit-1 scan); a plain
-      // read keeps the pruned columnar path below.
-      val zeroTxnDeletes = deletes.map(
-        _.where(col("originalTransaction") === 0L))
-      val positional = withIds ||
-        zeroTxnDeletes.exists(_.limit(1).count() > 0L)
-      if (positional) {
-        val (osplits, refSchema) = originalPlan(spark,
-          originalFiles.map { case (f, p) => new Path(f) -> p })
-        val scanned = scanOriginals(spark, osplits, refSchema)
-        val lived = zeroTxnDeletes match {
-          case Some(d) if applyDeletes =>
-            scanned.join(d, IdCols :+ PartColName, "left_anti")
-          case _ => scanned
-        }
-        val userCols = scanned.columns.toSeq
-          .filterNot((IdCols :+ PartColName).contains).map(col)
-        val cols =
-          if (!withIds) userCols :+ col(PartColName)
-          else userCols ++ Seq(
-            col("originalTransaction").as("_acid_otid"),
-            col("bucket").as("_acid_bucket"),
-            col("rowId").as("_acid_rowid"),
-            col(PartColName).as("_acid_part"), col(PartColName))
-        Some(withParts(lived.select(cols: _*)))
-      } else {
-        // pre-ACID files lack the wrapper columns, so orc-core's acid
-        // detection never fires — the ordinary pruned columnar read applies
-        Some(withParts(spark.read.orc(originalFiles.map(_._1): _*)
-          .withColumn(PartColName,
-            regexp_extract(input_file_name(),
-              "/((?:[^/=]+=[^/]+/)*)[^/]*$", 1))))
+      val kept = deletes match {
+        case Some(d) if applyDeletes =>
+          live.join(d, IdCols :+ PartColName, "left_anti")
+        case _ => live // CDC pre-image read: deletes resolved upstream
       }
+      val ids =
+        if (!withIds) Nil
+        else Seq(col("originalTransaction").as("_acid_otid"),
+          col("bucket").as("_acid_bucket"), col("rowId").as("_acid_rowid"),
+          col(PartColName).as("_acid_part"))
+      Some(kept.select(col("row.*") +: (ids ++ partCols.map(col)): _*))
     }
-
-    (acidSide, originalSide) match {
-      case (Some(a), Some(o)) => a.unionByName(o)
-      case (Some(a), None) => a
-      case (None, Some(o)) => o
-      case (None, None) => throw new IllegalStateException("unreachable")
-    }
+    val plainOriginals = if (positional || originalFiles.isEmpty) None else
+      Some(withParts(spark.read.orc(originalFiles.map(_._1.toString): _*)
+        .withColumn(PartColName, regexp_extract(input_file_name(),
+          "/((?:[^/=]+=[^/]+/)*)[^/]*$", 1)), partCols))
+    (scanned ++ plainOriginals).reduce(_ unionByName _)
   }
 
   /** Rows ADDED by delta commits with write ids in (fromWriteId,
@@ -972,50 +598,35 @@ object AcidOrc {
       s"ACID table $table received delete events in write-id range " +
         s"($fromWriteId, $toWriteId]; set ignoreDeletes=true to stream " +
         "inserts only, or withChangeType=true for CDC-shaped retractions")
-    val rowSplits = splitsOf(spark, changed.flatMap { case (part, dirs, _) =>
-      dirs.flatMap(bucketFiles(fs, _)).map { case (f, len) =>
-        (f, len, part) }
-    })
-    val delSplits = if (!withChangeType) Nil
-      else splitsOf(spark, changed.flatMap { case (part, _, dels) =>
-        dels.flatMap(bucketFiles(fs, _)).map { case (f, len) =>
-          (f, len, part) }
-      })
-    def tagged(df: DataFrame) = df
-      .withColumn("_change_type", lit("insert"))
-      .withColumn("_commit_writeid", lit(-1L))
+    val rowSplits = dirSplits(spark, fs, changed.map(c => c._1 -> c._2))
+    val delSplits =
+      if (!withChangeType) Nil
+      else dirSplits(spark, fs, changed.map(c => c._1 -> c._3))
     // empty range: a schema-correct empty frame off the current layout
     if (rowSplits.isEmpty && delSplits.isEmpty) {
       val empty = read(spark, table, maxWriteId = toWriteId).limit(0)
-      return if (withChangeType) tagged(empty) else empty
+      return if (!withChangeType) empty else empty
+        .withColumn("_change_type", lit("insert"))
+        .withColumn("_commit_writeid", lit(-1L))
     }
-    val partCols: Seq[String] = {
-      val keyed = changed.map(_._1).filter(_.nonEmpty)
-        .map(_.split("/").toSeq.map(_.split("=", 2)(0)))
-      keyed.headOption.getOrElse(Nil)
-    }
-    def withParts(df: DataFrame): DataFrame =
-      partCols.foldLeft(df) { (d, k) =>
-        d.withColumn(k, regexp_extract(col(PartColName),
-          java.util.regex.Pattern.quote(k) + "=([^/]+)", 1))
-      }.drop(PartColName)
-    if (!withChangeType) {
-      // rowSplits is non-empty here: delSplits is Nil in this mode, so an
-      // empty range already returned above
-      val rows = scanAcid(spark, rowSplits, Seq("row"))
-      return withParts(rows.select(col("row.*"), col(PartColName)))
-    }
+    val partCols = partitionColumns(table, changed.map(_._1))
     // CDC shape: inserts carry their own write id; deletes resolve ids →
     // pre-images against the deletes-not-applied snapshot at toWriteId
     val inserts: Option[DataFrame] = if (rowSplits.isEmpty) None else {
-      val rows = scanAcid(spark, rowSplits,
-        Seq("originalTransaction", "row"))
-      Some(withParts(rows.select(col("row.*"), col(PartColName),
-        lit("insert").as("_change_type"),
-        col("originalTransaction").as("_commit_writeid"))))
+      val rows = scan(spark, rowSplits,
+        Seq("row", "originalTransaction"), partCols)
+      val tags =
+        if (!withChangeType) Nil
+        else Seq(lit("insert").as("_change_type"),
+          col("originalTransaction").as("_commit_writeid"))
+      Some(rows.select(col("row.*") +: (partCols.map(col) ++ tags): _*))
     }
+    // delSplits is Nil unless withChangeType, so an empty range already
+    // returned above and inserts is defined here
+    if (!withChangeType) return inserts.get
     val deleted: Option[DataFrame] = if (delSplits.isEmpty) None else {
-      val events = scanAcid(spark, delSplits, IdCols :+ "currentTransaction")
+      val events = scan(spark, delSplits,
+        IdCols :+ "currentTransaction" :+ PartColName)
       val all = readInternal(spark, table, legacyUpdates = false,
         maxWriteId = toWriteId, withIds = true, applyDeletes = false)
       val joined = all.join(events,
@@ -1303,13 +914,11 @@ object AcidOrc {
         isDelete: Boolean): Unit = {
       if (ranged.size < 2) return // nothing to fold on this side
       val (mn, mx) = (ranged.map(_.min).min, ranged.map(_.max).max)
-      val splits = splitsOf(spark,
-        ranged.flatMap(r => bucketFiles(fs, r.dir))
-          .map { case (f, len) => (f, len, partSub) })
+      val splits = dirSplits(spark, fs, Seq(partSub -> ranged.map(_.dir)))
       if (splits.isEmpty) return // all-empty dirs — nothing to write
       // delete_delta files carry no `row` payload
       val cols = if (isDelete) AcidCols.filterNot(_ == "row") else AcidCols
-      val events = scanAcid(spark, splits, cols).drop(PartColName)
+      val events = scan(spark, splits, cols)
         .orderBy(col("originalTransaction"), col("bucket"), col("rowId"))
       val decoded = shiftright(col("bucket"), 16).bitwiseAND(lit(0xfff))
       val nBuckets = events.agg(max(decoded)).head() match {
@@ -1366,11 +975,7 @@ object AcidOrc {
         files.map(_.getPath).filterNot(p => hidden(p.getName))
           .foreach(fs.delete(_, false))
       }
-      named.foreach { case (n, p) =>
-        if (!hidden(n) && n.contains("=") && BaseRe.unapplySeq(n).isEmpty &&
-            DeltaRe.unapplySeq(n).isEmpty && DeleteRe.unapplySeq(n).isEmpty)
-          clean(p)
-      }
+      named.foreach { case (n, p) => if (isPartDir(n)) clean(p) }
     }
     clean(root)
   }

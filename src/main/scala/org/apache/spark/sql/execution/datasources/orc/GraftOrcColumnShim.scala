@@ -5,10 +5,11 @@ import org.apache.spark.sql.types.DataType
 
 /** Package-door access to Spark's ORC columnar wrappers (same pattern as
   * [[org.apache.spark.sql.GraftShims]]): `OrcColumnVectorUtils` is
-  * package-private, and it is exactly the adapter the ACID columnar fast
-  * path needs — it wraps an orc-core `ColumnVector` (including the
-  * `row` struct's children inside an ACID file batch) as a Spark
-  * [[org.apache.spark.sql.vectorized.ColumnVector]] with zero copying.
+  * package-private, and it is exactly the adapter the ACID scan
+  * ([[graft.sources.AcidColumnarOrc]]) needs — it wraps an orc-core
+  * `ColumnVector` (including the `row` struct's children inside an ACID
+  * file batch) as a Spark [[org.apache.spark.sql.vectorized.ColumnVector]]
+  * with zero copying.
   */
 object GraftOrcColumnShim {
 

@@ -3,24 +3,27 @@ package graft.sources
 import graft.{Engine, SparkSpec}
 import org.apache.spark.sql.functions._
 
-/** The delete-free base-only COLUMNAR fast path (AcidColumnarOrc).
+/** The one ACID scan (AcidColumnarOrc), checked against the frames the
+  * fixtures were written from.
   *
-  * Why it exists — r16 probes, pinned here as the design record: Spark's
-  * native ORC readers cannot open ACID-wrapper files AT ALL (orc-core's
-  * acid schema detection remaps batches underneath them):
+  * Why it drives orc-core itself — r16 probes, pinned here as the design
+  * record: Spark's native ORC readers cannot open ACID-wrapper files AT
+  * ALL (orc-core's acid schema detection remaps batches underneath them):
   * vectorized → ArrayIndexOutOfBounds, row-based-native and
   * nested-vectorized → StructColumnVector-as-LongColumnVector cast
-  * errors, and a non-acid reader schema fares no better. The row bridge
-  * is correct but measured 3.6x slower than a plain columnar ORC scan at
-  * 10M rows (0.91s vs 0.25s min-of-3). The fast path wraps the row
-  * struct's orc-core vectors zero-copy as Spark OrcColumnVectors.
+  * errors, and a non-acid reader schema fares no better. The scan wraps
+  * the file's orc-core vectors zero-copy as Spark column vectors instead
+  * (a per-row Row bridge measured 3.6x slower than a plain columnar ORC
+  * scan at 10M rows, 0.91s vs 0.25s min-of-3).
   */
 class AcidColumnarSpec extends SparkSpec {
 
   private def scratch(): String =
     java.nio.file.Files.createTempDirectory("graft_acidcol_").toString + "/t"
 
-  private def mkBase(dir: String, n: Long, buckets: Int): Unit = {
+  /** Writes a base of `n` rows; returns the frame it was written from. */
+  private def mkBase(dir: String, n: Long,
+      buckets: Int): org.apache.spark.sql.DataFrame = {
     val rows = spark.range(n).select(col("id").as("k"),
       (col("id") % 97).as("g"), (col("id") % 10007 / 100.0).as("x"),
       concat(lit("v"), col("id") % 1000).as("s"))
@@ -29,70 +32,74 @@ class AcidColumnarSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.rename(new org.apache.hadoop.fs.Path(dir, "delta_1_1"),
       new org.apache.hadoop.fs.Path(dir, "base_1"))
+    rows
   }
 
-  private def withRowBridge[A](body: => A): A = {
-    spark.conf.set("spark.graft.acid.columnarRead", "false")
-    try body finally spark.conf.unset("spark.graft.acid.columnarRead")
-  }
+  private def columnar(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.executedPlan.toString.contains("graft-acid-columnar")
 
-  test("base-only read takes the columnar path and matches the row " +
-      "bridge cell-for-cell; schema identical") {
+  private def cells(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  private def types(df: org.apache.spark.sql.DataFrame) =
+    df.schema.map(f => f.name -> f.dataType)
+
+  test("base-only read takes the columnar path and matches the written " +
+      "source frame cell-for-cell; column names and types identical") {
     val dir = scratch()
-    mkBase(dir, 5000, 2)
+    val source = mkBase(dir, 5000, 2)
     val fast = AcidOrc.read(spark, dir)
-    val slow = withRowBridge { AcidOrc.read(spark, dir) }
-    assert(fast.schema === slow.schema)
-    // the fast plan is a BatchScan over the DSv2 source; the bridge is not
-    assert(fast.queryExecution.executedPlan.toString
-      .contains("graft-acid-columnar"), fast.queryExecution.executedPlan)
-    val a = fast.collect().map(_.toSeq.mkString("|")).sorted
-    val b = slow.collect().map(_.toSeq.mkString("|")).sorted
+    assert(types(fast) === types(source))
+    assert(fast.schema.forall(_.nullable)) // file columns may hold NULLs
+    // the plan is a BatchScan over the DSv2 source
+    assert(columnar(fast), fast.queryExecution.executedPlan)
+    val a = cells(fast)
     assert(a.length === 5000)
-    assert(a === b)
+    assert(a === cells(source))
   }
 
   test("column pruning reaches orc-core: a two-column aggregate decodes " +
       "only those row children and answers identically") {
     val dir = scratch()
-    mkBase(dir, 20000, 2)
+    val source = mkBase(dir, 20000, 2)
     def agg(df: org.apache.spark.sql.DataFrame) =
       df.groupBy(col("g")).agg(count(lit(1)).as("n"), sum(col("x")).as("sx"))
         .collect().map(r => (r.getLong(0), r.getLong(1),
           math.round(r.getDouble(2) * 100))).sortBy(_._1).toSeq
     val fast = AcidOrc.read(spark, dir)
-    assert(fast.select(col("g"), col("x")).queryExecution.executedPlan
-      .toString.contains("graft-acid-columnar"))
-    assert(agg(fast) === withRowBridge { agg(AcidOrc.read(spark, dir)) })
+    assert(columnar(fast.select(col("g"), col("x"))))
+    assert(agg(fast) === agg(source))
     // count(*) over an empty projection works too
     assert(AcidOrc.read(spark, dir).count() === 20000L)
   }
 
   test("PARTITIONED base-only trees take the columnar path: partition " +
-      "columns surface as constant vectors and match the row bridge") {
+      "columns surface as constant vectors and match the source frames") {
     val dir = scratch()
-    AcidOrc.appendDelta(spark, s"$dir/p=a", 1L,
-      spark.range(100).select(col("id").as("k"), (col("id") % 5).as("v")))
-    AcidOrc.appendDelta(spark, s"$dir/p=b%20c", 1L,
-      spark.range(50).select((col("id") + 1000).as("k"),
-        (col("id") % 3).as("v")))
+    val pa = spark.range(100).select(col("id").as("k"), (col("id") % 5).as("v"))
+    val pbc = spark.range(50).select((col("id") + 1000).as("k"),
+      (col("id") % 3).as("v"))
+    AcidOrc.appendDelta(spark, s"$dir/p=a", 1L, pa)
+    AcidOrc.appendDelta(spark, s"$dir/p=b%20c", 1L, pbc)
     val fast = AcidOrc.read(spark, dir)
-    assert(fast.queryExecution.executedPlan.toString
-      .contains("graft-acid-columnar"), fast.queryExecution.executedPlan)
-    val slow = withRowBridge { AcidOrc.read(spark, dir) }
-    assert(fast.schema === slow.schema)
+    assert(columnar(fast), fast.queryExecution.executedPlan)
+    // partition values are the raw dir-segment strings, never null
+    val source = pa.withColumn("p", lit("a"))
+      .unionByName(pbc.withColumn("p", lit("b%20c")))
+    assert(types(fast) === types(source))
+    assert(fast.schema("p").nullable === false)
     assert(fast.columns.toSeq === Seq("k", "v", "p"))
-    val a = fast.collect().map(_.toSeq.mkString("|")).sorted
-    val b = slow.collect().map(_.toSeq.mkString("|")).sorted
+    val a = cells(fast)
     assert(a.length === 150)
-    assert(a === b, "partitioned columnar read diverged from the bridge")
+    assert(a === cells(source), "partitioned read diverged from the source")
     // partition-pruned aggregate stays columnar and answers per-value
     assert(AcidOrc.read(spark, dir).where(col("p") === "a").count() === 100)
   }
 
-  test("the gate declines everything that is not the post-compaction " +
-      "state: deletes, id projections, multi-delta dirs, mixed schemas") {
-    // deletes present -> row bridge
+  test("every state scans through graft-acid-columnar: deletes, id " +
+      "projections, multi-delta dirs, drift across partitions, originals " +
+      "with identity, legacy updates") {
+    // deletes present
     val d1 = scratch()
     mkBase(d1, 500, 1)
     val doomed = AcidOrc.rawEvents(spark, s"$d1/base_1/bucket_00000")
@@ -100,33 +107,46 @@ class AcidColumnarSpec extends SparkSpec {
       .select(col("originalTransaction"), col("bucket"), col("rowId"))
     AcidOrc.appendDeleteDelta(spark, d1, 2L, doomed, buckets = 1)
     val withDel = AcidOrc.read(spark, d1)
-    assert(!withDel.queryExecution.executedPlan.toString
-      .contains("graft-acid-columnar"))
+    assert(columnar(withDel))
     assert(withDel.count() === 500 - 72) // k % 7 == 0 in [0, 500): 72 rows
-    // id projection -> row bridge
+    // id projection
     val d2 = scratch()
     mkBase(d2, 100, 1)
-    assert(!AcidOrc.readWithIds(spark, d2).queryExecution.executedPlan
-      .toString.contains("graft-acid-columnar"))
-    // several live delta dirs (uncompacted) -> row bridge
+    val withIds = AcidOrc.readWithIds(spark, d2)
+    assert(columnar(withIds))
+    assert(withIds.count() === 100)
+    // several live delta dirs (uncompacted)
     val d3 = scratch()
     AcidOrc.appendDelta(spark, d3, 1L,
       spark.range(10).select(col("id").as("k")))
     AcidOrc.appendDelta(spark, d3, 2L,
       spark.range(10).select((col("id") + 10).as("k")))
-    assert(!AcidOrc.read(spark, d3).queryExecution.executedPlan.toString
-      .contains("graft-acid-columnar"))
+    assert(columnar(AcidOrc.read(spark, d3)))
     assert(AcidOrc.read(spark, d3).count() === 20)
-    // add-columns schema drift ACROSS partitions -> adapting row bridge
+    // add-columns schema drift ACROSS partitions
     val d4 = scratch()
     AcidOrc.appendDelta(spark, s"$d4/p=a", 1L,
       spark.range(5).select(col("id").as("k")))
     AcidOrc.appendDelta(spark, s"$d4/p=b", 1L,
       spark.range(5).select(col("id").as("k"), (col("id") * 2).as("w")))
     val drift = AcidOrc.read(spark, d4)
-    assert(!drift.queryExecution.executedPlan.toString
-      .contains("graft-acid-columnar"))
+    assert(columnar(drift))
     assert(drift.count() === 10)
+    assert(drift.where(col("p") === "a" && col("w").isNull).count() === 5)
+    // pre-ACID originals read with their positional identity
+    val d5 = scratch()
+    AcidOrc.writeOriginal(spark, d5, spark.range(7).select(col("id").as("k")))
+    AcidOrc.writeOriginal(spark, d5,
+      spark.range(3).select((col("id") + 7).as("k")), taskId = 1)
+    val originals = AcidOrc.readWithIds(spark, d5)
+    assert(columnar(originals))
+    assert(originals.count() === 10)
+    // legacy (pre-split-update) latest-wins reads
+    val d6 = scratch()
+    mkBase(d6, 100, 1)
+    val legacy = AcidOrc.read(spark, d6, legacyUpdates = true)
+    assert(columnar(legacy))
+    assert(legacy.count() === 100)
   }
 
   test("byte-range splits slice one large base file into parallel " +
@@ -136,8 +156,7 @@ class AcidColumnarSpec extends SparkSpec {
     spark.conf.set(AcidOrc.SplitBytesKey, "65536") // force many ranges
     try {
       val df = AcidOrc.read(spark, dir)
-      assert(df.queryExecution.executedPlan.toString
-        .contains("graft-acid-columnar"))
+      assert(columnar(df))
       assert(df.count() === 200000L)
       assert(df.agg(sum(col("k"))).head.getLong(0) ===
         (0L until 200000L).sum)

@@ -626,6 +626,23 @@ class AcidOrcSpec extends SparkSpec {
     }
   }
 
+  test("readChanges refuses an inconsistent partition layout, as read " +
+      "does, instead of labelling one key's rows with another's") {
+    val dir = scratch()
+    import spark.implicits._
+    AcidOrc.appendDelta(spark, s"$dir/a=1", 1L, Seq(1L, 2L).toDF("k"))
+    AcidOrc.appendDelta(spark, s"$dir/b=2", 2L, Seq(3L).toDF("k"))
+    val snapshot = intercept[IllegalArgumentException] {
+      AcidOrc.read(spark, dir)
+    }
+    assert(snapshot.getMessage.contains("inconsistent partition layouts"))
+    val changes = intercept[IllegalArgumentException] {
+      AcidOrc.readChanges(spark, dir, 0L, 2L).collect()
+    }
+    assert(changes.getMessage.contains("inconsistent partition layouts"),
+      changes.getMessage)
+  }
+
   test("multi-bucket writes round-trip and bucket ids decode") {
     val dir = scratch()
     AcidOrc.appendDelta(spark, dir, 5L, orders.limit(1000), buckets = 4)
