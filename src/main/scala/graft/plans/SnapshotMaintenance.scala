@@ -61,8 +61,9 @@ private[plans] trait SnapshotMaintenanceOps { self: Snapshots.SnapshotTable =>
           if (head.deletes.isEmpty) head.deletes
           else {
             val dels = readDeletes(head.deletes)
+            // sidecar entries hold provenance names, not manifest names
             val keptDf = spark.createDataFrame(
-              keptFiles.map(org.apache.spark.sql.Row(_)).asJava,
+              keptFiles.map(f => org.apache.spark.sql.Row(provenanceName(f))).asJava,
               org.apache.spark.sql.types.StructType(Seq(
                 org.apache.spark.sql.types.StructField("__kept",
                   org.apache.spark.sql.types.StringType))))

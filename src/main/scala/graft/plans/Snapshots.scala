@@ -961,10 +961,9 @@ object Snapshots {
     private def scanRelationMeta(m: Manifest,
         schema: org.apache.spark.sql.types.StructType,
         isStreaming: Boolean = false): DataFrame = {
-      val prefix = metaPathPrefix(m)
       def attach(base: DataFrame): DataFrame =
         base.withColumn("__file",
-            expr(s"substring(_metadata.file_path, ${prefix.length + 2})"))
+            expr(s"substring(_metadata.file_path, ${metaPathPrefix.length + 1})"))
           .withColumn("__pos", col("_metadata.row_index"))
       val groups = specGroups(m)
       if (groups.size <= 1 && groups.forall(_._1 == m.partitionCols))
@@ -1018,7 +1017,7 @@ object Snapshots {
         schema.fields.map(f => f.copy(name = m.physical(f.name))))
       val dataSchema = org.apache.spark.sql.types.StructType(
         physSchema.fields.filterNot(f => m.partitionCols.contains(f.name)))
-      val index = new SnapshotFileIndex(fs.makeQualified(rootPath), fs, m,
+      val index = new SnapshotFileIndex(qualifiedRoot, fs, m,
         physSchema, bloomPrune)
       // bucketed tables surface their layout to the planner: the scan
       // reports HashPartitioning(col, n) (plus per-bucket file grouping and
@@ -1036,43 +1035,36 @@ object Snapshots {
         .ofRows(spark, LogicalRelation(rel, isStreaming = isStreaming))
     }
 
-    /** How the parquet reader renders this table's root in
-      * `_metadata.file_path` (scheme rendering differs from Hadoop's
-      * `makeQualified`), probed once per table handle from a single file.
+    /** The table root as the scans see it: [[SnapshotFileIndex]] hands the
+      * reader `new Path(qualifiedRoot, f)` for every manifest file `f`.
       */
-    @volatile private var cachedMetaPrefix: String = null
-    private def metaPathPrefix(m: Manifest): String = {
-      if (cachedMetaPrefix == null) {
-        // probe over ALL files (the first may be a 0-row file); whichever
-        // file the sampled row came from, its absolute path ends with its
-        // table-relative name — the prefix is what precedes it
-        // probe through the SAME relation the reads use — path rendering
-        // differs between reader implementations, and the prefix must match
-        // what _metadata.file_path yields in the actual scans
-        // per spec generation (`_metadata` resolves only on a direct file
-        // relation, not a mixed-spec union), first group with a row wins —
-        // every file shares the one table-root prefix
-        val sample = specGroups(m).iterator.map { case (spec, fls) =>
-          scanOne(m.copy(partitionCols = spec, files = fls),
-              schemaOf(m.schemaJson))
-            .select(col("_metadata.file_path")).take(1)
-        }.find(_.nonEmpty).getOrElse(Array.empty[org.apache.spark.sql.Row])
-        sample.headOption match {
-          case Some(row) =>
-            val abs = row.getString(0)
-            val rel = m.files.find(f => abs.endsWith("/" + f)).getOrElse(
-              sys.error(s"_metadata.file_path '$abs' matches no manifest file"))
-            cachedMetaPrefix = abs.dropRight(rel.length + 1)
-          case None =>
-            // every data file holds zero rows (writers can stage empty part
-            // files): no row exists to render a path, and none can ever
-            // match a delete entry — any well-formed prefix serves, and it
-            // is NOT cached so a later append re-probes the real rendering
-            return fs.makeQualified(rootPath).toString
-        }
-      }
-      cachedMetaPrefix
+    private[plans] lazy val qualifiedRoot: Path = fs.makeQualified(rootPath)
+
+    /** What precedes a file's provenance name in `_metadata.file_path`:
+      * the reader renders each file as `new Path(qualifiedRoot, f).toUri`
+      * (a `file:/…` form, where `qualifiedRoot.toUri` alone renders
+      * `file:///…`), so the prefix is derived on the driver from that same
+      * rendering of a child path.
+      */
+    private lazy val metaPathPrefix: String =
+      new Path(qualifiedRoot, "_").toUri.toString.dropRight(1)
+
+    /** Manifest file `f` as the provenance column `__file` and the delete
+      * sidecars render it: the table-relative tail of the URI-encoded
+      * `_metadata.file_path` (`p=a%20b` where the manifest holds the raw
+      * `p=a b`). Every comparison of provenance names with manifest names
+      * goes through here.
+      */
+    private[plans] def provenanceName(f: String): String = {
+      val abs = new Path(qualifiedRoot, f).toUri.toString
+      require(abs.startsWith(metaPathPrefix),
+        s"file '$abs' is not under the table root '$metaPathPrefix'")
+      abs.substring(metaPathPrefix.length)
     }
+
+    /** The files of `m` whose provenance names are in `names`. */
+    private[plans] def filesNamed(m: Manifest, names: Set[String]): Set[String] =
+      m.files.filter(f => names(provenanceName(f))).toSet
 
     /** Anti-join the manifest's pending delete entries (provenance columns
       * are preserved). Entries referencing files no longer in the manifest
@@ -1254,8 +1246,8 @@ object Snapshots {
       val dels = readDeletes(newDel)
       val affected = dels.select("file").distinct()
         .collect().map(_.getString(0)).toSet // bounded: affected files only
-      val base = readFilesMeta(head.copy(files =
-        head.files.filter(affected), deletes = Nil))
+      val base = readFilesMeta(head.copy(
+        files = head.files.filter(filesNamed(head, affected)), deletes = Nil))
       base.join(dels,
           base("__file") === dels("file") && base("__pos") === dels("pos"),
           "left_semi")
@@ -1586,10 +1578,10 @@ object Snapshots {
         // are discovered over VISIBLE rows, and the rewritten post-image
         // folds those deletes in (a deleted row can never resurrect)
         val visible = applyDeletes(readFilesMeta(head), head)
-        val affected = visible.filter(predicate)
+        val affected = filesNamed(head, visible.filter(predicate)
           .select(col("__file")).distinct()
           .collect().map(_.getString(0))
-          .toSet
+          .toSet)
         if (affected.isEmpty) None // nothing matched — no-op
         else {
           val schema = schemaOf(head.schemaJson)
@@ -1623,24 +1615,56 @@ object Snapshots {
       * against [[deleteWhere]]'s O(affected files), traded for a read-time
       * merge until [[compact]] folds the deletes into rewritten base files
       * (stale entries then match nothing and vacuum drops their sidecars).
+      * One evaluation of the predicate per attempt (see [[retireAndAppend]]).
       * Racing writers serialize exactly like COW: a lost CAS replays the
       * predicate against the winning snapshot.
       */
     def deleteWhereMergeOnRead(cond: Column, maxRetries: Int = 10): Manifest =
       commit("delete-mor", maxRetries) { head =>
         if (head.files.isEmpty) None
-        else {
-          val matches = applyDeletes(readFilesMeta(head), head)
+        else retireAndAppend(head, "delete-mor",
+          applyDeletes(readFilesMeta(head), head)
             .filter(coalesce(cond, lit(false)))
-            .select(col("__file").as("file"), col("__pos").as("pos"))
-          if (matches.isEmpty) None // nothing matched — no-op
-          else {
-            val sidecars = writeDeletes(matches)
-            if (sidecars.isEmpty) None
-            else Some(head.copy(deletes = head.deletes ++ sidecars))
-          }
-        }
+            .select(col("__file"), col("__pos")),
+          retire = lit(true), append = lit(false))
       }
+
+    /** The merge-on-read commit step every MOR writer shares: `rows` is the
+      * statement's match set — provenance (`__file`, `__pos`) plus, for
+      * writers that append, the table's columns as they are to be written.
+      * It is evaluated ONCE per attempt: persisted, counted in one job (a
+      * failure raised inside the plan, like MERGE's cardinality guard,
+      * surfaces here, before any file is written), then read back from the
+      * cache for the `retire` rows' (file, pos) sidecar and the `append`
+      * rows' new files. The cache is released when the attempt ends,
+      * whether it published, lost the race or failed. None when no row
+      * retires or appends (a no-op).
+      */
+    private def retireAndAppend(head: Manifest, action: String,
+        rows: DataFrame, retire: Column, append: Column): Option[Manifest] = {
+      val cached = rows.persist()
+      try {
+        val n = cached.agg(count(when(retire, lit(1))),
+          count(when(append, lit(1)))).head()
+        val (nRetire, nAppend) = (n.getLong(0), n.getLong(1))
+        if (nRetire == 0 && nAppend == 0) None
+        else {
+          val sidecars =
+            if (nRetire == 0) Nil
+            else writeDeletes(cached.filter(retire)
+              .select(col("__file").as("file"), col("__pos").as("pos")))
+          val schema = schemaOf(head.schemaJson)
+          val (staged, stagedStats) =
+            if (nAppend == 0) (Nil, Map.empty[String, FileStat])
+            else stage(validateConstraints(
+              conform(cached.filter(append), schema), action),
+              head.partitionCols, head.colMapping)
+          Some(head.copy(files = head.files ++ staged,
+            stats = head.stats ++ stagedStats,
+            deletes = head.deletes ++ sidecars))
+        }
+      } finally cached.unpersist()
+    }
 
     /** Schema evolution — ALTER TABLE ADD COLUMNS (ref: the reference's
       * AlterTableAddColsDesc under ql/ddl/table/): a metadata-only commit
@@ -1916,8 +1940,9 @@ object Snapshots {
       * reference's (delete_delta, delta) pair for an ACID UPDATE (ref
       * ql/src/java/org/apache/hadoop/hive/ql/io/AcidUtils.java — an update
       * is a delete event + an insert event), committed atomically as one
-      * version. Cost is O(matched rows), not O(affected files); reads merge
-      * until [[compact]] folds both sides in.
+      * version. Cost is O(matched rows), not O(affected files), with one
+      * evaluation of the predicate per attempt (see [[retireAndAppend]]);
+      * reads merge until [[compact]] folds both sides in.
       */
     def updateWhereMergeOnRead(cond: Column, set: Map[String, Column],
         maxRetries: Int = 10): Manifest = {
@@ -1925,27 +1950,14 @@ object Snapshots {
       commit("update-mor", maxRetries) { head =>
         if (head.files.isEmpty) None
         else {
-          val schema = schemaOf(head.schemaJson)
           val matches = applyDeletes(readFilesMeta(head), head)
             .filter(coalesce(cond, lit(false)))
-          if (matches.isEmpty) None // nothing matched — no-op
-          else {
-            // old positions retire via sidecar...
-            val sidecars = writeDeletes(
-              matches.select(col("__file").as("file"), col("__pos").as("pos")))
-            // ...and the updated images append as fresh files (conformed: a
-            // SET expression must not change the column's physical type; one
-            // projection so all assignments read the PRE-update row)
-            val updated = conform(
-              matches.select(schema.fieldNames.map(c =>
-                set.getOrElse(c, col(c)).as(c)): _*), schema)
-            val (staged, stagedStats) = stage(
-              validateConstraints(updated, "update-mor"), head.partitionCols,
-              head.colMapping)
-            Some(head.copy(files = head.files ++ staged,
-              stats = head.stats ++ stagedStats,
-              deletes = head.deletes ++ sidecars))
-          }
+          // one projection so all assignments read the PRE-update row
+          retireAndAppend(head, "update-mor",
+            matches.select(Seq(col("__file"), col("__pos")) ++
+              schemaOf(head.schemaJson).fieldNames.map(c =>
+                set.getOrElse(c, col(c)).as(c)): _*),
+            retire = lit(true), append = lit(true))
         }
       }
     }
@@ -2010,7 +2022,8 @@ object Snapshots {
       * folds it. Single unconditional matched arm (update set / delete),
       * matching the convenience [[merge]]; multi-arm statements use the
       * COW [[mergeSpec]]. Cardinality guard and racing-writer semantics
-      * are identical to the COW path.
+      * are identical to the COW path. One evaluation of the statement's
+      * join per attempt (see [[mergeMergeOnReadKeys]]).
       */
     def mergeMergeOnRead(source: DataFrame, targetKey: String, sourceKey: String,
         whenMatchedSet: Map[String, Column] = Map.empty,
@@ -2026,7 +2039,11 @@ object Snapshots {
       * equi-pairs (targetCol, sourceCol). `insertValues`, when given, maps
       * each target column to its insert expression over the source row
       * (unassigned columns fill with NULL); when absent the whole source
-      * row inserts by name.
+      * row inserts by name. Each attempt evaluates the statement once: one
+      * source-side join against the visible target (left-outer when
+      * unmatched rows insert, inner otherwise), materialized by
+      * [[retireAndAppend]], whose result alone decides the no-op and feeds
+      * the sidecar, the updated images and the inserts.
       */
     def mergeMergeOnReadKeys(source: DataFrame,
         mergeKeys: Seq[(String, String)],
@@ -2065,61 +2082,39 @@ object Snapshots {
         concat(lit(s"$sk="), coalesce(col(sk).cast("string"), lit("NULL")))
       }: _*)
 
+      // a joined row is matched iff it carries target provenance
+      val matched = col("__file").isNotNull
+      def out(c: String): Column = {
+        val image = whenMatchedSet.getOrElse(c, tc(c))
+        val insert = insertValues.fold(col(c))(_.getOrElse(c, lit(null)))
+        if (!insertUnmatched) image
+        else if (!hasMatchedArm || whenMatchedDelete) insert
+        else when(matched, image).otherwise(insert)
+      }
       commit("merge-mor", maxRetries) { head =>
-        val schema = schemaOf(head.schemaJson)
-        val visible = applyDeletes(readFilesMeta(head), head)
-        // matched pairs keep (file, pos) provenance for the sidecar plus
-        // both rows' values for the updated image
-        val tRen = visible.select(
-          schema.fieldNames.map(c => col(c).as("__t_" + c)) ++
-            Seq(col("__file"), col("__pos")): _*)
-        val joinCond = mergeKeys.map { case (tk, sk) => tc(tk) === col(sk) }
-          .reduce(_ && _)
-        val joined = tRen.join(guarded, joinCond, "inner")
-        val matches =
-          if (!guardCardinality) joined
-          else joined.filter(when(col("__src_cnt") > 1,
-            raise_error(concat(
-              lit("MERGE cardinality violation: multiple source rows match target "),
-              keyDesc))).isNull)
-        val inserts =
-          if (!insertUnmatched) None
-          else {
-            val keys = visible.select(mergeKeys.map { case (tk, _) =>
-              col(tk).as("__t_" + tk) }: _*).distinct()
-            val antiCond = mergeKeys.map { case (tk, sk) =>
-              source(sk) === keys("__t_" + tk) }.reduce(_ && _)
-            val unmatched = source.join(keys, antiCond, "left_anti")
-            val rows = insertValues match {
-              case Some(vs) => unmatched.select(schema.fieldNames.map(c =>
-                vs.getOrElse(c, lit(null)).as(c)): _*)
-              case None => unmatched.select(schema.fieldNames.map(col): _*)
-            }
-            if (rows.isEmpty) None else Some(rows)
-          }
-        val hasMatches = hasMatchedArm && !matches.isEmpty
-        if (!hasMatches && inserts.isEmpty) None // no-op
+        if (!hasMatchedArm && !insertUnmatched) None // no arm can act
         else {
-          // old positions of matched rows retire via sidecar...
-          val sidecars =
-            if (!hasMatches) Nil
-            else writeDeletes(
-              matches.select(col("__file").as("file"), col("__pos").as("pos")))
-          // ...and updated images + inserts append as fresh files
-          val images =
-            if (whenMatchedDelete || !hasMatches) None
-            else Some(matches.select(schema.fieldNames.map(c =>
-              whenMatchedSet.getOrElse(c, tc(c)).as(c)): _*))
-          val appended = (images.toSeq ++ inserts.toSeq)
-            .reduceOption(_ unionByName _)
-            .map(df => stage(
-              validateConstraints(conform(df, schema), "merge-mor"),
-              head.partitionCols, head.colMapping))
-          val (staged, stagedStats) =
-            appended.getOrElse((Seq.empty[String], Map.empty[String, FileStat]))
-          Some(head.copy(files = head.files ++ staged,
-            stats = head.stats ++ stagedStats,
-            deletes = head.deletes ++ sidecars))
+          val schema = schemaOf(head.schemaJson)
+          val tRen = applyDeletes(readFilesMeta(head), head).select(
+            schema.fieldNames.map(c => col(c).as("__t_" + c)) ++
+              Seq(col("__file"), col("__pos")): _*)
+          val joinCond = mergeKeys.map { case (tk, sk) => tc(tk) === col(sk) }
+            .reduce(_ && _)
+          val joined = guarded.join(tRen, joinCond,
+            if (insertUnmatched) "left_outer" else "inner")
+          val checked =
+            if (!guardCardinality) joined
+            else joined.filter(when(matched && col("__src_cnt") > 1,
+              raise_error(concat(
+                lit("MERGE cardinality violation: multiple source rows match target "),
+                keyDesc))).isNull)
+          // matched rows retire under a matched arm and re-append as images
+          // under an update arm; unmatched rows (left-outer only) insert
+          retireAndAppend(head, "merge-mor",
+            checked.select(Seq(col("__file"), col("__pos")) ++
+              schema.fieldNames.map(c => out(c).as(c)): _*),
+            retire = matched && lit(hasMatchedArm),
+            append = !matched || lit(hasMatchedArm && !whenMatchedDelete))
         }
       }
     }
@@ -2170,11 +2165,11 @@ object Snapshots {
           visible(tk) === keys("__s_" + tk) }.reduce(_ && _)
         val affected =
           if (spec.touchesUnmatchedTargets) head.files.toSet
-          else visible
+          else filesNamed(head, visible
             .join(keys, semiCond, "left_semi")
             .select(col("__file")).distinct()
             .collect().map(_.getString(0))
-            .toSet
+            .toSet)
         if (affected.isEmpty && spec.inserts.isEmpty) None // nothing matched, no inserts
         else {
           val post =

@@ -987,25 +987,33 @@ object AcidOrc {
     * (streaming/HiveStreamingConnection.java), so files written here read
     * back under the same contract. Rows hash into `buckets` files by
     * md5(all columns) with ROW__IDs assigned per bucket in that
-    * deterministic order; one staged write per bucket.
+    * deterministic order; one staged write per bucket. Struct, map and
+    * non-string array columns enter the hash as their string cast (the
+    * concatenation takes only strings and string arrays); every other
+    * column hashes as it always has.
     */
   def appendDelta(spark: SparkSession, table: String, writeId: Long,
       df: DataFrame, buckets: Int = 1): Unit = {
     require(writeId >= 1L,
       "write id 0 is reserved for pre-ACID originals' synthetic ROW__IDs")
     import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.types.{ArrayType, MapType, StringType, StructType}
     val cols = df.columns.map(col)
+    val rowHash = md5(concat_ws("", df.schema.fields.map(f => f.dataType match {
+      case ArrayType(StringType, _) => col(f.name)
+      case _: StructType | _: MapType | _: ArrayType => col(f.name).cast(StringType)
+      case _ => col(f.name)
+    }).toIndexedSeq: _*))
     val bucketed = df
       .withColumn("_graft_b",
         // registry-proof Murmur3 (never functions.hash: the engine rebinds
         // the SQL name `hash` to HiveHash, and Spark 4 resolves
         // functions.hash through the session registry — bucket routing
         // must not depend on whether registerAll ran)
-        pmod(abs(graft.plans.PartitionTransforms.murmur3(
-          md5(concat_ws("", cols: _*)))), lit(buckets)))
+        pmod(abs(graft.plans.PartitionTransforms.murmur3(rowHash)), lit(buckets)))
       .withColumn("_graft_rid", row_number().over(Window
         .partitionBy(col("_graft_b"))
-        .orderBy(md5(concat_ws("", cols: _*)))).cast("long") - 1L)
+        .orderBy(rowHash)).cast("long") - 1L)
     writeAcidFiles(spark, table, s"delta_${writeId}_$writeId",
       bucketed.select(
         lit(OpInsert).as("operation"),

@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.SparkSpec
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.{SparkPlan, FileSourceScanExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, CartesianProductExec, BroadcastNestedLoopJoinExec}
@@ -38,13 +38,15 @@ class DsPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
-  /** The executed plan with AQE's final subtree expanded. */
-  private def executed(df: DataFrame): SparkPlan = {
-    df.collect() // materialize so AQE finalizes
-    df.queryExecution.executedPlan match {
+  /** Collects `df` (so AQE finalizes) and returns the executed plan, AQE's
+    * final subtree expanded, with the rows that collect produced.
+    */
+  private def executed(df: DataFrame): (SparkPlan, Array[Row]) = {
+    val rows = df.collect()
+    (df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan
       case p => p
-    }
+    }, rows)
   }
 
   private def q88Block(hour: Int, half: Int, alias: String): String = {
@@ -567,8 +569,7 @@ class DsPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private def checkQuery(name: String, sql: String,
       expectDpp: Boolean): SparkPlan = {
     val df = spark.sql(sql)
-    val plan = executed(df)
-    val good = df.collect()
+    val (plan, good) = executed(df)
     // an empty result would let AQE collapse to EmptyRelation and
     // vacuously pass every plan assertion — the data must exercise
     // each query for real
@@ -4896,14 +4897,13 @@ class DsPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         (graft.plans.CteMaterialize.ThresholdKey -> "2"): _*) {
       // default-inline context (measured here, asserted as the baseline
       // the materialization removes): cross_sales twice = 2 fact scans
-      val inlined = executed(spark.sql(sql64))
+      val (inlined, want) = executed(spark.sql(sql64))
       val inlinedCounts = collectWithSubqueries(inlined) {
         case s: FileSourceScanExec =>
           s.tableIdentifier.map(_.table).getOrElse("<pathOnly>")
       }.groupBy(identity).view.mapValues(_.size).toMap
       assert(inlinedCounts.getOrElse("store_sales", 0) === 2,
         s"inline baseline drifted: $inlinedCounts")
-      val want = spark.sql(sql64).collect()
 
       // materialized: the final plan scans the staged parquet twice and
       // the CTE body's tables ZERO times — the 17-way join ran once,
@@ -4913,8 +4913,7 @@ class DsPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(materialized ne parsed,
         "CteMaterialize declined query64 — threshold gate broken?")
       val df = org.apache.spark.sql.GraftShims.ofRows(spark, materialized)
-      val got = df.collect()
-      val plan = executed(df)
+      val (plan, got) = executed(df)
       val counts = collectWithSubqueries(plan) {
         case s: FileSourceScanExec =>
           s.tableIdentifier.map(_.table).getOrElse("<pathOnly>")

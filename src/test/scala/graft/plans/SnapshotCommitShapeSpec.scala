@@ -85,23 +85,23 @@ class SnapshotCommitShapeSpec extends SparkSpec {
         insertUnmatched = true), sourceKeysUnique = false, maxRetries = 10))
     val src2 = Seq((4L, "mm", 0), (101L, "new2", 1)).toDF("id", "s", "k")
       .coalesce(1)
-    // images and inserts stage as one file each
-    shape("merge-mor", 6, 3)(t.mergeMergeOnRead(src2, "id", "id",
+    // images and inserts stage together, from one evaluation: one file
+    shape("merge-mor", 5, 3)(t.mergeMergeOnRead(src2, "id", "id",
       whenMatchedSet = Map("s" -> lit("mm"))))
 
     // schema evolution: metadata-only, files and sidecars carried
-    shape("add-columns", 6, 3)(t.addColumns(StructType(Seq(
+    shape("add-columns", 5, 3)(t.addColumns(StructType(Seq(
       StructField("x", LongType), StructField("y", StringType)))))
     cm = Map("s2" -> "s")
-    shape("rename-column", 6, 3)(t.renameColumn("s", "s2"))
+    shape("rename-column", 5, 3)(t.renameColumn("s", "s2"))
     dp = Seq("y")
-    shape("drop-column", 6, 3)(t.dropColumn("y"))
-    shape("alter-column-type", 6, 3)(t.alterColumnType("k", LongType))
+    shape("drop-column", 5, 3)(t.dropColumn("y"))
+    shape("alter-column-type", 5, 3)(t.alterColumnType("k", LongType))
     pc = Seq("k")
-    shape("set-partition-spec", 6, 3, Map("previous-spec" -> ""))(
+    shape("set-partition-spec", 5, 3, Map("previous-spec" -> ""))(
       t.setPartitionSpec(Seq("k")))
     // k = id % 4: one file per partition dir
-    shape("append", 10, 3)(t.append(
+    shape("append", 9, 3)(t.append(
       (40 until 48).map(i => (i.toLong, s"row$i", (i % 4).toLong, 7L))
         .toDF("id", "s2", "k", "x").coalesce(1)))
 
