@@ -76,7 +76,6 @@ class QtestDateSpec extends QtestHarness {
 
   test("date_1.q: CAST(date AS numeric/boolean) answers NULL — Hive " +
       "parity under the engine's non-ANSI mode") {
-    QtestHarness.fixtures
     val r = Engine.sql(spark, sfDir,
       "select cast(cast('2011-01-01' as date) as boolean), " +
         "cast(cast('2011-01-01' as date) as tinyint), " +

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One curated conformance case from the reference's qtest corpus (see
@@ -21,12 +21,46 @@ private[graft] case class QCase(file: String, name: String, spark: String,
   * datasets loaded as qt_-prefixed temp views AND parquet dirs for the
   * DuckDB side — built once per JVM (the specs share [[SparkSpec]]'s
   * session).
+  *
+  * [[standIns]] is the in-repo alternative for checks that need only a
+  * table's schema (plus a row count or two), not the reference's rows:
+  * the refusal specs (QtestNegativeSpec, QtestNegativeWave17Spec,
+  * QtestNegativeWave17bSpec) run on it as their `spark`, and
+  * QtestDecimalSpec's decimal_6 result-type check reads its `qt_kv9a`.
+  * It is a session of its own so the stand-ins can never shadow the
+  * reference-backed `qt_` views that the DuckDB twin legs compare
+  * against their parquet dirs in the same JVM.
   */
 object QtestHarness {
 
   val refData = "/root/reference/data/files"
 
   private lazy val spark = SparkSpec.session
+
+  /** Writes each frame to a parquet dir under `dir` and registers the
+    * `session` temp view over the WRITTEN file; returns the table→dir map.
+    */
+  private def materialize(session: SparkSession, dir: String,
+      tables: Map[String, DataFrame]): Map[String, String] =
+    tables.map { case (name, df) =>
+      val d = s"$dir/$name"
+      df.write.parquet(d)
+      // BOTH engines read the identical parquet: registering the Spark
+      // view over the written file (not the in-memory frame) keeps probe
+      // columns non-constant-foldable — a LocalRelation lit(null) probe
+      // lets Spark's NullPropagation fold `NULL IN (<empty subquery>)`
+      // to NULL where a scan probe (and Hive, and DuckDB) answers FALSE
+      session.read.parquet(d).createOrReplaceTempView(name)
+      name -> d
+    }
+
+  /** srcpart: `src` under each of Hive's four (ds, hr) partitions. */
+  private def partitioned(src: DataFrame): DataFrame =
+    Seq(("2008-04-08", "11"), ("2008-04-08", "12"),
+      ("2008-04-09", "11"), ("2008-04-09", "12"))
+      .map { case (ds, hr) => src.withColumn("ds", lit(ds))
+        .withColumn("hr", lit(hr)) }
+      .reduce(_ unionByName _)
 
   // ------------------------------------------------------------ fixtures
 
@@ -56,11 +90,7 @@ object QtestHarness {
         .select(cols.map(c => coalesce(col(c), lit("")).as(c)): _*)
     val src = kv(s"$refData/kv1.txt", "", Seq("key", "value"))
     val src1 = kv(s"$refData/kv3.txt", "", Seq("key", "value"))
-    val srcpart = Seq(("2008-04-08", "11"), ("2008-04-08", "12"),
-      ("2008-04-09", "11"), ("2008-04-09", "12"))
-      .map { case (ds, hr) => src.withColumn("ds", lit(ds))
-        .withColumn("hr", lit(hr)) }
-      .reduce(_ unionByName _)
+    val srcpart = partitioned(src)
     val t1 = kv(s"$refData/T1.txt", "", Seq("key", "val"))
     val t2 = kv(s"$refData/T2.txt", "", Seq("key", "val"))
     val t3 = kv(s"$refData/T3.txt", "", Seq("key", "val"))
@@ -343,17 +373,78 @@ object QtestHarness {
       "qt_cbot3" -> cboT("cbo_t3.txt"),
       "qt_dec64" -> dec64(DecimalType(7, 2)),
       "qt_dec64b" -> dec64(DecimalType(7, 1)))
-    all.map { case (name, df) =>
-      val d = s"$dir/$name"
-      df.write.parquet(d)
-      // BOTH engines read the identical parquet: registering the Spark
-      // view over the written file (not the in-memory frame) keeps probe
-      // columns non-constant-foldable — a LocalRelation lit(null) probe
-      // lets Spark's NullPropagation fold `NULL IN (<empty subquery>)`
-      // to NULL where a scan probe (and Hive, and DuckDB) answers FALSE
-      spark.read.parquet(d).createOrReplaceTempView(name)
-      name -> d
+    materialize(spark, dir, all)
+  }
+
+  // ---------------------------------------------------------- stand-ins
+
+  /** A session of its own (a clone of [[SparkSpec]]'s, configured by
+    * `Engine.configure`) holding deterministic, schema-identical
+    * stand-ins for the `qt_` tables the refusal specs and decimal_6 name:
+    *  - `qt_src(key, value)`: 500 rows, key = 7·i mod 310 (190 keys
+    *    twice), value `val_<key>` — kv1's shape;
+    *  - `qt_src1(key, value)`: 25 rows, every 5th key and every 5th
+    *    value empty — kv3's shape;
+    *  - `qt_srcpart(key, value, ds, hr)`: qt_src under 4 partitions;
+    *  - `qt_t1`/`qt_t2(key, val)`, `qt_gsets(a, b, c)`: 6 string rows;
+    *  - `qt_part`: 26 rows of tpch part's 9 columns (the multi-row
+    *    scalar-subquery refusal needs ≥2);
+    *  - `qt_kv9a(key decimal(10,5), value int)`: 8 rows.
+    * Any reference-backed `qt_` view the clone inherits is dropped, so
+    * the stand-ins are all that answers here, reference or not. With the
+    * reference present, each stand-in's schema must equal its
+    * [[fixtures]] view's.
+    */
+  lazy val standIns: SparkSession = {
+    val s = org.apache.spark.sql.GraftShims.cloneSession(SparkSpec.session)
+    Engine.configure(s)
+    s.catalog.listTables().collect()
+      .filter(t => t.isTemporary && t.name.startsWith("qt_"))
+      .foreach(t => s.catalog.dropTempView(t.name))
+    val i = col("id")
+    def str(c: org.apache.spark.sql.Column) = c.cast("string")
+    val key = str(i * 7 % 310)
+    val src = s.range(500)
+      .select(key.as("key"), concat(lit("val_"), key).as("value"))
+    val src1 = s.range(25).select(
+      when(i % 5 === 4, lit("")).otherwise(key).as("key"),
+      when(i % 5 === 2, lit("")).otherwise(concat(lit("val_"), key))
+        .as("value"))
+    val t1 = s.range(6).select(str(i + 1).as("key"), str(i + 11).as("val"))
+    val t2 = s.range(6).select(str(i + 2).as("key"), str(i + 12).as("val"))
+    val gsets = s.range(6)
+      .select(str(i % 3 + 1).as("a"), str(i % 2 + 1).as("b"),
+        str(i + 1).as("c"))
+    val part = s.range(26).select(
+      (i + 1).cast("int").as("p_partkey"),
+      concat(lit("part "), str(i)).as("p_name"),
+      concat(lit("Manufacturer#"), str(i % 5 + 1)).as("p_mfgr"),
+      concat(lit("Brand#"), str(i % 5 + 1), str(i % 4 + 1)).as("p_brand"),
+      element_at(array(lit("PROMO BRUSHED STEEL"),
+        lit("STANDARD POLISHED TIN"), lit("LARGE ANODIZED BRASS")),
+        (i % 3 + 1).cast("int")).as("p_type"),
+      (i * 7 % 50 + 1).cast("int").as("p_size"),
+      element_at(array(lit("SM CASE"), lit("JUMBO BOX")),
+        (i % 2 + 1).cast("int")).as("p_container"),
+      (i * 10.5 + 900).cast("double").as("p_retailprice"),
+      concat(lit("comment "), str(i)).as("p_comment"))
+    val kv9a = s.range(8).select(
+      (i / 8 - 2.5).cast("decimal(10,5)").as("key"),
+      i.cast("int").as("value"))
+    val all = Map("qt_src" -> src, "qt_src1" -> src1,
+      "qt_srcpart" -> partitioned(src), "qt_t1" -> t1, "qt_t2" -> t2,
+      "qt_gsets" -> gsets, "qt_part" -> part, "qt_kv9a" -> kv9a)
+    materialize(s, java.nio.file.Files
+      .createTempDirectory("graft_qtest_standin_").toString, all)
+    if (haveRef) {
+      fixtures // the reference-backed views, in SparkSpec's session
+      all.keys.foreach { name =>
+        val (got, want) = (s.table(name).schema, spark.table(name).schema)
+        require(got == want,
+          s"stand-in $name drifted from its fixture: $got vs $want")
+      }
     }
+    s
   }
 
 }

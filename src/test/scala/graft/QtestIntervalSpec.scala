@@ -70,7 +70,6 @@ class QtestIntervalSpec extends QtestHarness {
   test("KNOWN DIVERGENCE, pinned (interval_alt.q): `a = b IN (list)` " +
       "precedence — Hive binds IN tighter (a = (b IN list)), Spark " +
       "binds = tighter ((a = b) IN list)") {
-    QtestHarness.fixtures
     // Hive: false = (false IN (true,false)) = false = true = FALSE
     // Spark: (false = false) IN (true,false) = true IN (...) = TRUE
     // A parser-precedence rewrite would have to re-associate every

@@ -77,7 +77,6 @@ class QtestWindowingMoreSpec extends QtestHarness {
 
   test("distinct window over an ORDERED running frame computes the " +
       "running distinct aggregate (frame-faithful lowering)") {
-    QtestHarness.fixtures
     val rows = Engine.sql(spark, sfDir,
       "SELECT v, COUNT(DISTINCT v) OVER (ORDER BY ord ROWS UNBOUNDED " +
         "PRECEDING) AS c, SUM(DISTINCT v) OVER (ORDER BY ord ROWS " +
