@@ -20,6 +20,24 @@ object Engine {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Static confs: fixed when the SparkContext starts, so only a session
+    * builder (or a cluster's spark-defaults) can set them — not
+    * [[configure]], and not a `spark.sql.extensions` bootstrap.
+    *
+    * `spark.sql.codegen.cache.maxEntries`: Spark's generated-class cache is
+    * one JVM-wide LRU keyed by (context class loader, source), 100 entries
+    * by default. In local mode every whole-stage body is compiled twice,
+    * on the driver thread and on an executor thread, so the ~102 distinct
+    * bodies of one perfbench `table_writes` pass need ~204 keys; a cyclic
+    * LRU that holds 100 of them misses on nearly every access, and each
+    * miss re-runs Janino, class loading and a fresh round of JIT work
+    * (measured on a 4-vCPU host over a 30 s window: 477 compiles in 7
+    * passes at 100 entries, 6 in 9 passes at 1000). At 1000 a repeated
+    * statement reuses its compiled class.
+    */
+  val staticConfs: Map[String, String] = Map(
+    "spark.sql.codegen.cache.maxEntries" -> "1000")
+
   /** Build a session with scale-appropriate defaults. On a real cluster the
     * same settings apply; only `master` changes.
     */
@@ -27,6 +45,7 @@ object Engine {
     val spark = SparkSession.builder()
       .master(master)
       .appName(appName)
+      .config(staticConfs)
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

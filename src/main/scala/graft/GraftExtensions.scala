@@ -20,7 +20,9 @@ import graft.plans.FrontDoor
   * `spark.sql` enforces privileges, row filters and column masks exactly
   * as [[Engine.sql]] does. Session confs are the deployment's: set the
   * ones [[Engine.configure]] sets (`spark.sql.ansi.enabled=false` above
-  * all — Hive's coercions need non-ANSI mode). Local embedding uses
+  * all — Hive's coercions need non-ANSI mode), and the static confs of
+  * [[Engine.staticConfs]] in the cluster conf, since no extension can set a
+  * static conf once the context is up. Local embedding uses
   * `Engine.session()` / `Engine.configure(spark)` directly.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

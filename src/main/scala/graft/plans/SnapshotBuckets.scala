@@ -26,25 +26,21 @@ private[plans] trait SnapshotBucketOps { self: Snapshots.SnapshotTable =>
     */
   private[plans] def tagBucketFiles(dir: Path): Unit = {
     import org.apache.spark.sql.execution.datasources.BucketingUtils
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val s = it.next()
-      val name = s.getPath.getName
-      if (s.isFile && !name.startsWith("_") && !name.startsWith(".")) {
-        val seg = s.getPath.getParent.getName
-        require(seg.startsWith(GbCol + "="),
-          s"staged bucketed file not under a $GbCol dir: ${s.getPath}")
-        val b = seg.substring(GbCol.length + 1).toInt
-        val dot = name.indexOf('.')
-        val tagged =
-          if (dot < 0) name + BucketingUtils.bucketIdToString(b)
-          else name.substring(0, dot) + BucketingUtils.bucketIdToString(b) +
-            name.substring(dot)
-        require(BucketingUtils.getBucketId(tagged).contains(b),
-          s"bucket tag failed to parse back: $tagged")
-        require(fs.rename(s.getPath, new Path(s.getPath.getParent, tagged)),
-          s"could not rename staged file ${s.getPath}")
-      }
+    dataFiles(dir).map(_.getPath).foreach { p =>
+      val name = p.getName
+      val seg = p.getParent.getName
+      require(seg.startsWith(GbCol + "="),
+        s"staged bucketed file not under a $GbCol dir: $p")
+      val b = seg.substring(GbCol.length + 1).toInt
+      val dot = name.indexOf('.')
+      val tagged =
+        if (dot < 0) name + BucketingUtils.bucketIdToString(b)
+        else name.substring(0, dot) + BucketingUtils.bucketIdToString(b) +
+          name.substring(dot)
+      require(BucketingUtils.getBucketId(tagged).contains(b),
+        s"bucket tag failed to parse back: $tagged")
+      require(fs.rename(p, new Path(p.getParent, tagged)),
+        s"could not rename staged file $p")
     }
   }
 

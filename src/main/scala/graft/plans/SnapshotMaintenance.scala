@@ -272,16 +272,16 @@ private[plans] trait SnapshotMaintenanceOps { self: Snapshots.SnapshotTable =>
     Seq("data", "deletes").foreach { sub =>
       val dir = new Path(rootPath, sub)
       if (fs.exists(dir)) {
-        listParquet(dir).foreach { p =>
-          if (!referenced.contains(relativize(p)) &&
-              fs.getFileStatus(p).getModificationTime <= cutoff) {
-            fs.delete(p, false)
+        dataFiles(dir).foreach { f =>
+          if (!referenced.contains(relativize(f.getPath)) &&
+              f.getModificationTime <= cutoff) {
+            fs.delete(f.getPath, false)
             reclaimed += 1
           }
         }
         // drop now-empty, aged-out commit dirs
         fs.listStatus(dir).foreach { d =>
-          if (d.isDirectory && listParquet(d.getPath).isEmpty &&
+          if (d.isDirectory && dataFiles(d.getPath).isEmpty &&
               d.getModificationTime <= cutoff)
             fs.delete(d.getPath, true)
         }

@@ -624,7 +624,7 @@ object Snapshots {
         // is sound — a self-rewrite re-buckets with ZERO shuffles.
         AutoBucketedScanPin.withPinned(spark)(runWrite())
       if (bCfg.isDefined) tagBucketFiles(dir)
-      val listed = listParquetStatus(dir)
+      val listed = dataFiles(dir)
       val files = listed.map(s => relativize(s.getPath))
       if (files.isEmpty) (files, Map.empty)
       else {
@@ -817,30 +817,19 @@ object Snapshots {
       }
     }
 
-    private def listParquetStatus(dir: Path)
-        : Seq[org.apache.hadoop.fs.LocatedFileStatus] = {
-      val it = fs.listFiles(dir, true)
-      val buf = Seq.newBuilder[org.apache.hadoop.fs.LocatedFileStatus]
-      while (it.hasNext) {
-        val s = it.next()
-        if (s.isFile && !s.getPath.getName.startsWith("_") &&
-            !s.getPath.getName.startsWith("."))
-          buf += s
+    /** The data files under `dir`, recursively, in listing order: every
+      * file whose name starts with neither `_` (`_SUCCESS`, `_bucket.json`)
+      * nor `.` (checksums). Built on `listStatus`, not `listFiles`: the
+      * latter's `LocatedFileStatus` copies each file's permissions, which
+      * the local filesystem loads by forking `ls -ld` once per file.
+      */
+    private[plans] def dataFiles(dir: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(dir).toSeq.flatMap { s =>
+        val name = s.getPath.getName
+        if (s.isDirectory) dataFiles(s.getPath)
+        else if (name.startsWith("_") || name.startsWith(".")) Nil
+        else Seq(s)
       }
-      buf.result()
-    }
-
-    private[plans] def listParquet(dir: Path): Seq[Path] = {
-      val it = fs.listFiles(dir, true)
-      val buf = Seq.newBuilder[Path]
-      while (it.hasNext) {
-        val s = it.next()
-        if (s.isFile && !s.getPath.getName.startsWith("_") &&
-            !s.getPath.getName.startsWith("."))
-          buf += s.getPath
-      }
-      buf.result()
-    }
 
     private[plans] def relativize(p: Path): String = {
       val rootUri = fs.makeQualified(rootPath).toUri.getPath
@@ -1095,7 +1084,7 @@ object Snapshots {
     private[plans] def writeDeletes(entries: DataFrame): Seq[String] = {
       val dir = new Path(rootPath, s"deletes/${UUID.randomUUID().toString.take(8)}")
       entries.write.mode("errorifexists").parquet(dir.toString)
-      listParquet(dir).map(relativize)
+      dataFiles(dir).map(s => relativize(s.getPath))
     }
 
     // ---------------------------------------------------------------- reads

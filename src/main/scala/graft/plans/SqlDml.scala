@@ -71,6 +71,7 @@ object SqlDml {
               df => df.where(!coalesce(c, lit(false))))
             done(spark)
           })
+          .orElse(refuseView(spark, "DELETE", t))
       case UpdateTable(t, assigns, cond) =>
         targetOf(t).map { tgt =>
           runUpdate(spark, tgt, assigns, cond); done(spark) }
@@ -91,9 +92,11 @@ object SqlDml {
             }.toIndexedSeq: _*))
             done(spark)
           })
+          .orElse(refuseView(spark, "UPDATE", t))
       case m: MergeIntoTable =>
         targetOf(m.targetTable).map { tgt =>
           runMerge(spark, tgt, m); done(spark) }
+          .orElse(refuseView(spark, "MERGE", m.targetTable))
       case i: InsertIntoStatement =>
         targetOf(i.table).map { tgt => runInsert(spark, tgt, i); done(spark) }
       case CreateTable(UnresolvedIdentifier(Seq(name), _), columns, partitioning,
@@ -620,17 +623,41 @@ object SqlDml {
       val parts = u.multipartIdentifier
       if (NamedTables.refOf(parts).isDefined) None
       else {
-        val ident = parts match {
-          case Seq(t) => Some(TableIdentifier(t))
-          case Seq(db, t) => Some(TableIdentifier(t, Some(db)))
-          case _ => None
-        }
-        ident.filter { id =>
+        catalogIdent(parts).filter { id =>
           val cat = spark.sessionState.catalog
           cat.tableExists(id) &&
             cat.getTableMetadata(id).tableType != CatalogTableType.VIEW
         }.map(id => (id, quals + norm(id.table)))
       }
+    case _ => None
+  }
+
+  private def catalogIdent(parts: Seq[String]): Option[TableIdentifier] =
+    parts match {
+      case Seq(t) => Some(TableIdentifier(t))
+      case Seq(db, t) => Some(TableIdentifier(t, Some(db)))
+      case _ => None
+    }
+
+  /** Refuses row-level DML whose target names a view (temporary or
+    * catalog): a view has no files to rewrite, and on a temp view Spark
+    * fails with an INTERNAL_ERROR (DELETE, UPDATE) or blames a table it
+    * calls `unknown` (MERGE). None for any other target, so a missing name
+    * keeps Spark's own not-found error.
+    */
+  private def refuseView(spark: SparkSession, verb: String,
+      plan: LogicalPlan): Option[DataFrame] = plan match {
+    case SubqueryAlias(_, child) => refuseView(spark, verb, child)
+    case u: UnresolvedRelation =>
+      val parts = u.multipartIdentifier
+      val cat = spark.sessionState.catalog
+      val isView = cat.isTempView(parts) || catalogIdent(parts).exists(id =>
+        cat.tableExists(id) &&
+          cat.getTableMetadata(id).tableType == CatalogTableType.VIEW)
+      if (isView) throw new UnsupportedOperationException(
+        s"$verb on ${parts.mkString(".")} is not supported: it is a view, and " +
+          "row-level DML needs a snapshot, registered or catalog table")
+      None
     case _ => None
   }
 

@@ -16,6 +16,7 @@ object SparkSpec {
     val s = SparkSession.builder()
       .master("local[8]")
       .appName("graft-test")
+      .config(Engine.staticConfs)
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir",

@@ -646,6 +646,25 @@ class SqlDmlSpec extends SparkSpec {
     assert(sql("SELECT count(*) AS n FROM snapshot_changes('sqldml_tvfn', 0)").head.getLong(0) === 10)
   }
 
+  test("UPDATE, DELETE and MERGE on a temp view refuse, naming the view") {
+    items(0, 10).createOrReplaceTempView("sqldml_tmpview")
+    try Seq(
+      "DELETE FROM sqldml_tmpview WHERE id = 3",
+      "UPDATE sqldml_tmpview SET price = 0 WHERE id = 3",
+      "UPDATE sqldml_tmpview v SET price = 0 WHERE v.id = 3",
+      "MERGE INTO sqldml_tmpview t USING sqldml_tmpview s ON t.id = s.id " +
+        "WHEN MATCHED THEN UPDATE SET price = s.price").foreach { q =>
+      val e = intercept[UnsupportedOperationException](sql(q))
+      assert(e.getMessage.contains("sqldml_tmpview"), e.getMessage)
+      assert(e.getMessage.contains("is a view"), e.getMessage)
+      assert(e.getMessage.contains("snapshot, registered or catalog table"),
+        e.getMessage)
+    } finally spark.catalog.dropTempView("sqldml_tmpview")
+    // a missing name still surfaces Spark's own not-found error
+    val missing = intercept[Exception](sql("DELETE FROM sqldml_no_such_t"))
+    assert(missing.getMessage.contains("TABLE_OR_VIEW_NOT_FOUND"), missing.getMessage)
+  }
+
   test("extensions-injected rule resolves registered names in plain spark.sql") {
     val root = scratch("graft_sqldml_snap_")
     Snapshots.create(spark, root, items(0, 25))
