@@ -231,23 +231,6 @@ object Authz {
       s"user $user lacks $action privilege on table $table")
   }
 
-  // CTE-scope-aware traversal (defs visited, positional shadowing) is
-  // shared with NamedTables — see [[CteScope]] for why the stock
-  // transformDownWithSubqueries cannot be used on pre-analysis plans here.
-  private def walkScoped(plan: LogicalPlan, scope: Set[String])(
-      f: (LogicalPlan, Set[String]) => Unit): Unit =
-    CteScope.walk(plan, scope)(f)
-
-  private def transformScoped(plan: LogicalPlan, scope: Set[String])(
-      rule: (LogicalPlan, Set[String]) => Option[LogicalPlan]): LogicalPlan =
-    CteScope.transform(plan, scope)(rule)
-
-  /** A CTE name in scope shadows the catalog table: such a reference is
-    * excluded from privilege checks and policy rewrites.
-    */
-  private def shadowedByCte(parts: Seq[String], scope: Set[String]): Boolean =
-    CteScope.shadowed(parts, scope)
-
   /** Formats whose two-part identifiers address data by PATH. Governance
     * key for such reads: the registered name owning the path when one
     * exists (path access to a governed table enforces that table's grants
@@ -319,10 +302,13 @@ object Authz {
       case None => Set.empty
     }
     val reads = scala.collection.mutable.LinkedHashSet.empty[String]
-    walkScoped(plan, Set.empty) { (node, scope) =>
+    // CTE-scope-aware traversal, shared with NamedTables and the policy
+    // rewrite: a CTE name in scope shadows the catalog table, so such a
+    // reference is neither privilege-checked nor policy-wrapped
+    CteScope.walk(plan, Set.empty) { (node, scope) =>
       node match {
         case u: UnresolvedRelation if !exempt.exists(_ eq u) =>
-          if (!shadowedByCte(u.multipartIdentifier, scope))
+          if (!CteScope.shadowed(u.multipartIdentifier, scope))
             reads += enforcementKey(u.multipartIdentifier)
         case other => tvfKey(other).foreach { case (_, key) => reads += key }
       }
@@ -400,14 +386,14 @@ object Authz {
     if (!enabled(spark) || isAdmin(spark)) return plan
     val user = currentUser(spark)
     val keys = principalKeys(user)
-    transformScoped(plan, Set.empty) { (node, scope) =>
+    CteScope.transform(plan, Set.empty) { (node, scope) =>
       node match {
         // time travel resolves FIRST (to the requested version), then the
         // policy wraps the resolved read — otherwise the inner relation
         // would rewrite to a current-version read under the wrapper
         case tt @ org.apache.spark.sql.catalyst.analysis.RelationTimeTravel(
             u: UnresolvedRelation, _, _)
-            if !shadowedByCte(u.multipartIdentifier, scope) &&
+            if !CteScope.shadowed(u.multipartIdentifier, scope) &&
               hasPolicy(u.multipartIdentifier, keys) =>
           val resolved = NamedTables.substitute(spark, tt)
           // an UNREGISTERED policied relation under time travel has no
@@ -423,7 +409,7 @@ object Authz {
           else Some(securePlan(spark, u.multipartIdentifier,
             org.apache.spark.sql.GraftShims.ofRows(spark, resolved), keys))
         case u: UnresolvedRelation
-            if !shadowedByCte(u.multipartIdentifier, scope) &&
+            if !CteScope.shadowed(u.multipartIdentifier, scope) &&
               hasPolicy(u.multipartIdentifier, keys) &&
               !isMetaListing(u.multipartIdentifier) =>
           // metadata listings (t.refs/t.history/t.snapshots/t.files/
@@ -533,41 +519,6 @@ object Authz {
 
   // ------------------------------------------------------------ SQL verbs
 
-  private val Ident = """(`[^`]+`|[\w.]+)"""
-  private val Pcpl = """(?:USER\s+(\w+)|ROLE\s+(\w+)|(ALL|PUBLIC)\b)"""
-  private val CreateRoleR = ("""(?is)\s*CREATE\s+ROLE\s+(\w+)\s*;?\s*""").r
-  private val DropRoleR = ("""(?is)\s*DROP\s+ROLE\s+(\w+)\s*;?\s*""").r
-  private val GrantRoleR =
-    ("""(?is)\s*GRANT\s+ROLE\s+(\w+)\s+TO\s+USER\s+(\w+)\s*;?\s*""").r
-  private val RevokeRoleR =
-    ("""(?is)\s*REVOKE\s+ROLE\s+(\w+)\s+FROM\s+USER\s+(\w+)\s*;?\s*""").r
-  private val GrantR =
-    ("""(?is)\s*GRANT\s+([\w\s,]+?)\s+ON\s+(?:TABLE\s+)?""" + Ident +
-      """\s+TO\s+""" + Pcpl + """\s*;?\s*""").r
-  private val RevokeR =
-    ("""(?is)\s*REVOKE\s+([\w\s,]+?)\s+ON\s+(?:TABLE\s+)?""" + Ident +
-      """\s+FROM\s+""" + Pcpl + """\s*;?\s*""").r
-  private val ShowGrantR =
-    ("""(?is)\s*SHOW\s+GRANT\s+ON\s+(?:TABLE\s+)?""" + Ident + """\s*;?\s*""").r
-  private val ShowRolesR = """(?is)\s*SHOW\s+ROLES\s*;?\s*""".r
-  private val SetRoleAllR = """(?is)\s*SET\s+ROLE\s+ALL\s*;?\s*""".r
-  private val SetRoleNoneR = """(?is)\s*SET\s+ROLE\s+NONE\s*;?\s*""".r
-  private val SetRoleR = """(?is)\s*SET\s+ROLE\s+(\w+)\s*;?\s*""".r
-  private val ShowCurrentRolesR = """(?is)\s*SHOW\s+CURRENT\s+ROLES\s*;?\s*""".r
-  private val SetRowFilterR =
-    ("""(?is)\s*ALTER\s+TABLE\s+""" + Ident +
-      """\s+SET\s+ROW\s+FILTER\s+'((?:[^']|'')*)'\s+FOR\s+""" + Pcpl + """\s*;?\s*""").r
-  private val DropRowFilterR =
-    ("""(?is)\s*ALTER\s+TABLE\s+""" + Ident +
-      """\s+DROP\s+ROW\s+FILTER\s+FOR\s+""" + Pcpl + """\s*;?\s*""").r
-  private val SetMaskR =
-    ("""(?is)\s*ALTER\s+TABLE\s+""" + Ident +
-      """\s+SET\s+COLUMN\s+MASK\s+(\w+)\s+AS\s+'((?:[^']|'')*)'\s+FOR\s+""" +
-      Pcpl + """\s*;?\s*""").r
-  private val DropMaskR =
-    ("""(?is)\s*ALTER\s+TABLE\s+""" + Ident +
-      """\s+DROP\s+COLUMN\s+MASK\s+(\w+)\s+FOR\s+""" + Pcpl + """\s*;?\s*""").r
-
   /** SET ROLE intercepts BEFORE Spark's parser ([[graft.Engine.sql]] calls
     * this first): Spark parses `SET ROLE x` as a conf assignment of the
     * meaningless key "role x", so the reference's verb (HiveParser.g
@@ -575,24 +526,26 @@ object Authz {
     * deactivates all, a name narrows to that one granted role.
     */
   def maybeSetRole(spark: SparkSession, sqlText: String): Option[DataFrame] = {
+    if (!Cursor.leads(sqlText, "SET")) return None
     import spark.implicits._
-    def done(what: String): DataFrame = Seq(what).toDF("result")
-    sqlText match {
-      case SetRoleAllR() =>
-        setRoleAll(currentUser(spark)); Some(done("set role all"))
-      case SetRoleNoneR() =>
-        setRoleNone(currentUser(spark)); Some(done("set role none"))
-      case SetRoleR(r) =>
-        setRole(currentUser(spark), r); Some(done(s"set role $r"))
-      case _ => None
+    val c = Cursor(sqlText)
+    for { _ <- c.expect("SET", "ROLE"); r <- c.name(); _ <- c.done() } yield {
+      val user = currentUser(spark)
+      val what = norm(r) match {
+        case "all" => setRoleAll(user); "all"
+        case "none" => setRoleNone(user); "none"
+        case _ => setRole(user, r); r
+      }
+      Seq(s"set role $what").toDF("result")
     }
   }
 
-  private def principal(u: String, r: String, all: String): Principal =
-    if (u != null) User(u) else if (r != null) Role(r) else AllUsers
-  private def unquoteIdent(s: String): String =
-    if (s.startsWith("`")) s.substring(1, s.length - 1) else s
-  private def unquoteSql(s: String): String = s.replace("''", "'")
+  /** `USER u | ROLE r | ALL | PUBLIC` */
+  private def principal(c: Cursor): Option[Principal] =
+    if (c.kw("USER")) c.name().map(User)
+    else if (c.kw("ROLE")) c.name().map(Role)
+    else if (c.kw("ALL") || c.kw("PUBLIC")) Some(AllUsers)
+    else None
 
   /** Administration of the authz database is itself authorized (ref
     * ql/.../sqlstd/SQLStdHiveAccessControllerWrapper — only the admin role
@@ -630,29 +583,28 @@ object Authz {
       // bootstraps — pointing it at an attacker-prepared directory would
       // merge a poisoned grant set under the session
       NamedTables.CatalogConfKey)
-  private val SetConfR = """(?is)\s*SET\s+([\w.]+)\s*=.*""".r
-  private val ResetConfR = """(?is)\s*RESET\s+([\w.]+)\s*;?\s*""".r
-  private val ResetAllR = """(?is)\s*RESET\s*;?\s*""".r
 
   /** Deny `SET <restricted conf> = ...` — and its evil twin `RESET`, which
     * UNSETS a conf and would turn enforcement off just as effectively
     * (`RESET spark.graft.authz.enabled`, or bare `RESET` wiping the whole
     * session conf) — for non-admin sessions while enforcement is on.
-    * Everything else falls through untouched. This is the pre-parse net;
-    * [[guardSetPlan]] is the authoritative check on the PARSED command
-    * (comments and odd whitespace defeat regexes, never the parser).
+    * Everything else falls through untouched. This is the pre-parse net,
+    * on the [[Cursor]] lexer (comments and backticks cannot hide the key;
+    * anything after `=` or after a restricted RESET key still denies);
+    * [[guardSetPlan]] is the authoritative check on the PARSED command.
     */
   def guardSetStatement(spark: SparkSession, sqlText: String): Unit = {
     if (!enabled(spark) || isAdmin(spark)) return
-    sqlText match {
-      case SetConfR(k) if RestrictedConfs.contains(norm(k)) =>
-        denyConf(spark, s"SET restricted configuration $k")
-      case ResetConfR(k) if RestrictedConfs.contains(norm(k)) =>
-        denyConf(spark, s"RESET restricted configuration $k")
-      case ResetAllR() =>
-        denyConf(spark,
-          "RESET the session configuration (it clears the security context)")
-      case _ => ()
+    val reset = Cursor.leads(sqlText, "RESET")
+    if (!reset && !Cursor.leads(sqlText, "SET")) return
+    val c = Cursor(sqlText)
+    c.word()
+    if (reset && c.end())
+      denyConf(spark,
+        "RESET the session configuration (it clears the security context)")
+    c.qname().filter(k => RestrictedConfs.contains(norm(k))).foreach { k =>
+      if (reset) denyConf(spark, s"RESET restricted configuration $k")
+      else if (c.kw("=")) denyConf(spark, s"SET restricted configuration $k")
     }
   }
 
@@ -660,10 +612,9 @@ object Authz {
     throw new AccessDenied(
       s"user ${currentUser(spark)} may not $what (authz security context)")
 
-  /** The parsed-plan twin of [[guardSetStatement]]: a `SET`/`RESET` that
-    * reaches the parser through comments or formatting the regex net does
-    * not cover (`RESET -- x`) still surfaces here as a SetCommand /
-    * ResetCommand node — the parser cannot be fooled by lexical tricks.
+  /** The parsed-plan twin of [[guardSetStatement]], and the authoritative
+    * check: whatever text reaches the parser, a `SET`/`RESET` surfaces
+    * here as a SetCommand / ResetCommand node.
     */
   def guardSetPlan(spark: SparkSession, plan: LogicalPlan): Unit = {
     if (!enabled(spark) || isAdmin(spark)) return
@@ -695,53 +646,71 @@ object Authz {
     */
   def maybeSql(spark: SparkSession, sqlText: String): Option[DataFrame] = {
     import spark.implicits._
-    def done(what: String): DataFrame = Seq(what).toDF("result")
-    sqlText match {
-      case CreateRoleR(r) =>
-        requireAdmin(spark, "CREATE ROLE")
-        createRole(r); Some(done(s"created role $r"))
-      case DropRoleR(r) =>
-        requireAdmin(spark, "DROP ROLE")
-        dropRole(r); Some(done(s"dropped role $r"))
-      case GrantRoleR(r, u) =>
-        requireAdmin(spark, "GRANT ROLE")
-        grantRole(r, u); Some(done(s"granted role $r to $u"))
-      case RevokeRoleR(r, u) =>
-        requireAdmin(spark, "REVOKE ROLE")
-        revokeRole(r, u); Some(done(s"revoked role $r from $u"))
-      case GrantR(acts, t, u, r, all) =>
-        requireAdmin(spark, "GRANT")
-        grant(unquoteIdent(t), principal(u, r, all),
-          acts.split(',').map(_.trim).toSeq)
-        Some(done(s"granted on ${unquoteIdent(t)}"))
-      case RevokeR(acts, t, u, r, all) =>
-        requireAdmin(spark, "REVOKE")
-        revoke(unquoteIdent(t), principal(u, r, all),
-          acts.split(',').map(_.trim).toSeq)
-        Some(done(s"revoked on ${unquoteIdent(t)}"))
-      case ShowGrantR(t) =>
-        Some(grantsOn(unquoteIdent(t)).toDF("principal", "privilege"))
-      case ShowRolesR() => Some(roles.toDF("role"))
-      case ShowCurrentRolesR() =>
-        Some(currentRoles(currentUser(spark)).toDF("role"))
-      case SetRowFilterR(t, pred, u, r, all) =>
-        requireAdmin(spark, "ALTER TABLE ... SET ROW FILTER")
-        setRowFilter(unquoteIdent(t), principal(u, r, all), unquoteSql(pred))
-        Some(done(s"row filter set on ${unquoteIdent(t)}"))
-      case DropRowFilterR(t, u, r, all) =>
-        requireAdmin(spark, "ALTER TABLE ... DROP ROW FILTER")
-        dropRowFilter(unquoteIdent(t), principal(u, r, all))
-        Some(done(s"row filter dropped on ${unquoteIdent(t)}"))
-      case SetMaskR(t, c, m, u, r, all) =>
-        requireAdmin(spark, "ALTER TABLE ... SET COLUMN MASK")
-        setColumnMask(unquoteIdent(t), c, principal(u, r, all), unquoteSql(m))
-        Some(done(s"column mask set on ${unquoteIdent(t)}.$c"))
-      case DropMaskR(t, c, u, r, all) =>
-        requireAdmin(spark, "ALTER TABLE ... DROP COLUMN MASK")
-        dropColumnMask(unquoteIdent(t), c, principal(u, r, all))
-        Some(done(s"column mask dropped on ${unquoteIdent(t)}.$c"))
-      case _ => None
+    val c = Cursor(sqlText)
+    def run(verb: String, msg: => String)(act: => Unit) =
+      c.done().map { _ => requireAdmin(spark, verb); act; Seq(msg).toDF("result") }
+    def show(df: => DataFrame) = c.done().map(_ => df)
+    def privileges(isGrant: Boolean) = for {
+      acts <- c.sepBy(",")(c.word())
+      _ <- c.expect("ON")
+      _ <- Some(c.kw("TABLE"))
+      t <- c.qname()
+      _ <- c.expect(if (isGrant) "TO" else "FROM")
+      p <- principal(c)
+      r <- if (isGrant) run("GRANT", s"granted on $t")(grant(t, p, acts))
+           else run("REVOKE", s"revoked on $t")(revoke(t, p, acts))
+    } yield r
+    def policy(t: String) =
+      if (c.kw("SET", "ROW", "FILTER"))
+        for {
+          pred <- c.str(); _ <- c.expect("FOR"); p <- principal(c)
+          r <- run("ALTER TABLE ... SET ROW FILTER", s"row filter set on $t")(
+            setRowFilter(t, p, pred))
+        } yield r
+      else if (c.kw("DROP", "ROW", "FILTER", "FOR"))
+        principal(c).flatMap(p =>
+          run("ALTER TABLE ... DROP ROW FILTER", s"row filter dropped on $t")(
+            dropRowFilter(t, p)))
+      else if (c.kw("SET", "COLUMN", "MASK"))
+        for {
+          col <- c.name(); _ <- c.expect("AS"); m <- c.str()
+          _ <- c.expect("FOR"); p <- principal(c)
+          r <- run("ALTER TABLE ... SET COLUMN MASK", s"column mask set on $t.$col")(
+            setColumnMask(t, col, p, m))
+        } yield r
+      else if (c.kw("DROP", "COLUMN", "MASK"))
+        for {
+          col <- c.name(); _ <- c.expect("FOR"); p <- principal(c)
+          r <- run("ALTER TABLE ... DROP COLUMN MASK",
+            s"column mask dropped on $t.$col")(dropColumnMask(t, col, p))
+        } yield r
+      else None
+    if (c.kw("CREATE", "ROLE"))
+      c.name().flatMap(r => run("CREATE ROLE", s"created role $r")(createRole(r)))
+    else if (c.kw("DROP", "ROLE"))
+      c.name().flatMap(r => run("DROP ROLE", s"dropped role $r")(dropRole(r)))
+    else if (c.kw("GRANT", "ROLE"))
+      for {
+        r <- c.name(); _ <- c.expect("TO", "USER"); u <- c.name()
+        out <- run("GRANT ROLE", s"granted role $r to $u")(grantRole(r, u))
+      } yield out
+    else if (c.kw("REVOKE", "ROLE"))
+      for {
+        r <- c.name(); _ <- c.expect("FROM", "USER"); u <- c.name()
+        out <- run("REVOKE ROLE", s"revoked role $r from $u")(revokeRole(r, u))
+      } yield out
+    else if (c.kw("GRANT")) privileges(isGrant = true)
+    else if (c.kw("REVOKE")) privileges(isGrant = false)
+    else if (c.kw("SHOW", "GRANT", "ON")) {
+      c.kw("TABLE")
+      c.qname().flatMap(t =>
+        show(grantsOn(t).toDF("principal", "privilege")))
     }
+    else if (c.kw("SHOW", "ROLES")) show(roles.toDF("role"))
+    else if (c.kw("SHOW", "CURRENT", "ROLES"))
+      show(currentRoles(currentUser(spark)).toDF("role"))
+    else if (c.kw("ALTER", "TABLE")) c.qname().flatMap(policy)
+    else None
   }
 
   // ------------------------------------------------------- durable store

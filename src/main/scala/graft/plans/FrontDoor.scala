@@ -81,12 +81,14 @@ object FrontDoor {
     text(name)((s, q, reenter) =>
       rewrite(q).filter(parses(s, _)).map(reenter(s, _)))
 
-  /** 1. Before the parse: guards, and verbs that must intercept the raw
-    * text. The security context is not settable by non-admins; `SET
-    * hive.<key>` spellings flip their Spark twin; SET ROLE (a Spark parse
-    * error) intercepts whenever any authz state exists, so bootstrap
-    * scripts can narrow roles before enforcement is on; filter-form and
-    * partial-spec DROP PARTITION (PartitionDdl gates authz itself).
+  /** 1. Before the parse, on every statement: guards, and verbs that must
+    * intercept the raw text. The security context is not settable by
+    * non-admins; `SET hive.<key>` spellings flip their Spark twin; SET ROLE
+    * (a Spark parse error) intercepts whenever any authz state exists, so
+    * bootstrap scripts can narrow roles before enforcement is on;
+    * filter-form and partial-spec DROP PARTITION and the PARTITION COLUMN
+    * retype (PartitionDdl gates authz itself). Each verb probe tests the
+    * first keyword ([[Cursor.leads]]) before it lexes.
     */
   val preParse: Seq[TextStage] = Seq(
     text("Authz.guardSetStatement")((s, q, _) => {
@@ -120,7 +122,9 @@ object FrontDoor {
     * error. These verbs are all parse errors to Spark, so nothing the
     * parser understands is shadowed.
     *
-    *   - maintenance, authz, workload, macro and scheduled-query verbs;
+    *   - maintenance, authz, workload, macro and scheduled-query verbs and
+    *     the CHANGE COLUMN rename, all on the one [[Cursor]] grammar and
+    *     its fall-through invariant;
     *   - HPL/SQL scripts: input LEADING with a procedural keyword runs
     *     as a script ([[graft.hplsql.Hplsql]]) whose raw statements
     *     re-enter; the answer is its last row-producing statement, else

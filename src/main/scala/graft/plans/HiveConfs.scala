@@ -19,21 +19,16 @@ import org.apache.spark.sql.SparkSession
   */
 object HiveConfs {
 
-  private val SetQuotedIds =
-    """(?is)\s*set\s+hive\.support\.quoted\.identifiers\s*=\s*(\w+).*"""
-      .r
-
-  /** Call on every front-door statement BEFORE parsing; cheap (two
-    * startsWith-class regex probes on statements that begin with SET).
+  /** Call on every front-door statement BEFORE parsing; a statement not
+    * leading with SET costs one short scan ([[Cursor.leads]]).
     */
-  def maybeMap(spark: SparkSession, query: String): Unit = {
-    val t = query.trim
-    if (t.length < 4 || !t.regionMatches(true, 0, "set", 0, 3)) return
-    t match {
-      case SetQuotedIds(v) =>
-        spark.conf.set("spark.sql.parser.quotedRegexColumnNames",
-          (v.equalsIgnoreCase("none")).toString)
-      case _ => ()
+  def maybeMap(spark: SparkSession, query: String): Unit =
+    if (Cursor.leads(query, "SET")) {
+      val c = Cursor(query)
+      if (c.kw("SET", "hive", ".", "support", ".", "quoted", ".",
+          "identifiers", "="))
+        c.word().foreach(v => spark.conf.set(
+          "spark.sql.parser.quotedRegexColumnNames",
+          v.equalsIgnoreCase("none").toString))
     }
-  }
 }

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Cast, Expression}
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.types.DataType
 
@@ -98,59 +98,41 @@ object Macros {
 
   // ------------------------------------------------------------ SQL verbs
 
-  private val CreateHead = """(?is)\s*CREATE\s+TEMPORARY\s+MACRO\s+(\w+)\s*\((.*)""".r
-  private val DropR =
-    """(?is)\s*DROP\s+TEMPORARY\s+MACRO\s+(?:(IF\s+EXISTS)\s+)?(\w+)\s*;?\s*""".r
-
   /** Execute `sqlText` if it is a macro verb (parse errors to Spark's own
-    * grammar, so nothing is shadowed); None otherwise.
+    * grammar, so nothing is shadowed); None otherwise. The body is the
+    * statement's remaining text and must read as ONE expression: `x + 1
+    * junk` parses as an alias, i.e. trailing junk, and falls through.
     */
   def maybeSql(spark: SparkSession, sqlText: String): Option[DataFrame] = {
     import spark.implicits._
-    sqlText match {
-      case CreateHead(name, rest) =>
-        // the parameter list may contain typed parens (DECIMAL(10,2)) —
-        // split at the depth-0 close paren, remainder is the body
-        var depth = 1; var i = 0
-        while (depth > 0 && i < rest.length) {
-          rest.charAt(i) match {
-            case '(' => depth += 1
-            case ')' => depth -= 1
-            case _ => ()
-          }
-          i += 1
+    val c = Cursor(sqlText)
+    if (c.kw("CREATE", "TEMPORARY", "MACRO"))
+      for {
+        name <- c.name()
+        paramList <- c.group() // DECIMAL(10,2) stays one entry
+        body <- c.rest()
+        parsed <- scala.util.Try(
+          spark.sessionState.sqlParser.parseExpression(body)).toOption
+        if !parsed.isInstanceOf[Alias]
+      } yield {
+        val params = paramList.map { p =>
+          val param = Cursor(p)
+          val typed = for { n <- param.name(); t <- param.rest() } yield (n, t)
+          require(typed.isDefined, s"macro parameter needs a type: '$p'")
+          typed.get._1 -> CatalystSqlParser.parseDataType(typed.get._2)
         }
-        require(depth == 0, s"unbalanced parameter list in CREATE TEMPORARY MACRO $name")
-        val paramList = rest.substring(0, i - 1).trim
-        val body = rest.substring(i).trim.stripSuffix(";").trim
-        require(body.nonEmpty, s"CREATE TEMPORARY MACRO $name has no body expression")
-        val params =
-          if (paramList.isEmpty) Seq.empty
-          else splitTopLevel(paramList).map { p =>
-            val t = p.trim.split("\\s+", 2)
-            require(t.length == 2, s"macro parameter needs a type: '$p'")
-            t(0) -> CatalystSqlParser.parseDataType(t(1))
-          }
         create(spark, name, params, body)
-        Some(Seq(s"created temporary macro $name").toDF("result"))
-      case DropR(ifExists, name) =>
-        drop(spark, name, ifExists != null)
-        Some(Seq(s"dropped temporary macro $name").toDF("result"))
-      case _ => None
-    }
-  }
-
-  /** Split on commas at paren depth 0 (DECIMAL(10,2) stays whole). */
-  private def splitTopLevel(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0; var start = 0
-    for (i <- s.indices) s.charAt(i) match {
-      case '(' => depth += 1
-      case ')' => depth -= 1
-      case ',' if depth == 0 => out += s.substring(start, i); start = i + 1
-      case _ => ()
-    }
-    out += s.substring(start)
-    out.result()
+        Seq(s"created temporary macro $name").toDF("result")
+      }
+    else if (c.kw("DROP", "TEMPORARY", "MACRO"))
+      for {
+        ifExists <- Some(c.kw("IF", "EXISTS"))
+        name <- c.name()
+        _ <- c.done()
+      } yield {
+        drop(spark, name, ifExists)
+        Seq(s"dropped temporary macro $name").toDF("result")
+      }
+    else None
   }
 }

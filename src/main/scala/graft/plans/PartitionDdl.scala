@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
 
 /** Hive's filter-form `ALTER TABLE ... DROP PARTITION` (ref ql/parse
   * partitionSelectorSpec; pinned by drop_partitions_filter.q and
@@ -31,10 +32,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object PartitionDdl {
 
-  private val Head =
-    ("""(?is)^\s*ALTER\s+TABLE\s+((?:`[^`]+`|[\w]+)(?:\.(?:`[^`]+`|[\w]+))*)""" +
-      """\s+DROP\s+(?:IF\s+EXISTS\s+)?((?:PARTITION\s*\([^()]*\)\s*,?\s*)+?)(PURGE\s*)?$""").r
-  private val Group = """(?is)PARTITION\s*\(([^()]*)\)""".r
   private val Cond =
     """(?s)^\s*(?:`([^`]+)`|(\w+))\s*(!=|<>|<=|>=|=|<|>)\s*(.+?)\s*$""".r
 
@@ -85,10 +82,6 @@ object PartitionDdl {
     }
   }
 
-  private val ColType =
-    ("""(?is)^\s*ALTER\s+TABLE\s+((?:`[^`]+`|[\w]+)(?:\.(?:`[^`]+`|[\w]+))*)""" +
-      """\s+PARTITION\s+COLUMN\s*\(\s*(?:`([^`]+)`|(\w+))\s+([\w]+(?:\s*\(\s*\d+(?:\s*,\s*\d+)?\s*\))?)\s*\)\s*$""").r
-
   /** `ALTER TABLE t PARTITION COLUMN (col type)` — Hive's partition-key
     * type evolution (ref alter_partition_coltype.q; ql/ddl/table/
     * AlterTableAlterPartitionAnalyzer): a METADATA-ONLY retype of one
@@ -100,96 +93,106 @@ object PartitionDdl {
     * alternative to rewriting every partition. Spark has no spelling
     * for it (the statement is a parse error), so it lands here.
     */
-  private def maybeColType(spark: SparkSession,
-      query: String): Option[DataFrame] = query.trim.stripSuffix(";") match {
-    case ColType(table, bq, bare, typ) =>
-      val col = Option(bq).getOrElse(bare)
-      val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-      val cat = spark.sessionState.catalog
-      val meta =
-        try cat.getTableMetadata(ident)
-        catch { case scala.util.control.NonFatal(_) => return None }
+  private def maybeColType(spark: SparkSession, parts: Seq[String],
+      c: Cursor): Option[DataFrame] = {
+    val parser = spark.sessionState.sqlParser
+    val cat = spark.sessionState.catalog
+    for {
+      entry <- c.group().collect { case Seq(e) => Cursor(e) }
+      _ <- c.done()
+      col <- entry.name()
+      dt <- entry.rest().flatMap(t =>
+        scala.util.Try(parser.parseDataType(t)).toOption).filter {
+          case _: ArrayType | _: MapType | _: StructType => false
+          case _ => true
+        }
+      meta <- scala.util.Try(cat.getTableMetadata(
+        parser.parseTableIdentifier(sqlName(parts)))).toOption
+    } yield {
       require(meta.partitionColumnNames.exists(_.equalsIgnoreCase(col)),
-        s"$col is not a partition column of $table " +
+        s"$col is not a partition column of ${parts.mkString(".")} " +
           s"(partition columns: ${meta.partitionColumnNames.mkString(", ")})")
-      val dt = spark.sessionState.sqlParser.parseDataType(typ)
-      Authz.requireRelationPrivilege(spark,
-        table.split('.').toSeq.map(_.stripPrefix("`").stripSuffix("`")),
-        "update")
-      val newSchema = org.apache.spark.sql.types.StructType(meta.schema.map(
+      Authz.requireRelationPrivilege(spark, parts, "update")
+      val newSchema = StructType(meta.schema.map(
         f => if (f.name.equalsIgnoreCase(col)) f.copy(dataType = dt) else f))
       cat.alterTable(meta.copy(schema = newSchema))
-      spark.catalog.refreshTable(table)
+      spark.catalog.refreshTable(sqlName(parts))
       import spark.implicits._
-      Some(Seq(s"partition column $col retyped to ${dt.sql}")
-        .toDF("result"))
-    case _ => None
+      Seq(s"partition column $col retyped to ${dt.sql}").toDF("result")
+    }
   }
 
-  def maybeSql(spark: SparkSession, query: String): Option[DataFrame] =
-    maybeColType(spark, query).orElse(maybeDrop(spark, query))
+  /** A dotted name back in SQL spelling, each part backtick-quoted. */
+  private def sqlName(parts: Seq[String]): String =
+    parts.map(p => "`" + p.replace("`", "``") + "`").mkString(".")
 
-  private def maybeDrop(spark: SparkSession, query: String): Option[DataFrame] =
-    query.trim.stripSuffix(";") match {
-      case Head(table, groupsTxt, purge) =>
-        val groups = Group.findAllMatchIn(groupsTxt).map(_.group(1)).toList
-        def parseCond(s: String): Option[Condition] = s match {
-          case Cond(bq, bare, op, v) =>
-            Some(Condition(Option(bq).getOrElse(bare).toLowerCase,
-              op, stripQuotes(v)))
-          case _ => None
-        }
-        val parsed: Option[List[List[Condition]]] =
-          groups.foldRight(Option(List.empty[List[Condition]])) { (g, acc) =>
-            acc.flatMap { rest =>
-              val conds = g.split(",").toList.map(parseCond)
-              if (conds.forall(_.isDefined)) Some(conds.flatten :: rest)
-              else None // not a recognizable condition list
-            }
-          }
-        parsed.flatMap { specs =>
-          val pcols: Seq[String] =
-            try {
-              val ident =
-                spark.sessionState.sqlParser.parseTableIdentifier(table)
-              spark.sessionState.catalog.getTableMetadata(ident)
-                .partitionColumnNames.map(_.toLowerCase)
-            } catch {
-              // missing table / temp view / unparseable name: let the
-              // native path produce its canonical error
-              case scala.util.control.NonFatal(_) => return None
-            }
-          val isFullEquality = specs.forall(g =>
-            g.forall(_.op == "=") && g.map(_.col).toSet == pcols.toSet)
-          val knownCols = specs.forall(_.forall(c => pcols.contains(c.col)))
-          // full-equality statements keep Spark's native semantics and
-          // errors; unknown columns surface the canonical error too
-          if (isFullEquality || !knownCols || pcols.isEmpty) return None
-          Authz.requireRelationPrivilege(spark,
-            table.split('.').toSeq.map(_.stripPrefix("`").stripSuffix("`")),
-            "update")
-          val parts = spark.sql(s"SHOW PARTITIONS $table")
-            .collect().map(_.getString(0)).toSeq
-          val dropped = parts.filter { p =>
-            val kv = p.split("/").map { seg =>
-              val Array(k, v) = seg.split("=", 2)
-              k.toLowerCase -> unescapePathName(v)
-            }.toMap
-            specs.exists(g => g.forall(c => kv.get(c.col).exists(c.matches)))
-          }
-          dropped.foreach { p =>
-            val spec = p.split("/").map { seg =>
-              val Array(k, v) = seg.split("=", 2)
-              val lit = unescapePathName(v)
-                .replace("\\", "\\\\").replace("'", "\\'")
-              s"`$k`='$lit'"
-            }.mkString(", ")
-            spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION ($spec)" +
-              (if (purge != null) " PURGE" else ""))
-          }
-          import spark.implicits._
-          Some(dropped.toDF("dropped_partition"))
-        }
+  /** `ALTER TABLE t PARTITION COLUMN (...)` or `ALTER TABLE t DROP [IF
+    * EXISTS] PARTITION (...)[, PARTITION (...)]* [PURGE]`, parsed on the
+    * [[Cursor]] grammar; anything else answers None. Runs pre-parse, so
+    * only statements leading with ALTER are lexed at all.
+    */
+  def maybeSql(spark: SparkSession, query: String): Option[DataFrame] = {
+    if (!Cursor.leads(query, "ALTER")) return None
+    val c = Cursor(query)
+    for {
+      _ <- c.expect("ALTER", "TABLE")
+      parts <- c.qparts()
+      out <-
+        if (c.kw("PARTITION", "COLUMN")) maybeColType(spark, parts, c)
+        else if (c.kw("DROP")) maybeDrop(spark, parts, c)
+        else None
+    } yield out
+  }
+
+  private def maybeDrop(spark: SparkSession, parts: Seq[String],
+      c: Cursor): Option[DataFrame] = {
+    def parseCond(s: String): Option[Condition] = s match {
+      case Cond(bq, bare, op, v) =>
+        Some(Condition(Option(bq).getOrElse(bare).toLowerCase,
+          op, stripQuotes(v)))
       case _ => None
     }
+    c.kw("IF", "EXISTS")
+    val table = sqlName(parts)
+    for {
+      groups <- c.sepBy(",")(for {
+        _ <- c.expect("PARTITION")
+        g <- c.group() if g.nonEmpty
+      } yield g)
+      purge <- Some(c.kw("PURGE"))
+      _ <- c.done()
+      specs <- Cursor.all(groups)(Cursor.all(_)(parseCond))
+      pcols <- scala.util.Try(spark.sessionState.catalog.getTableMetadata(
+          spark.sessionState.sqlParser.parseTableIdentifier(table))
+        .partitionColumnNames.map(_.toLowerCase)).toOption
+      // full-equality statements keep Spark's native semantics and
+      // errors; unknown columns, a missing table, a temp view or an
+      // unparseable name surface the canonical error too
+      if pcols.nonEmpty && specs.forall(_.forall(c => pcols.contains(c.col))) &&
+        !specs.forall(g => g.forall(_.op == "=") && g.map(_.col).toSet == pcols.toSet)
+    } yield {
+      Authz.requireRelationPrivilege(spark, parts, "update")
+      val partitions = spark.sql(s"SHOW PARTITIONS $table")
+        .collect().map(_.getString(0)).toSeq
+      val dropped = partitions.filter { p =>
+        val kv = p.split("/").map { seg =>
+          val Array(k, v) = seg.split("=", 2)
+          k.toLowerCase -> unescapePathName(v)
+        }.toMap
+        specs.exists(g => g.forall(c => kv.get(c.col).exists(c.matches)))
+      }
+      dropped.foreach { p =>
+        val spec = p.split("/").map { seg =>
+          val Array(k, v) = seg.split("=", 2)
+          val lit = unescapePathName(v)
+            .replace("\\", "\\\\").replace("'", "\\'")
+          s"`$k`='$lit'"
+        }.mkString(", ")
+        spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION ($spec)" +
+          (if (purge) " PURGE" else ""))
+      }
+      import spark.implicits._
+      dropped.toDF("dropped_partition")
+    }
+  }
 }

@@ -193,20 +193,6 @@ object ScheduledQueries {
   private[graft] def force(df: DataFrame): Unit =
     df.foreach((_: org.apache.spark.sql.Row) => ())
 
-  private val CreateR =
-    ("""(?is)\s*CREATE\s+SCHEDULED\s+QUERY\s+(\w+)\s+EVERY\s+(\d+)\s+""" +
-      """(SECOND|MINUTE|HOUR)S?\s+AS\s+(.+?)\s*;?\s*""").r
-  private val AlterToggleR =
-    """(?is)\s*ALTER\s+SCHEDULED\s+QUERY\s+(\w+)\s+(ENABLE|DISABLE)\s*;?\s*""".r
-  private val AlterExecR =
-    """(?is)\s*ALTER\s+SCHEDULED\s+QUERY\s+(\w+)\s+EXECUTE\s*;?\s*""".r
-  private val DropR =
-    """(?is)\s*DROP\s+SCHEDULED\s+QUERY\s+(\w+)\s*;?\s*""".r
-  private val ShowR = """(?is)\s*SHOW\s+SCHEDULED\s+QUERIES\s*;?\s*""".r
-  private val ExecDueR = """(?is)\s*EXECUTE\s+SCHEDULED\s+QUERIES\s*;?\s*""".r
-  // every verb above contains this token — the cheap gate for hydration
-  private val TouchR = """(?is).*\bSCHEDULED\s+QUER.*""".r
-
   /** Execute `sqlText` if it is a scheduled-query verb (all parse errors
     * to Spark); `runner` is the engine front door the stored statement
     * re-enters (so scheduled DML/INSERT statements execute with full
@@ -215,66 +201,84 @@ object ScheduledQueries {
   def maybeSql(spark: SparkSession, sqlText: String,
       runner: (SparkSession, String) => DataFrame): Option[DataFrame] = {
     import spark.implicits._
-    def done(what: String): DataFrame = Seq(what).toDF("result")
+    val c = Cursor(sqlText)
     // a scheduled-query verb touches the durable registry first, so a
-    // fresh session (or JVM) sees every persisted schedule
-    if (TouchR.matches(sqlText)) { bootstrap(spark); hydrate(spark, runner) }
-    // mutating schedule verbs are admin-gated when authz enforcement is on
+    // fresh session (or JVM) sees every persisted schedule; mutating
+    // schedule verbs are admin-gated when authz enforcement is on
     // (dropping the nightly compaction is sabotage exactly like dropping a
     // resource plan); SHOW + the due tick stay open
-    def admin(verb: String): Unit = Authz.requireAdmin(spark, verb)
-    sqlText match {
-      case CreateR(name, n, unit, stmt) =>
-        admin("CREATE SCHEDULED QUERY")
-        val ms = n.toLong * (unit.toUpperCase match {
+    def run(verb: Option[String])(body: => DataFrame): Option[DataFrame] =
+      c.done().map { _ =>
+        bootstrap(spark); hydrate(spark, runner)
+        verb.foreach(Authz.requireAdmin(spark, _))
+        body
+      }
+    def done(what: String): DataFrame = Seq(what).toDF("result")
+    def admin(verb: String)(act: => String) = run(Some(verb))(done(act))
+    if (c.kw("CREATE", "SCHEDULED", "QUERY"))
+      for {
+        name <- c.name()
+        n <- if (c.kw("EVERY")) c.num().filter(_.forall(_.isDigit)) else None
+        unitMs <- c.word().map(_.toUpperCase.stripSuffix("S")).collect {
           case "SECOND" => 1000L
           case "MINUTE" => 60L * 1000
-          case _ => 3600L * 1000
-        })
-        val owner = Authz.currentUser(spark)
-        create(spark, name, ms, Some(owner))(s => runner(s, stmt))(force)
-        stmtsFor(spark).put(name, stmt.trim)
-        durable.mutate(_.filterNot(_.name == name) :+
-          SchedE(name, ms, stmt.trim, enabled = true, Long.MinValue,
-            Some(owner)))
-        Some(done(s"created scheduled query $name"))
-      case AlterToggleR(name, toggle) =>
-        admin("ALTER SCHEDULED QUERY")
-        setEnabled(spark, name, toggle.equalsIgnoreCase("ENABLE"))
-        Some(done(s"${toggle.toLowerCase}d scheduled query $name"))
-      case AlterExecR(name) =>
-        admin("ALTER SCHEDULED QUERY ... EXECUTE")
-        // run-now, unconditionally (the reference's ALTER ... EXECUTE)
-        val r = regFor(spark)
-        val s = Option(r.get(name)).getOrElse(
-          throw new IllegalArgumentException(s"scheduled query not found: $name"))
-        runAs(spark, s.owner)(sess => s.sink(s.query(sess)))
-        val now = System.currentTimeMillis()
-        r.put(name, s.copy(lastRunAt = now))
-        if (stmtsFor(spark).containsKey(name))
-          durable.mutate(_.map(e => if (e.name == name) e.copy(lastRunAt = now) else e))
-        Some(done(s"executed scheduled query $name"))
-      case DropR(name) =>
-        admin("DROP SCHEDULED QUERY")
-        drop(spark, name)
-        Some(done(s"dropped scheduled query $name"))
-      case ShowR() =>
-        val stmts = stmtsFor(spark)
-        Some(list(spark).map(s => (s.name, s.everyMillis, s.enabled,
-            if (s.lastRunAt == Long.MinValue) null
-            else new java.sql.Timestamp(s.lastRunAt),
-            stmts.getOrDefault(s.name, "<programmatic>")))
-          .toDF("name", "every_ms", "enabled", "last_run", "statement"))
-      case ExecDueR() =>
-        // the due tick executes each stored statement under its OWNER's
-        // identity (often an admin) — an open front door would let any
-        // user trigger owner-privileged side effects on demand. Gate it
-        // like ALTER ... EXECUTE; deployment schedulers drive ticks via
-        // [[graft.Engine.scheduledTick]], which is not a SQL surface.
-        admin("EXECUTE SCHEDULED QUERIES")
-        Some(runDue(spark, System.currentTimeMillis()).toDF("executed"))
-      case _ => None
+          case "HOUR" => 3600L * 1000
+        }
+        stmt <- if (c.kw("AS")) c.rest() else None
+        out <- admin("CREATE SCHEDULED QUERY") {
+          val ms = n.toLong * unitMs
+          val owner = Authz.currentUser(spark)
+          create(spark, name, ms, Some(owner))(s => runner(s, stmt))(force)
+          stmtsFor(spark).put(name, stmt)
+          durable.mutate(_.filterNot(_.name == name) :+
+            SchedE(name, ms, stmt, enabled = true, Long.MinValue, Some(owner)))
+          s"created scheduled query $name"
+        }
+      } yield out
+    else if (c.kw("ALTER", "SCHEDULED", "QUERY"))
+      c.name().flatMap { name =>
+        if (c.kw("EXECUTE")) admin("ALTER SCHEDULED QUERY ... EXECUTE") {
+          // run-now, unconditionally (the reference's ALTER ... EXECUTE)
+          val r = regFor(spark)
+          val s = Option(r.get(name)).getOrElse(throw new IllegalArgumentException(
+            s"scheduled query not found: $name"))
+          runAs(spark, s.owner)(sess => s.sink(s.query(sess)))
+          val now = System.currentTimeMillis()
+          r.put(name, s.copy(lastRunAt = now))
+          if (stmtsFor(spark).containsKey(name))
+            durable.mutate(_.map(e =>
+              if (e.name == name) e.copy(lastRunAt = now) else e))
+          s"executed scheduled query $name"
+        }
+        else c.word().map(_.toUpperCase).filter(Set("ENABLE", "DISABLE"))
+          .flatMap { toggle =>
+            admin("ALTER SCHEDULED QUERY") {
+              setEnabled(spark, name, toggle == "ENABLE")
+              s"${toggle.toLowerCase}d scheduled query $name"
+            }
+          }
+      }
+    else if (c.kw("DROP", "SCHEDULED", "QUERY"))
+      c.name().flatMap(name => admin("DROP SCHEDULED QUERY") {
+        drop(spark, name); s"dropped scheduled query $name"
+      })
+    else if (c.kw("SHOW", "SCHEDULED", "QUERIES")) run(None) {
+      val stmts = stmtsFor(spark)
+      list(spark).map(s => (s.name, s.everyMillis, s.enabled,
+          if (s.lastRunAt == Long.MinValue) null
+          else new java.sql.Timestamp(s.lastRunAt),
+          stmts.getOrDefault(s.name, "<programmatic>")))
+        .toDF("name", "every_ms", "enabled", "last_run", "statement")
     }
+    else if (c.kw("EXECUTE", "SCHEDULED", "QUERIES"))
+      // the due tick executes each stored statement under its OWNER's
+      // identity (often an admin) — an open front door would let any
+      // user trigger owner-privileged side effects on demand. Gate it
+      // like ALTER ... EXECUTE; deployment schedulers drive ticks via
+      // [[graft.Engine.scheduledTick]], which is not a SQL surface.
+      run(Some("EXECUTE SCHEDULED QUERIES"))(
+        runDue(spark, System.currentTimeMillis()).toDF("executed"))
+    else None
   }
 
   // ------------------------------------------------------- durable store

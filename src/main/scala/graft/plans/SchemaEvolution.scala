@@ -76,34 +76,36 @@ object SchemaEvolution {
     }
 
   /** Text-level intercept for the RENAMING spelling (`CHANGE [COLUMN]
-    * old new type`), which Spark's parser refuses outright.
+    * old new type`), which Spark's parser refuses outright; the type is
+    * the statement's remaining text and must parse as one data type.
     */
-  private val ChangeRe =
-    ("""(?is)^\s*alter\s+table\s+([\w.`]+)\s+change\s+(?:column\s+)?""" +
-      """`?(\w+)`?\s+`?(\w+)`?\s+([\w()<>, ]+?)\s*$""").r
-
-  def maybeSql(spark: SparkSession, query: String): Option[DataFrame] =
-    query match {
-      case ChangeRe(tbl, oldName, newName, typeSpec)
-          if !oldName.equalsIgnoreCase(newName) =>
-        val ident = spark.sessionState.sqlParser
-          .parseTableIdentifier(tbl.replace("`", ""))
-        if (!spark.sessionState.catalog.tableExists(ident)) None
-        else {
-          val newType = spark.sessionState.sqlParser.parseDataType(typeSpec)
-          val cat = spark.sessionState.catalog.getTableMetadata(ident)
-          val dataCols = dataSchema(cat)
-          require(dataCols.exists(_.name.equalsIgnoreCase(oldName)),
-            s"CHANGE COLUMN: no column '$oldName' in ${ident.table}")
-          val mapping = dataCols.map { f =>
-            if (f.name.equalsIgnoreCase(oldName))
-              (Some(f), StructField(newName, newType))
-            else (Some(f), f)
-          }
-          Some(evolve(spark, ident, mapping))
-        }
-      case _ => None
+  def maybeSql(spark: SparkSession, query: String): Option[DataFrame] = {
+    val c = Cursor(query)
+    val parser = spark.sessionState.sqlParser
+    for {
+      _ <- c.expect("ALTER", "TABLE")
+      tbl <- c.qparts()
+      _ <- c.expect("CHANGE")
+      _ <- Some(c.kw("COLUMN"))
+      oldName <- c.name()
+      newName <- c.name() if !oldName.equalsIgnoreCase(newName)
+      newType <- c.rest().flatMap(t =>
+        scala.util.Try(parser.parseDataType(t)).toOption)
+      ident = TableIdentifier(tbl.last, tbl.init.lastOption)
+      if tbl.size <= 2 && spark.sessionState.catalog.tableExists(ident)
+    } yield {
+      val cat = spark.sessionState.catalog.getTableMetadata(ident)
+      val dataCols = dataSchema(cat)
+      require(dataCols.exists(_.name.equalsIgnoreCase(oldName)),
+        s"CHANGE COLUMN: no column '$oldName' in ${ident.table}")
+      val mapping = dataCols.map { f =>
+        if (f.name.equalsIgnoreCase(oldName))
+          (Some(f), StructField(newName, newType))
+        else (Some(f), f)
+      }
+      evolve(spark, ident, mapping)
     }
+  }
 
   // ------------------------------------------------------------------
 

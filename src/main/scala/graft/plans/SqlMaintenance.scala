@@ -18,12 +18,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * snapshot-table API ([[Snapshots.SnapshotTable.restore]], `compact`,
   * `zOrderBy`, `vacuum`) and returns a one-row metrics frame.
   *
-  * These five shapes are token-matched from the raw statement text because
-  * they are PARSE errors to Spark — this layer only ever sees text the
-  * session parser already rejected ([[graft.Engine.sql]] tries the real
-  * parser first), so no statement Spark understands can be shadowed. The
-  * table identifier is a registered [[NamedTables]] name or a
-  * backtick-quoted root path.
+  * These verbs, and the rest of the family below (refs, EXECUTE, MVs,
+  * ACID bridges, EXPLAIN options, SHOW, EXIM), are PARSE errors to Spark:
+  * this layer only sees text the session parser already rejected, and it
+  * parses each verb on the one [[Cursor]] grammar under its fall-through
+  * invariant. The table identifier is a registered [[NamedTables]] name or
+  * a backtick-quoted root path.
   */
 object SqlMaintenance {
 
@@ -36,163 +36,17 @@ object SqlMaintenance {
     if (ident.startsWith("`")) Seq("snapshot", nameOf(ident))
     else Seq(nameOf(ident))
 
-  // ------------------------------------------------------------- tokenizer
-  //
-  // ONE lexer + cursor grammar for the whole maintenance-verb family,
-  // replacing the per-verb regexes that had grown into a hand-rolled
-  // grammar (each individually fine; collectively primed to collide on
-  // identifiers containing keywords). Tokens carry their source offset so
-  // tail captures (CREATE MATERIALIZED VIEW ... AS <query>, the EXPLAIN
-  // family) hand the ORIGINAL text onward. Characters outside the token
-  // alphabet lex as Sym tokens: they can never match a grammar keyword, so
-  // a statement using them structurally falls through to Spark's canonical
-  // parse error. This layer only ever sees text the session parser already
-  // rejected ([[graft.Engine.sql]] tries the real parser first), so no
-  // statement Spark understands can be shadowed — and a verb statement
-  // with trailing junk surfaces Spark's error instead of half-matching.
-
-  private sealed trait Tok
-  private final case class Word(s: String) extends Tok // bare word / number
-  private final case class Quoted(s: String) extends Tok // `...` (content)
-  private final case class Str(s: String) extends Tok // '...' (content)
-  private final case class Sym(s: String) extends Tok // any other character
-
-  // hyphen belongs to words: FAST-FORWARD / CHERRY-PICK / ORPHAN-FILES are
-  // single verbs in the reference's spelling
-  private val TokRe = """(?s)\s+|`[^`]*`|'[^']*'|[\w.$\-]+|.""".r
-  private val WordRe = """[\w.$\-]+"""
-
-  private def lex(src: String): Vector[(Tok, Int)] =
-    TokRe.findAllMatchIn(src).flatMap { m =>
-      val t = m.matched
-      val tok =
-        if (t.trim.isEmpty) None
-        else if (t.length >= 2 && t.startsWith("`") && t.endsWith("`"))
-          Some(Quoted(t.substring(1, t.length - 1)))
-        else if (t.length >= 2 && t.startsWith("'") && t.endsWith("'"))
-          Some(Str(t.substring(1, t.length - 1)))
-        else if (t.matches(WordRe)) Some(Word(t))
-        else Some(Sym(t))
-      tok.map(_ -> m.start)
-    }.toVector
-
-  /** Token cursor. Every matcher either consumes what it matched or (for
-    * the multi-token `kw`) restores the position — a failed verb parse
-    * leaves no partial consumption behind the next handler would trip on.
+  /** SET PARTITION SPEC entries: each an identifier or a transform call
+    * (`day(ts)`, `bucket(16, id)`, `truncate(10, c)`). None on any
+    * malformed entry (the statement then surfaces Spark's parse error).
     */
-  private final class Cursor(val toks: Vector[(Tok, Int)], val src: String) {
-    var i = 0
-
-    /** Match a keyword sequence case-insensitively; all-or-nothing. */
-    def kw(words: String*): Boolean = {
-      val save = i
-      val ok = words.forall(w => toks.lift(i) match {
-        case Some((Word(s), _)) if s.equalsIgnoreCase(w) => i += 1; true
-        case _ => false
-      })
-      if (!ok) i = save
-      ok
-    }
-
-    def word(): Option[String] = toks.lift(i) match {
-      case Some((Word(s), _)) => i += 1; Some(s)
-      case _ => None
-    }
-
-    /** Identifier; backtick-quoted spellings keep their backticks so the
-      * name-vs-root-path distinction downstream ([[privParts]],
-      * [[tableOf]]) holds.
-      */
-    def ident(): Option[String] = toks.lift(i) match {
-      case Some((Word(s), _)) => i += 1; Some(s)
-      case Some((Quoted(s), _)) => i += 1; Some("`" + s + "`")
-      case _ => None
-    }
-
-    def num(): Option[String] = toks.lift(i) match {
-      case Some((Word(s), _)) if s.matches("""\d+(\.\d+)?""") =>
-        i += 1; Some(s)
-      case _ => None
-    }
-
-    def str(): Option[String] = toks.lift(i) match {
-      case Some((Str(s), _)) => i += 1; Some(s)
-      case _ => None
-    }
-
-    def sym(s: String): Boolean = toks.lift(i) match {
-      case Some((Sym(x), _)) if x == s => i += 1; true
-      case _ => false
-    }
-
-    /** `( ident [, ident]* )`, possibly empty; backticks stripped. */
-    def parenIdents(): Option[Seq[String]] = {
-      val save = i
-      if (!sym("(")) return None
-      val buf = scala.collection.mutable.ArrayBuffer[String]()
-      if (!sym(")")) {
-        var ok = true
-        var more = true
-        while (more && ok) {
-          ident() match {
-            case Some(x) => buf += stripQuotes(x); more = sym(",")
-            case None => ok = false
-          }
-        }
-        if (!ok || !sym(")")) { i = save; return None }
-      }
-      Some(buf.toSeq)
-    }
-
-    /** Remaining ORIGINAL statement text (trailing `;`/space stripped). */
-    def rest(): Option[String] =
-      toks.lift(i).map { case (_, off) =>
-        src.substring(off).trim.stripSuffix(";").trim
-      }.filter(_.nonEmpty)
-
-    /** End of statement, one optional trailing `;` consumed. */
-    def end(): Boolean = { sym(";"); i == toks.length }
-
-    /** End-gate for for-comprehensions: Some(()) iff at end. */
-    def done(): Option[Unit] = if (end()) Some(()) else None
-  }
-
-  /** `(entry [, entry]*)` for SET PARTITION SPEC, where each entry is an
-    * identifier or a transform call (`day(ts)`, `bucket(16, id)`,
-    * `truncate(10, c)`). Top-level comma split, paren-balanced; None on
-    * any malformed entry (the statement then surfaces Spark's parse
-    * error, the maintenance-verb fall-through invariant).
-    */
-  private def splitSpecEntries(raw: String): Option[Seq[String]] = {
-    val t = raw.trim.stripSuffix(";").trim
-    if (!t.startsWith("(") || !t.endsWith(")")) return None
-    val inner = t.substring(1, t.length - 1)
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    val cur = new StringBuilder
-    var depth = 0
-    inner.foreach {
-      case '(' => depth += 1; cur.append('(')
-      case ')' =>
-        depth -= 1; if (depth < 0) return None; cur.append(')')
-      case ',' if depth == 0 => out += cur.toString.trim; cur.clear()
-      case ch => cur.append(ch)
-    }
-    if (depth != 0) return None
-    out += cur.toString.trim
-    val entries = out.toSeq.map(_.replace("`", ""))
+  private def specEntries(raw: Seq[String]): Option[Seq[String]] = {
+    val entries = raw.map(_.replace("`", ""))
     val wellFormed = entries.nonEmpty && entries.forall(e =>
       e.matches("""[A-Za-z_][A-Za-z0-9_]*""") ||
         PartitionTransforms.parseEntry(e).isRight)
     if (wellFormed) Some(entries) else None
   }
-
-  /** Optional clause: Some(None) = absent, Some(Some(x)) = present and
-    * well-formed, None = present but malformed (the whole verb then fails
-    * to match and the statement surfaces Spark's parse error).
-    */
-  private def optClause[T](present: Boolean)(parse: => Option[T])
-      : Option[Option[T]] =
-    if (!present) Some(None) else parse.map(Some(_))
 
   /** Execute `sqlText` if it is a maintenance statement; None otherwise
     * (caller surfaces the canonical parse error). Handlers are tried in
@@ -200,11 +54,8 @@ object SqlMaintenance {
     * privilege-checks) after its FULL shape parsed through end-of-statement.
     */
   def maybeRun(spark: SparkSession, sqlText: String): Option[DataFrame] = {
-    val toks = lex(sqlText)
-    if (toks.isEmpty) None
-    else handlers.view
-      .flatMap(h => h(spark, new Cursor(toks, sqlText)))
-      .headOption
+    val c = Cursor(sqlText)
+    handlers.view.flatMap(h => h(spark, c.fresh())).headOption
   }
 
   private type Handler = (SparkSession, Cursor) => Option[DataFrame]
@@ -238,7 +89,7 @@ object SqlMaintenance {
     if (!c.kw("OPTIMIZE")) return None
     for {
       ident <- c.ident()
-      zcols <- optClause(c.kw("ZORDER", "BY"))(c.parenIdents())
+      zcols <- c.opt("ZORDER", "BY")(c.parenIdents())
       _ <- c.done()
     } yield {
       gate(spark, ident)
@@ -253,8 +104,8 @@ object SqlMaintenance {
     if (!c.kw("VACUUM")) return None
     for {
       ident <- c.ident()
-      hours <- optClause(c.kw("RETAIN")) {
-        for { n <- c.num(); _ <- if (c.kw("HOURS")) Some(()) else None }
+      hours <- c.opt("RETAIN") {
+        for { n <- c.num(); _ <- c.expect("HOURS") }
         yield n.toDouble
       }
       _ <- c.done()
@@ -276,20 +127,12 @@ object SqlMaintenance {
         val ifNot = c.kw("IF", "NOT", "EXISTS")
         for {
           name <- c.word()
-          fromV <- optClause(c.kw("FOR", "SYSTEM_VERSION", "AS", "OF"))(c.num())
-          retain <- optClause(c.kw("RETAIN")) {
-            for {
-              n <- c.num()
-              u <- if (c.kw("DAYS")) Some("DAYS")
-                   else if (c.kw("HOURS")) Some("HOURS")
-                   else None
-            } yield (n, u)
-          }
+          fromV <- c.opt("FOR", "SYSTEM_VERSION", "AS", "OF")(c.num())
+          age <- c.opt("RETAIN")(retainMs(c))
           _ <- c.done()
         } yield {
           gate(spark, ident)
           val t = tableOf(spark, ident)
-          val age = retain.flatMap { case (n, u) => retainMs(n, u) }
           if (kind == "branch")
             t.createBranch(name, fromV.map(_.toLong), ifNot, age)
           else t.createTag(name, fromV.map(_.toLong), ifNot, age)
@@ -323,9 +166,9 @@ object SqlMaintenance {
           // EXECUTE ROLLBACK(<version> | '<timestamp>') over restore (ref
           // ddl/table/execute/AlterTableExecuteAnalyzer.java getRollbackDesc)
           for {
-            _ <- if (c.sym("(")) Some(()) else None
+            _ <- c.expect("(")
             arg <- c.num().map(Left(_)).orElse(c.str().map(Right(_)))
-            _ <- if (c.sym(")")) Some(()) else None
+            _ <- c.expect(")")
             _ <- c.done()
           } yield {
             gate(spark, ident)
@@ -339,11 +182,11 @@ object SqlMaintenance {
               s"${m.meta.getOrElse("restored_version", "?")} as version ${m.version}")
           }
         else if (c.kw("EXPIRE_SNAPSHOTS")) {
-          if (c.sym("(")) // EXPIRE_SNAPSHOTS('<ts>'): retire versions at or
+          if (c.kw("(")) // EXPIRE_SNAPSHOTS('<ts>'): retire versions at or
             // before the cut, keeping at least the head
             for {
               ts <- c.str()
-              _ <- if (c.sym(")")) Some(()) else None
+              _ <- c.expect(")")
               _ <- c.done()
             } yield {
               gate(spark, ident)
@@ -357,7 +200,7 @@ object SqlMaintenance {
             }
           else
             for {
-              _ <- if (c.kw("RETAIN", "LAST")) Some(()) else None
+              _ <- c.expect("RETAIN", "LAST")
               n <- c.num()
               _ <- c.done()
             } yield {
@@ -371,7 +214,7 @@ object SqlMaintenance {
           // [DELETE] ORPHAN-FILES [OLDER THAN '<ts>']: reclaim unreferenced
           // files WITHOUT pruning history (the reference defaults to now-3d)
           for {
-            older <- optClause(c.kw("OLDER", "THAN"))(c.str())
+            older <- c.opt("OLDER", "THAN")(c.str())
             _ <- c.done()
           } yield {
             gate(spark, ident)
@@ -398,30 +241,15 @@ object SqlMaintenance {
       // paren-list matching the column arity
       def skewedBy(): Option[DataFrame] = {
         def scalar(): Option[String] = c.str().orElse(c.num())
-        def group(): Option[Seq[String]] =
-          if (c.sym("(")) {
-            val buf = scala.collection.mutable.ArrayBuffer[String]()
-            var ok = true
-            var more = true
-            while (more && ok) scalar() match {
-              case Some(v) => buf += v; more = c.sym(",")
-              case None => ok = false
-            }
-            if (ok && c.sym(")")) Some(buf.toSeq) else None
-          } else scalar().map(Seq(_))
+        def tuple(): Option[Seq[String]] =
+          if (c.kw("("))
+            for { vs <- c.sepBy(",")(scalar()); _ <- c.expect(")") } yield vs
+          else scalar().map(Seq(_))
         for {
           cols <- c.parenIdents()
-          _ <- if (c.kw("ON") && c.sym("(")) Some(()) else None
-          groups <- {
-            val buf = scala.collection.mutable.ArrayBuffer[Seq[String]]()
-            var ok = true
-            var more = true
-            while (more && ok) group() match {
-              case Some(g) => buf += g; more = c.sym(",")
-              case None => ok = false
-            }
-            if (ok && c.sym(")")) Some(buf.toSeq) else None
-          }
+          _ <- c.expect("ON", "(")
+          groups <- c.sepBy(",")(tuple())
+          _ <- c.expect(")")
           dirs <- Some(c.kw("STORED", "AS", "DIRECTORIES"))
           _ <- c.done()
         } yield {
@@ -438,20 +266,12 @@ object SqlMaintenance {
       def refReplace(kind: String, orCreate: Boolean): Option[DataFrame] =
         for {
           name <- c.word()
-          toV <- optClause(c.kw("FOR", "SYSTEM_VERSION", "AS", "OF"))(c.num())
-          retain <- optClause(c.kw("RETAIN")) {
-            for {
-              n <- c.num()
-              u <- if (c.kw("DAYS")) Some("DAYS")
-                   else if (c.kw("HOURS")) Some("HOURS")
-                   else None
-            } yield (n, u)
-          }
+          toV <- c.opt("FOR", "SYSTEM_VERSION", "AS", "OF")(c.num())
+          age <- c.opt("RETAIN")(retainMs(c))
           _ <- c.done()
         } yield {
           gate(spark, ident)
           val t = tableOf(spark, ident)
-          val age = retain.flatMap { case (n, u) => retainMs(n, u) }
           if (kind == "branch")
             t.replaceBranch(name, toV.map(_.toLong), orCreate, age)
           else t.replaceTag(name, toV.map(_.toLong), orCreate, age)
@@ -471,7 +291,7 @@ object SqlMaintenance {
       else if (c.kw("RENAME", "BRANCH"))
         for {
           from <- c.word()
-          _ <- if (c.kw("TO")) Some(()) else None
+          _ <- c.expect("TO")
           to <- c.word()
           _ <- c.done()
         } yield {
@@ -482,9 +302,12 @@ object SqlMaintenance {
       else if (c.kw("EXECUTE")) execute()
       else if (c.kw("SET", "PARTITION", "SPEC"))
         // entries may be transforms — day(ts), bucket(16, id),
-        // truncate(10, c) — so the clause parses textually (top-level
-        // comma split, paren-balanced), not as a plain identifier list
-        for { raw <- c.rest(); cols <- splitSpecEntries(raw) } yield {
+        // truncate(10, c) — not a plain identifier list
+        for {
+          raw <- c.group()
+          _ <- c.done()
+          cols <- specEntries(raw)
+        } yield {
           gate(spark, ident)
           val m = tableOf(spark, ident).setPartitionSpec(cols)
           okDf(spark, s"set partition spec to (${cols.mkString(", ")}) " +
@@ -511,8 +334,8 @@ object SqlMaintenance {
     if (c.kw("CREATE", "MATERIALIZED", "VIEW"))
       for {
         ident <- c.ident()
-        loc <- optClause(c.kw("LOCATION"))(c.str())
-        _ <- if (c.kw("AS")) Some(()) else None
+        loc <- c.opt("LOCATION")(c.str())
+        _ <- c.expect("AS")
         query <- c.rest()
       } yield {
         // materializing a query = reading it: same SELECT checks, and
@@ -533,7 +356,7 @@ object SqlMaintenance {
     else if (c.kw("ALTER", "MATERIALIZED", "VIEW"))
       for {
         ident <- c.ident()
-        _ <- if (c.kw("REBUILD")) Some(()) else None
+        _ <- c.expect("REBUILD")
         _ <- c.done()
       } yield {
         MaterializedViews.registered(spark)
@@ -572,9 +395,9 @@ object SqlMaintenance {
     if (!c.kw("CONVERT", "HIVE", "ACID")) return None
     for {
       src <- c.str()
-      _ <- if (c.kw("TO", "SNAPSHOT")) Some(()) else None
+      _ <- c.expect("TO", "SNAPSHOT")
       dst <- c.str()
-      name <- optClause(c.kw("AS"))(c.ident())
+      name <- c.opt("AS")(c.ident())
       _ <- c.done()
     } yield {
       // reads raw warehouse files into a brand-new ungoverned location —
@@ -622,7 +445,7 @@ object SqlMaintenance {
       dir <- c.str()
       kind = c.str()
       n = c.num()
-      aborted <- optClause(c.kw("ABORTED"))(c.parenIdents())
+      aborted <- c.opt("ABORTED")(c.parenIdents())
       _ <- c.done()
       k = kind.getOrElse("major").toLowerCase
       _ <- if (k == "major" || k == "minor" || k == "rebalance") Some(())
@@ -680,11 +503,11 @@ object SqlMaintenance {
     if (!c.kw("OVERWRITE", "HIVE", "ACID")) return None
     for {
       dir <- c.str()
-      part <- optClause(c.kw("PARTITION"))(c.str())
-      _ <- if (c.kw("WRITEID")) Some(()) else None
+      part <- c.opt("PARTITION")(c.str())
+      _ <- c.expect("WRITEID")
       n <- c.num()
       _ <- if (n.matches("""\d+""")) Some(()) else None
-      _ <- if (c.kw("AS")) Some(()) else None
+      _ <- c.expect("AS")
       q <- c.rest()
     } yield {
       Authz.requireAdmin(spark, "OVERWRITE HIVE ACID")
@@ -707,7 +530,7 @@ object SqlMaintenance {
     if (!c.kw("REPLICATE", "TABLE")) return None
     for {
       ident <- c.ident()
-      _ <- if (c.kw("TO")) Some(()) else None
+      _ <- c.expect("TO")
       target <- c.str()
       _ <- c.done()
     } yield {
@@ -990,9 +813,11 @@ object SqlMaintenance {
   /** RETAIN n DAYS|HOURS -> maxRefAgeMs (ref AlterTableSnapshotRefSpec
     * getMaxRefAgeMs).
     */
-  private def retainMs(n: String, unit: String): Option[Long] =
-    Option(n).map(_.toLong * (if (unit.equalsIgnoreCase("DAYS"))
-      86400000L else 3600000L))
+  private def retainMs(c: Cursor): Option[Long] = c.num().flatMap { n =>
+    if (c.kw("DAYS")) Some(n.toLong * 86400000L)
+    else if (c.kw("HOURS")) Some(n.toLong * 3600000L)
+    else None
+  }
 
   /** EXPORT TABLE t TO 'dir' / IMPORT [TABLE t] FROM 'dir' (ref
     * ql/parse/{Export,Import}SemanticAnalyzer.java; the exim_*
@@ -1006,18 +831,22 @@ object SqlMaintenance {
     if (c.kw("EXPORT", "TABLE")) {
       for {
         ident <- c.ident()
-        dir <- if (c.kw("TO")) c.str() else None
+        _ <- c.expect("TO")
+        dir <- c.str()
+        _ <- c.done()
       } yield {
         Authz.requireRelationPrivilege(spark, privParts(ident), "select")
         Ddl.exportTable(spark, ident, dir)
         okDf(spark, s"exported $ident to $dir")
       }
     } else if (c.kw("IMPORT")) {
-      val name =
-        if (c.kw("TABLE")) c.ident().getOrElse("") else ""
-      if (!c.kw("FROM")) None
-      else c.str().map { dir =>
-        val created = Ddl.importTable(spark, dir, name)
+      for {
+        name <- c.opt("TABLE")(c.ident())
+        _ <- c.expect("FROM")
+        dir <- c.str()
+        _ <- c.done()
+      } yield {
+        val created = Ddl.importTable(spark, dir, name.getOrElse(""))
         okDf(spark, s"imported table $created from $dir")
       }
     } else None
@@ -1029,14 +858,8 @@ object SqlMaintenance {
     Seq(msg).toDF("result")
   }
 
-  private def stripQuotes(s: String): String = {
-    val x = s.trim
-    if (x.startsWith("`") && x.endsWith("`") && x.length > 1)
-      x.substring(1, x.length - 1)
-    else x
-  }
-
-  private def nameOf(ident: String): String = stripQuotes(ident)
+  private def nameOf(ident: String): String =
+    ident.stripPrefix("`").stripSuffix("`")
 
   /** A registered catalog name, or a backtick-quoted snapshot root path. */
   private def tableOf(spark: SparkSession, ident: String): Snapshots.SnapshotTable = {

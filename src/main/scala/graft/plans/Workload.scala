@@ -395,95 +395,101 @@ object Workload {
 
   // ------------------------------------------------------------ SQL verbs
 
-  private val CreatePlanR =
-    """(?is)\s*CREATE\s+RESOURCE\s+PLAN\s+(\w+)\s*;?\s*""".r
-  private val DropPlanR =
-    """(?is)\s*DROP\s+RESOURCE\s+PLAN\s+(\w+)\s*;?\s*""".r
-  private val ActivateR =
-    """(?is)\s*ALTER\s+RESOURCE\s+PLAN\s+(\w+)\s+ACTIVATE\s*;?\s*""".r
-  private val DisableR =
-    """(?is)\s*ALTER\s+RESOURCE\s+PLAN\s+(\w+)\s+DISABLE\s*;?\s*""".r
-  private val ShowPlansR = """(?is)\s*SHOW\s+RESOURCE\s+PLANS\s*;?\s*""".r
-  private val ShowPlanR = """(?is)\s*SHOW\s+RESOURCE\s+PLAN\s+(\w+)\s*;?\s*""".r
-  private val CreatePoolR =
-    ("""(?is)\s*CREATE\s+POOL\s+(\w+)\.(\w+)\s+WITH\s+""" +
-      """ALLOC_FRACTION\s*=\s*([\d.]+)\s*,\s*QUERY_PARALLELISM\s*=\s*(\d+)\s*;?\s*""").r
-  private val DropPoolR =
-    """(?is)\s*DROP\s+POOL\s+(\w+)\.(\w+)\s*;?\s*""".r
-  private val CreateTriggerR =
-    ("""(?is)\s*CREATE\s+TRIGGER\s+(\w+)\.(\w+)\s+WHEN\s+(\w+)\s*>\s*(\d+)\s+""" +
-      """DO\s+(?:(KILL)|MOVE\s+TO\s+(\w+))\s*;?\s*""").r
-  private val DropTriggerR =
-    """(?is)\s*DROP\s+TRIGGER\s+(\w+)\.(\w+)\s*;?\s*""".r
-  private val AddTriggerR =
-    ("""(?is)\s*ALTER\s+POOL\s+(\w+)\.(\w+)\s+ADD\s+TRIGGER\s+(\w+)\s*;?\s*""").r
-  private val AddMappingR =
-    ("""(?is)\s*CREATE\s+USER\s+MAPPING\s+'([^']+)'\s+IN\s+(\w+)\s+TO\s+(\w+)\s*;?\s*""").r
-  private val DropMappingR =
-    ("""(?is)\s*DROP\s+USER\s+MAPPING\s+'([^']+)'\s+IN\s+(\w+)\s*;?\s*""").r
-
   /** Execute `sqlText` if it is a WLM verb (all parse errors to Spark);
     * None otherwise.
     */
   def maybeSql(spark: SparkSession, sqlText: String): Option[DataFrame] = {
     import spark.implicits._
-    def done(what: String): DataFrame = Seq(what).toDF("result")
+    val c = Cursor(sqlText)
     // mutating WLM verbs are admin-gated when authz enforcement is on
     // (a denied user must not escape KILL triggers by disabling the plan);
     // the SHOW verbs stay open
-    def admin(verb: String): Unit = Authz.requireAdmin(spark, verb)
-    sqlText match {
-      case CreatePlanR(p) =>
-        admin("CREATE RESOURCE PLAN")
-        createPlan(p); Some(done(s"created resource plan $p"))
-      case DropPlanR(p) =>
-        admin("DROP RESOURCE PLAN")
-        dropPlan(p); Some(done(s"dropped resource plan $p"))
-      case ActivateR(p) =>
-        admin("ALTER RESOURCE PLAN ... ACTIVATE")
-        activate(p); Some(done(s"activated resource plan $p"))
-      case DisableR(p) =>
-        admin("ALTER RESOURCE PLAN ... DISABLE")
-        if (state.active.contains(norm(p))) disable()
-        Some(done(s"disabled resource plan $p"))
-      case ShowPlansR() =>
-        val s = state
-        Some(planNames.map(n =>
-          (n, s.active.contains(n), s.plans(n).pools.size,
-            s.plans(n).triggers.size))
-          .toDF("plan", "active", "pools", "triggers"))
-      case ShowPlanR(p) =>
+    def run(verb: String, msg: => String)(act: => Unit) = c.done().map { _ =>
+      Authz.requireAdmin(spark, verb); act; Seq(msg).toDF("result")
+    }
+    def planDot() = c.qparts().collect { case Seq(p, x) => (p, x) }
+    def int() = c.num().filter(_.forall(_.isDigit))
+    if (c.kw("CREATE", "RESOURCE", "PLAN"))
+      c.name().flatMap(p =>
+        run("CREATE RESOURCE PLAN", s"created resource plan $p")(createPlan(p)))
+    else if (c.kw("DROP", "RESOURCE", "PLAN"))
+      c.name().flatMap(p =>
+        run("DROP RESOURCE PLAN", s"dropped resource plan $p")(dropPlan(p)))
+    else if (c.kw("ALTER", "RESOURCE", "PLAN"))
+      c.name().flatMap { p =>
+        if (c.kw("ACTIVATE"))
+          run("ALTER RESOURCE PLAN ... ACTIVATE",
+            s"activated resource plan $p")(activate(p))
+        else if (c.kw("DISABLE"))
+          run("ALTER RESOURCE PLAN ... DISABLE", s"disabled resource plan $p")(
+            if (state.active.contains(norm(p))) disable())
+        else None
+      }
+    else if (c.kw("SHOW", "RESOURCE", "PLANS")) c.done().map { _ =>
+      val s = state
+      planNames.map(n => (n, s.active.contains(n), s.plans(n).pools.size,
+          s.plans(n).triggers.size))
+        .toDF("plan", "active", "pools", "triggers")
+    }
+    else if (c.kw("SHOW", "RESOURCE", "PLAN"))
+      for { p <- c.name(); _ <- c.done() } yield {
         val rp = state.plans.getOrElse(norm(p),
           throw new IllegalArgumentException(s"resource plan not found: $p"))
-        Some(rp.pools.values.toSeq.sortBy(_.name).map(pl =>
+        rp.pools.values.toSeq.sortBy(_.name).map(pl =>
           (pl.name, pl.allocFraction, pl.queryParallelism,
             pl.triggers.toSeq.sorted.mkString(",")))
-          .toDF("pool", "alloc_fraction", "query_parallelism", "triggers"))
-      case CreatePoolR(p, pool, frac, par) =>
-        admin("CREATE POOL")
-        createPool(p, pool, frac.toDouble, par.toInt)
-        Some(done(s"created pool $p.$pool"))
-      case DropPoolR(p, pool) =>
-        admin("DROP POOL")
-        dropPool(p, pool); Some(done(s"dropped pool $p.$pool"))
-      case CreateTriggerR(p, t, counter, limit, kill, movePool) =>
-        admin("CREATE TRIGGER")
-        val action = if (kill != null) Kill else MoveTo(movePool)
-        createTrigger(p, t, counter, limit.toLong, action)
-        Some(done(s"created trigger $p.$t"))
-      case DropTriggerR(p, t) =>
-        admin("DROP TRIGGER")
-        dropTrigger(p, t); Some(done(s"dropped trigger $p.$t"))
-      case AddTriggerR(p, pool, t) =>
-        admin("ALTER POOL ... ADD TRIGGER")
-        addTriggerToPool(p, t, pool); Some(done(s"added trigger $t to $p.$pool"))
-      case AddMappingR(u, p, pool) =>
-        admin("CREATE USER MAPPING")
-        addMapping(p, u, pool); Some(done(s"mapped $u to $p.$pool"))
-      case DropMappingR(u, p) =>
-        admin("DROP USER MAPPING")
-        dropMapping(p, u); Some(done(s"unmapped $u in $p"))
-      case _ => None
-    }
+          .toDF("pool", "alloc_fraction", "query_parallelism", "triggers")
+      }
+    else if (c.kw("CREATE", "POOL"))
+      for {
+        (p, pool) <- planDot()
+        _ <- c.expect("WITH", "ALLOC_FRACTION", "=")
+        frac <- c.num()
+        _ <- c.expect(",", "QUERY_PARALLELISM", "=")
+        par <- int()
+        out <- run("CREATE POOL", s"created pool $p.$pool")(
+          createPool(p, pool, frac.toDouble, par.toInt))
+      } yield out
+    else if (c.kw("DROP", "POOL"))
+      planDot().flatMap { case (p, pool) =>
+        run("DROP POOL", s"dropped pool $p.$pool")(dropPool(p, pool)) }
+    else if (c.kw("CREATE", "TRIGGER"))
+      for {
+        (p, t) <- planDot()
+        _ <- c.expect("WHEN")
+        counter <- c.word()
+        _ <- c.expect(">")
+        limit <- int()
+        action <- if (c.kw("DO", "KILL")) Some(Kill)
+          else if (c.kw("DO", "MOVE", "TO")) c.name().map(MoveTo)
+          else None
+        out <- run("CREATE TRIGGER", s"created trigger $p.$t")(
+          createTrigger(p, t, counter, limit.toLong, action))
+      } yield out
+    else if (c.kw("DROP", "TRIGGER"))
+      planDot().flatMap { case (p, t) =>
+        run("DROP TRIGGER", s"dropped trigger $p.$t")(dropTrigger(p, t)) }
+    else if (c.kw("ALTER", "POOL"))
+      for {
+        (p, pool) <- planDot()
+        t <- if (c.kw("ADD", "TRIGGER")) c.name() else None
+        out <- run("ALTER POOL ... ADD TRIGGER", s"added trigger $t to $p.$pool")(
+          addTriggerToPool(p, t, pool))
+      } yield out
+    else if (c.kw("CREATE", "USER", "MAPPING"))
+      for {
+        u <- c.str().filter(_.nonEmpty)
+        p <- if (c.kw("IN")) c.name() else None
+        pool <- if (c.kw("TO")) c.name() else None
+        out <- run("CREATE USER MAPPING", s"mapped $u to $p.$pool")(
+          addMapping(p, u, pool))
+      } yield out
+    else if (c.kw("DROP", "USER", "MAPPING"))
+      for {
+        u <- c.str().filter(_.nonEmpty)
+        p <- if (c.kw("IN")) c.name() else None
+        out <- run("DROP USER MAPPING", s"unmapped $u in $p")(dropMapping(p, u))
+      } yield out
+    else None
   }
 }

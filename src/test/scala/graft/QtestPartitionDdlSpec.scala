@@ -157,6 +157,47 @@ class QtestPartitionDdlSpec extends SparkSpec {
     }
   }
 
+  test("PARTITION COLUMN retype on an in-repo table: predicates keep " +
+      "matching, a data column refuses, and enforcement needs UPDATE") {
+    withTable("pcol_retype") {
+      def sql(q: String) = Engine.sql(spark, sfDir, q)
+      sql("DROP TABLE IF EXISTS pcol_retype")
+      sql("create table pcol_retype (key string, value string) " +
+        "partitioned by (dt string)")
+      sql("insert into pcol_retype partition (dt='100') " +
+        "values ('1', 'a'), ('2', 'b'), ('3', 'c')")
+      def n(pred: String): Long =
+        sql(s"select count(*) from pcol_retype where $pred").head.getLong(0)
+      assert(n("dt = '100'") === 3)
+      sql("alter table pcol_retype partition column (dt int)")
+      assert(spark.table("pcol_retype").schema("dt").dataType ===
+        org.apache.spark.sql.types.IntegerType)
+      assert(n("dt = 100") === 3)
+      assert(n("dt = '100'") === 3)
+      val e = intercept[IllegalArgumentException] {
+        sql("alter table pcol_retype partition column (key int)") }
+      assert(e.getMessage.contains("not a partition column"), e.getMessage)
+      try {
+        spark.conf.set("spark.graft.authz.enabled", "true")
+        spark.conf.set("spark.graft.authz.admins", "pcol_admin")
+        spark.conf.set("spark.graft.user", "pcol_user")
+        intercept[graft.plans.Authz.AccessDenied] {
+          sql("alter table pcol_retype partition column (dt string)") }
+        assert(spark.table("pcol_retype").schema("dt").dataType ===
+          org.apache.spark.sql.types.IntegerType)
+        graft.plans.Authz.grant("pcol_retype", graft.plans.Authz.User("pcol_user"),
+          Seq("update"))
+        sql("alter table pcol_retype partition column (dt string)")
+        assert(spark.table("pcol_retype").schema("dt").dataType ===
+          org.apache.spark.sql.types.StringType)
+      } finally {
+        Seq("spark.graft.authz.enabled", "spark.graft.authz.admins",
+          "spark.graft.user").foreach(spark.conf.unset)
+        graft.plans.Authz.clearAll()
+      }
+    }
+  }
+
   test("escape1.q: dynamic-partition INSERT of special-character values " +
       "escapes directory names; partial-spec DROP PARTITION clears them") {
     assume(haveRef)

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import org.scalatest.funsuite.AnyFunSuite
 
 /** [[MoneyDecimal]] must equal `CAST(x AS DECIMAL(p,2))` on every
   * Exact-wrapped column of the testdata (the 2-decimal-quantized money
@@ -12,8 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * testdata regeneration ever ships non-2dp money, this fails before any
   * verified query can diverge.
   */
-class MoneyDecimalSpec extends AnyFunSuite {
-  private lazy val spark = graft.Engine.session("local[4]", "money-decimal-spec")
+class MoneyDecimalSpec extends graft.SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   private def mismatches(tbl: String, c: org.apache.spark.sql.Column,

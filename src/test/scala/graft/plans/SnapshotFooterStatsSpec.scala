@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The r17 footer-based stats collector must agree with the aggregation
   * the old implementation ran (min/max/null-count per written file and
@@ -13,8 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * fails this spec before it can silently weaken (or worse, mis-direct)
   * manifest pruning.
   */
-class SnapshotFooterStatsSpec extends AnyFunSuite {
-  private lazy val spark = graft.Engine.session("local[4]", "footer-stats-spec")
+class SnapshotFooterStatsSpec extends graft.SparkSpec {
 
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft_fstats_").toString + "/t"
