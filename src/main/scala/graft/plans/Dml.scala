@@ -386,15 +386,8 @@ object Dml {
       whenMatchedDelete: Boolean = false,
       sourceKeysUnique: Boolean = false,
       insertUnmatched: Boolean = true): Unit =
-    mergeSpec(spark, table, source, targetKey, sourceKey,
+    mergeSpec(spark, table, source, Seq(targetKey -> sourceKey),
       MergeEngine.specOf(whenMatchedSet, whenMatchedDelete, insertUnmatched),
-      sourceKeysUnique)
-
-  /** Single-key convenience: delegates to the composite-key `mergeSpec`. */
-  def mergeSpec(spark: SparkSession, table: String, source: DataFrame,
-      targetKey: String, sourceKey: String, spec: MergeEngine.Spec,
-      sourceKeysUnique: Boolean = false): Unit =
-    mergeSpec(spark, table, source, Seq(targetKey -> sourceKey), spec,
       sourceKeysUnique)
 
   /** Full multi-arm MERGE (conditional matched arms, conditional insert,
@@ -416,27 +409,10 @@ object Dml {
       MergeEngine.postImage(target, source, keys, cols.toSeq, spec,
         sourceKeysUnique)
 
-    // the in-job guard surfaces as a SparkRuntimeException wrapped in job
-    // failure layers — unwrap to the documented IllegalStateException
-    def unwrapCardinality[A](body: => A): A =
-      try body catch {
-        case e: Throwable =>
-          val hit = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10)
-            .find(c => c.getMessage != null &&
-              c.getMessage.contains("MERGE cardinality violation"))
-          hit match {
-            case Some(c) => throw new IllegalStateException(
-              c.getMessage.linesIterator.toSeq.headOption.getOrElse(c.getMessage), e)
-            case None => throw e
-          }
-      }
-
-    unwrapCardinality {
+    MergeEngine.unwrapCardinality {
       detectLayout(spark, table) match {
         case Some(l) =>
-          val setCols = (spec.matched ++ spec.notMatchedBySource)
-            .collect { case MergeEngine.Update(_, s) => s.keySet }.flatten.toSet
-          requireNoPartitionAssignment(l, setCols, "MERGE")
+          requireNoPartitionAssignment(l, spec.assignedColumns, "MERGE")
           val tuples =
             if (spec.touchesUnmatchedTargets)
               l.leaves.keys.toSeq // any leaf may hold an unmatched target row

@@ -35,9 +35,9 @@ object NamedTables {
 
   sealed trait Ref { def root: String }
   /** A snapshot-table root ([[Snapshots]] manifest log). `writeMode` picks
-    * the UPDATE/DELETE statement strategy: `cow` rewrites affected files,
-    * `merge-on-read` writes position-delete sidecars that readers merge
-    * until compaction (the reference's delete-delta design) — the
+    * the UPDATE/DELETE/MERGE statement strategy: `cow` rewrites affected
+    * files, `merge-on-read` writes position-delete sidecars that readers
+    * merge until compaction (the reference's delete-delta design) — the
     * `write.mode` table property.
     */
   final case class SnapshotRef(root: String, writeMode: String = WriteCow)
@@ -46,6 +46,9 @@ object NamedTables {
   final case class PathRef(root: String) extends Ref
 
   val WriteCow = "copy-on-write"
+  /** Every mainline UPDATE, DELETE and MERGE shape commits as `*-mor`;
+    * branch-addressed DML stays copy-on-write.
+    */
   val WriteMor = "merge-on-read"
 
   // JVM-global like the session-catalog it stands in for; tests and the

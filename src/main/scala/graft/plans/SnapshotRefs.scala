@@ -215,9 +215,9 @@ private[plans] trait SnapshotRefOps { self: Snapshots.SnapshotTable =>
     updateOn(Branch(branch), cond, set, maxRetries)
 
   /** Composite-key multi-arm MERGE addressed at a BRANCH — the mainline
-    * [[Snapshots.SnapshotTable.mergeSpec]] algebra (file-granular rewrite,
-    * cardinality guard in [[MergeEngine.postImage]]) committed onto the
-    * branch head.
+    * [[Snapshots.SnapshotTable.mergeSpec]] (file-granular rewrite of the
+    * [[MergeEngine.postImage]], whose lowering every MERGE planner shares)
+    * committed onto the branch head; always COW, like all branch DML.
     */
   def mergeSpecOnBranch(branch: String, source: DataFrame,
       mergeKeys: Seq[(String, String)], spec: MergeEngine.Spec,

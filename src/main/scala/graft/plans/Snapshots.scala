@@ -1987,9 +1987,9 @@ object Snapshots {
       * or, with `whenMatchedDelete`, drop); source rows matching nothing
       * insert (unless `insertUnmatched=false`). Cardinality guard: >1 source
       * row per matched target key fails the statement in-job (no extra
-      * target scan), matching [[Dml.merge]]. On a lost commit race the whole
-      * plan replays against the winning snapshot — serializable, not just a
-      * file swap.
+      * target scan) with an `IllegalStateException`, matching [[Dml.merge]].
+      * On a lost commit race the whole plan replays against the winning
+      * snapshot — serializable, not just a file swap.
       */
     def merge(source: DataFrame, targetKey: String, sourceKey: String,
         whenMatchedSet: Map[String, Column] = Map.empty,
@@ -1997,22 +1997,12 @@ object Snapshots {
         insertUnmatched: Boolean = true,
         sourceKeysUnique: Boolean = false,
         maxRetries: Int = 10): Manifest =
-      mergeSpec(source, targetKey, sourceKey,
+      mergeSpec(source, Seq(targetKey -> sourceKey),
         MergeEngine.specOf(whenMatchedSet, whenMatchedDelete, insertUnmatched),
         sourceKeysUnique, maxRetries)
 
-    /** Merge-on-read MERGE: matched target rows retire via a (file,
-      * row-position) delete sidecar while their updated images and —
-      * when `insertUnmatched` — the unmatched source rows append as fresh
-      * files, committed atomically as ONE version. Write cost is
-      * O(matched + inserted rows) against [[merge]]'s O(affected files):
-      * the upsert shape for wide tables where COW write amplification
-      * dominates. Readers pay the sidecar anti-join until [[compact]]
-      * folds it. Single unconditional matched arm (update set / delete),
-      * matching the convenience [[merge]]; multi-arm statements use the
-      * COW [[mergeSpec]]. Cardinality guard and racing-writer semantics
-      * are identical to the COW path. One evaluation of the statement's
-      * join per attempt (see [[mergeMergeOnReadKeys]]).
+    /** Merge-on-read [[merge]]: the single-key, single-arm convenience over
+      * [[mergeSpecMergeOnRead]].
       */
     def mergeMergeOnRead(source: DataFrame, targetKey: String, sourceKey: String,
         whenMatchedSet: Map[String, Column] = Map.empty,
@@ -2020,109 +2010,45 @@ object Snapshots {
         insertUnmatched: Boolean = true,
         sourceKeysUnique: Boolean = false,
         maxRetries: Int = 10): Manifest =
-      mergeMergeOnReadKeys(source, Seq(targetKey -> sourceKey), whenMatchedSet,
-        whenMatchedDelete, insertUnmatched, sourceKeysUnique,
-        maxRetries = maxRetries)
+      mergeSpecMergeOnRead(source, Seq(targetKey -> sourceKey),
+        MergeEngine.specOf(whenMatchedSet, whenMatchedDelete, insertUnmatched),
+        sourceKeysUnique, maxRetries)
 
-    /** Composite-key merge-on-read MERGE: `mergeKeys` are the ON-clause
-      * equi-pairs (targetCol, sourceCol). `insertValues`, when given, maps
-      * each target column to its insert expression over the source row
-      * (unassigned columns fill with NULL); when absent the whole source
-      * row inserts by name. Each attempt evaluates the statement once: one
-      * source-side join against the visible target (left-outer when
-      * unmatched rows insert, inner otherwise), materialized by
-      * [[retireAndAppend]], whose result alone decides the no-op and feeds
-      * the sidecar, the updated images and the inserts.
+    /** Merge-on-read multi-arm MERGE: the target rows an arm updates or
+      * deletes retire via a (file, row-position) delete sidecar while their
+      * updated images and the inserted source rows append as fresh files,
+      * committed atomically as ONE version. Write cost is O(acted + inserted
+      * rows) against [[mergeSpec]]'s O(affected files): the upsert shape for
+      * wide tables where COW write amplification dominates. Readers pay the
+      * sidecar anti-join until [[compact]] folds it. Statement semantics,
+      * cardinality guard and racing-writer semantics are the COW path's:
+      * each attempt evaluates [[MergeEngine.lower]] over the visible target
+      * once, materialized by [[retireAndAppend]], whose result alone decides
+      * the no-op and feeds the sidecar, the images and the inserts.
       */
-    def mergeMergeOnReadKeys(source: DataFrame,
-        mergeKeys: Seq[(String, String)],
-        whenMatchedSet: Map[String, Column] = Map.empty,
-        whenMatchedDelete: Boolean = false,
-        insertUnmatched: Boolean = true,
+    def mergeSpecMergeOnRead(source: DataFrame,
+        mergeKeys: Seq[(String, String)], spec: MergeEngine.Spec,
         sourceKeysUnique: Boolean = false,
-        insertValues: Option[Map[String, Column]] = None,
         maxRetries: Int = 10): Manifest = {
-      require(mergeKeys.nonEmpty, "MERGE needs at least one ON equi-condition")
-      val head0 = latest()
-      val cols = schemaOf(head0.schemaJson).fieldNames.toSeq
-      val bad = whenMatchedSet.keySet.intersect(head0.partitionCols.toSet)
-      require(bad.isEmpty,
-        s"MERGE cannot assign partition columns: ${bad.mkString(", ")}")
-      val missingKeys = mergeKeys.map(_._2).filterNot(source.columns.contains)
-      require(missingKeys.isEmpty,
-        s"source must carry the merge key(s) ${missingKeys.mkString(", ")}")
-      if (insertUnmatched && insertValues.isEmpty) {
-        val missing = cols.filterNot(source.columns.contains)
-        require(missing.isEmpty,
-          s"MERGE with an insert arm needs source columns ${missing.mkString(", ")}")
-      }
-      def tc(c: String): Column = col("__t_" + c)
-      // with no matched arm the statement cannot touch matched target rows
-      // at all — only the inserts matter (and duplicate source keys are
-      // legal: matched ones simply don't insert)
-      val hasMatchedArm = whenMatchedDelete || whenMatchedSet.nonEmpty
-      val guardCardinality = !sourceKeysUnique && hasMatchedArm
-      val guarded =
-        if (!guardCardinality) source
-        else source.withColumn("__src_cnt", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(mergeKeys.map(k => col(k._2)): _*)))
-      val keyDesc = concat_ws(", ", mergeKeys.map { case (_, sk) =>
-        concat(lit(s"$sk="), coalesce(col(sk).cast("string"), lit("NULL")))
-      }: _*)
-
-      // a joined row is matched iff it carries target provenance
-      val matched = col("__file").isNotNull
-      def out(c: String): Column = {
-        val image = whenMatchedSet.getOrElse(c, tc(c))
-        val insert = insertValues.fold(col(c))(_.getOrElse(c, lit(null)))
-        if (!insertUnmatched) image
-        else if (!hasMatchedArm || whenMatchedDelete) insert
-        else when(matched, image).otherwise(insert)
-      }
-      commit("merge-mor", maxRetries) { head =>
-        if (!hasMatchedArm && !insertUnmatched) None // no arm can act
-        else {
-          val schema = schemaOf(head.schemaJson)
-          val tRen = applyDeletes(readFilesMeta(head), head).select(
-            schema.fieldNames.map(c => col(c).as("__t_" + c)) ++
-              Seq(col("__file"), col("__pos")): _*)
-          val joinCond = mergeKeys.map { case (tk, sk) => tc(tk) === col(sk) }
-            .reduce(_ && _)
-          val joined = guarded.join(tRen, joinCond,
-            if (insertUnmatched) "left_outer" else "inner")
-          val checked =
-            if (!guardCardinality) joined
-            else joined.filter(when(matched && col("__src_cnt") > 1,
-              raise_error(concat(
-                lit("MERGE cardinality violation: multiple source rows match target "),
-                keyDesc))).isNull)
-          // matched rows retire under a matched arm and re-append as images
-          // under an update arm; unmatched rows (left-outer only) insert
-          retireAndAppend(head, "merge-mor",
-            checked.select(Seq(col("__file"), col("__pos")) ++
-              schema.fieldNames.map(c => out(c).as(c)): _*),
-            retire = matched && lit(hasMatchedArm),
-            append = !matched || lit(hasMatchedArm && !whenMatchedDelete))
-        }
-      }
+      checkMergeAssignments(latest(), spec)
+      MergeEngine.unwrapCardinality(commit("merge-mor", maxRetries) { head =>
+        retireAndAppend(head, "merge-mor",
+          MergeEngine.lower(applyDeletes(readFilesMeta(head), head), source,
+            mergeKeys, schemaOf(head.schemaJson).fieldNames.toSeq, spec,
+            sourceKeysUnique, wholeTarget = false,
+            provenance = Seq("__file", "__pos")),
+          retire = MergeEngine.acted,
+          append = MergeEngine.alive &&
+            (MergeEngine.sourceOnly || MergeEngine.acted))
+      })
     }
 
     /** Full multi-arm MERGE (conditional matched arms, conditional insert,
       * WHEN NOT MATCHED BY SOURCE) — see [[MergeEngine]] for the statement
-      * semantics and joined-scope naming. Arms that touch unmatched target
+      * semantics and joined-scope naming. `mergeKeys` are the ON-clause
+      * equi-pairs (targetCol, sourceCol). Arms that touch unmatched target
       * rows force a whole-table rewrite (every file may hold one); all
       * other statements rewrite only files containing matched rows.
-      */
-    def mergeSpec(source: DataFrame, targetKey: String, sourceKey: String,
-        spec: MergeEngine.Spec,
-        sourceKeysUnique: Boolean,
-        maxRetries: Int): Manifest =
-      mergeSpec(source, Seq(targetKey -> sourceKey), spec, sourceKeysUnique,
-        maxRetries)
-
-    /** Composite-key multi-arm MERGE: `mergeKeys` are the ON-clause
-      * equi-pairs (targetCol, sourceCol).
       */
     def mergeSpec(source: DataFrame, mergeKeys: Seq[(String, String)],
         spec: MergeEngine.Spec,
@@ -2131,16 +2057,19 @@ object Snapshots {
       mergeSpecOn(Mainline, source, mergeKeys, spec, sourceKeysUnique,
         maxRetries)
 
+    /** Partition columns are not assignable (rows never move). */
+    private def checkMergeAssignments(head: Manifest,
+        spec: MergeEngine.Spec): Unit = {
+      val bad = spec.assignedColumns.intersect(head.partitionCols.toSet)
+      require(bad.isEmpty,
+        s"MERGE cannot assign partition columns: ${bad.mkString(", ")}")
+    }
+
     private[plans] def mergeSpecOn(line: Line, source: DataFrame,
         mergeKeys: Seq[(String, String)], spec: MergeEngine.Spec,
         sourceKeysUnique: Boolean, maxRetries: Int): Manifest = {
-      val setCols = (spec.matched ++ spec.notMatchedBySource)
-        .collect { case MergeEngine.Update(_, s) => s.keySet }.flatten.toSet
-      val bad = setCols.intersect(headOf(line).partitionCols.toSet)
-      require(bad.isEmpty,
-        s"MERGE cannot assign partition columns: ${bad.mkString(", ")}")
-
-      commit("merge", maxRetries, line = line) { head =>
+      checkMergeAssignments(headOf(line), spec)
+      MergeEngine.unwrapCardinality(commit("merge", maxRetries, line = line) { head =>
         val schema = schemaOf(head.schemaJson)
         def postOf(affectedDf: DataFrame): DataFrame =
           MergeEngine.postImage(affectedDf, source, mergeKeys,
@@ -2173,7 +2102,7 @@ object Snapshots {
           Some(head.copy(files = head.files.filterNot(affected) ++ staged,
             stats = (head.stats -- affected) ++ stagedStats))
         }
-      }
+      })
     }
 
     // ------------------------------------------------------------------

@@ -51,12 +51,7 @@ import org.apache.spark.sql.functions.{coalesce, col, lit, when}
   * target columns under a `__t_` prefix).
   */
 object SqlDml {
-
-  /** The target-side name a MERGE action expression uses for column `c` of
-    * the joined frame — the `__t_` convention shared with [[Dml.merge]] and
-    * [[Snapshots]] merge.
-    */
-  private def targetSide(c: String): String = "__t_" + c
+  import MergeEngine.targetSide
 
   /** Execute `plan` if it is a DML statement this module handles; None
     * otherwise (caller falls back to plain `spark.sql`).
@@ -1174,25 +1169,9 @@ object SqlDml {
         Snapshots.table(spark, r.root).mergeSpecOnBranch(b, source,
           mergeKeys, spec)
       case (r: NamedTables.SnapshotRef, None)
-          if r.writeMode == NamedTables.WriteMor && morShape(spec) =>
-        // merge-on-read table + single-unconditional-arm statement: retire
-        // matched positions via sidecar instead of rewriting files
-        val st = Snapshots.table(spark, r.root)
-        val insVals = spec.inserts.headOption.flatMap(_.values)
-        spec.matched.headOption match {
-          case Some(MergeEngine.Delete(_)) =>
-            st.mergeMergeOnReadKeys(source, mergeKeys,
-              whenMatchedDelete = true, insertUnmatched = spec.inserts.nonEmpty,
-              insertValues = insVals)
-          case Some(MergeEngine.Update(_, set)) =>
-            st.mergeMergeOnReadKeys(source, mergeKeys,
-              whenMatchedSet = set, insertUnmatched = spec.inserts.nonEmpty,
-              insertValues = insVals)
-          case None =>
-            st.mergeMergeOnReadKeys(source, mergeKeys,
-              insertUnmatched = spec.inserts.nonEmpty,
-              insertValues = insVals)
-        }
+          if r.writeMode == NamedTables.WriteMor =>
+        Snapshots.table(spark, r.root).mergeSpecMergeOnRead(source, mergeKeys,
+          spec)
       case (r: NamedTables.SnapshotRef, None) =>
         Snapshots.table(spark, r.root).mergeSpec(source, mergeKeys, spec)
       case (NamedTables.PathRef(path), _) =>
@@ -1200,15 +1179,4 @@ object SqlDml {
           sourceKeysUnique = false)
     }
   }
-
-  /** Statement shapes the merge-on-read planner covers: at most one
-    * unconditional matched arm, an unconditional insert (whole-row or
-    * explicit values), no NOT MATCHED BY SOURCE. Anything richer falls
-    * back to the COW multi-arm planner (correct on a MOR table, just
-    * file-rewriting).
-    */
-  private def morShape(spec: MergeEngine.Spec): Boolean =
-    spec.notMatchedBySource.isEmpty &&
-      spec.matched.size <= 1 && spec.matched.forall(_.condition.isEmpty) &&
-      spec.inserts.size <= 1 && spec.inserts.forall(_.condition.isEmpty)
 }

@@ -144,4 +144,81 @@ class MergeEquivalenceSpec extends SparkSpec {
       NamedTables.drop(name)
     }
   }
+
+  /** Multi-arm SQL MERGE semantics on the driver: the first matching arm
+    * wins in each group; target rows with a NULL key match nothing and are
+    * in scope for NOT MATCHED BY SOURCE; source rows with a NULL key take
+    * the insert arms; a source row no insert arm accepts is dropped.
+    */
+  private def multiArmModel(target: Seq[R], source: Seq[R], delBelow: Int,
+      updBelow: Int, nmbsBelow: Int, nmbsDelete: Boolean, insBelow: Int)
+      : Seq[(Any, Any, Any)] = {
+    val byKey = source.filter(_.id != null).map(r => (r.id: Long) -> r).toMap
+    val kept = target.flatMap { t =>
+      byKey.get(if (t.id == null) Long.MinValue else t.id) match {
+        case Some(s) if s.v < delBelow => None
+        case Some(s) if s.v < updBelow => Some((t.id, s.v, t.tag + "_u"))
+        case Some(_) => Some((t.id, t.v, t.tag))
+        case None if t.v < nmbsBelow =>
+          if (nmbsDelete) None else Some((t.id, t.v + 1000, t.tag))
+        case None => Some((t.id, t.v, t.tag))
+      }
+    }
+    val inserts = source.filter(s => s.id == null ||
+        !target.exists(t => t.id != null && t.id == s.id)).flatMap { s =>
+      if (s.v < insBelow) Some((s.id, s.v, "i1_" + s.tag))
+      else if (s.v % 3 != 0) Some((s.id, -s.v, "i2"))
+      else None
+    }
+    (kept ++ inserts).map { case (a, b, c) => (a: Any, b: Any, c: Any) }
+  }
+
+  for (seed <- 23 to 30) {
+    test(s"multi-arm SQL MERGE: COW == MOR == model, MOR commits merge-mor " +
+        s"(seed $seed)") {
+      val rng = new scala.util.Random(seed)
+      val target = randomRows(rng, (0L until 30L)
+        .filter(_ => rng.nextDouble() < 0.6), nNullKeys = 1 + rng.nextInt(2), "t")
+      val source = randomRows(rng, (0L until 40L)
+        .filter(_ => rng.nextDouble() < 0.5), nNullKeys = 1 + rng.nextInt(2), "s")
+      val delBelow = rng.nextInt(40)
+      val updBelow = delBelow + rng.nextInt(60)
+      val nmbsBelow = rng.nextInt(100)
+      val nmbsDelete = rng.nextBoolean()
+      val insBelow = rng.nextInt(100)
+      val expected = multiArmModel(target, source, delBelow, updBelow,
+        nmbsBelow, nmbsDelete, insBelow).groupBy(identity)
+        .view.mapValues(_.size).toMap
+
+      source.toDF("id", "v", "tag").createOrReplaceTempView("meq_src")
+      val nmbsArm = if (nmbsDelete) "DELETE" else "UPDATE SET v = t.v + 1000"
+      def run(mode: String): (Map[(Any, Any, Any), Int], String) = {
+        val root = scratch()
+        Snapshots.create(spark, root, target.toDF("id", "v", "tag"))
+        val name = s"meq_multi_$seed"
+        NamedTables.registerSnapshot(name, root, mode)
+        try {
+          graft.Engine.sql(spark, sfDir,
+            s"""MERGE INTO $name t USING meq_src s ON t.id = s.id
+               |WHEN MATCHED AND s.v < $delBelow THEN DELETE
+               |WHEN MATCHED AND s.v < $updBelow THEN
+               |  UPDATE SET v = s.v, tag = concat(t.tag, '_u')
+               |WHEN NOT MATCHED AND s.v < $insBelow THEN
+               |  INSERT (id, v, tag) VALUES (s.id, s.v, concat('i1_', s.tag))
+               |WHEN NOT MATCHED AND s.v % 3 <> 0 THEN
+               |  INSERT (id, v, tag) VALUES (s.id, -s.v, 'i2')
+               |WHEN NOT MATCHED BY SOURCE AND t.v < $nmbsBelow THEN $nmbsArm
+               |""".stripMargin)
+        } finally NamedTables.drop(name)
+        val t = Snapshots.table(spark, root)
+        (asSet(t.read().collect().toSeq), t.latest().action)
+      }
+      val (cowGot, cowAction) = run(NamedTables.WriteCow)
+      val (morGot, morAction) = run(NamedTables.WriteMor)
+      assert(cowAction === "merge")
+      assert(morAction === "merge-mor", "a MOR table's MERGE must not fall back to COW")
+      assert(cowGot === expected, s"COW diverges from the model (seed $seed)")
+      assert(morGot === expected, s"MOR diverges from the model (seed $seed)")
+    }
+  }
 }

@@ -103,6 +103,26 @@ class MorCommitCostSpec extends SparkSpec {
     assert(persisted() === before, "the commit left its match set cached")
   }
 
+  test("MOR MERGE with a NOT MATCHED BY SOURCE arm scans the target and " +
+      "the source once each") {
+    val (t, src) = fixture()
+    val before = persisted()
+    val spec = MergeEngine.Spec(
+      matched = Seq(MergeEngine.Update(None, Map("s" -> col("s")))),
+      inserts = Seq(MergeEngine.Insert(None)),
+      notMatchedBySource = Seq(MergeEngine.Delete(
+        Some(col(MergeEngine.targetSide("id")) < 10))))
+    val (m, read) = recordsRead(t.mergeSpecMergeOnRead(src, Seq("id" -> "id"),
+      spec))
+    assert(m.action === "merge-mor")
+    assert(read === 100L + 30L, "one scan of the target plus one of the source")
+    // 100 target rows - 10 retired by the NOT MATCHED BY SOURCE arm + 20 inserts
+    assert(t.read().count() === 110)
+    assert(t.read().filter(col("id") < 10).count() === 0)
+    assert(t.read().filter(col("s") === "src").count() === 30)
+    assert(persisted() === before, "the commit left its match set cached")
+  }
+
   test("MOR UPDATE and DELETE scan the table once") {
     val (t, _) = fixture()
     val before = persisted()

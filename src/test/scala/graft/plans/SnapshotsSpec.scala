@@ -259,12 +259,29 @@ class SnapshotsSpec extends SparkSpec {
     val root = freshRoot()
     val t = Snapshots.create(spark, root, nums(0, 50))
     val dup = Seq((5L, "a", 0), (5L, "b", 0)).toDF("id", "s", "k")
-    intercept[Exception] {
+    val e = intercept[IllegalStateException] {
       t.merge(dup, "id", "id", whenMatchedSet = Map("s" -> col("s")))
     }
+    assert(e.getMessage.contains(
+      "MERGE cardinality violation: multiple source rows match target id=5"),
+      e.getMessage)
     // failed statement must not have committed
     assert(t.latest().version === 0L)
     assert(t.read().count() === 50)
+  }
+
+  test("merge into a table with a column named present, COW and MOR") {
+    import spark.implicits._
+    val rows = Seq((1L, true), (2L, false)).toDF("id", "present")
+    val source = Seq((1L, false), (3L, true)).toDF("id", "present")
+    val cow = Snapshots.create(spark, freshRoot(), rows)
+    val mor = Snapshots.create(spark, freshRoot(), rows)
+    cow.merge(source, "id", "id", whenMatchedSet = Map("present" -> col("present")))
+    mor.mergeMergeOnRead(source, "id", "id",
+      whenMatchedSet = Map("present" -> col("present")))
+    for (t <- Seq(cow, mor))
+      assert(t.read().as[(Long, Boolean)].collect().sorted.toSeq ===
+        Seq((1L, false), (2L, false), (3L, true)))
   }
 
   test("merge cannot assign partition columns") {
